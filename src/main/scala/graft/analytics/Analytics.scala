@@ -18,10 +18,12 @@ object Analytics {
     * SQLConf, shared SparkContext/block manager — and matches the
     * reference's isolation (each postgres_reader.py session is its own
     * Postgres connection). Views are (re-)registered on EVERY call,
-    * not once per child: registration is catalog-only (no job), and a
-    * memoized registration would pin a mutated dir's old file listing.
-    * Same-dir concurrent registration is a same-name same-definition
-    * replace — benign, pinned by ConcurrencySpec. */
+    * not once per child: a memoized registration would pin a mutated
+    * dir's old file listing. Registration is not free — each
+    * `spark.read.parquet` runs one schema-inference job — so `runSql`
+    * registers only the tables its SQL names. Same-dir concurrent
+    * registration is a same-name same-definition replace — benign,
+    * pinned by ConcurrencySpec. */
   private val sqlSessions =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), SparkSession]()
   private def sessionFor(spark: SparkSession, dir: String): SparkSession = {
@@ -36,10 +38,16 @@ object Analytics {
     sqlSessions.computeIfAbsent((spark, dir), _ => spark.newSession())
   }
 
-  /** S15: arbitrary SQL entry point over the harness tables. */
+  /** S15: arbitrary SQL entry point over the harness tables. Only the
+    * tables whose name occurs as a word in the SQL text (any case) are
+    * registered: a conservative superset of the tables it reads — a
+    * word that is not a table reference costs one extra schema job,
+    * while a referenced table (bare, qualified, backticked, inside a
+    * CTE or subquery) always contains its name as a word. */
   def runSql(spark: SparkSession, dir: String, sql: String): DataFrame = {
     val ss = sessionFor(spark, dir)
-    Tables(ss, dir).registerViews()
+    val t = Tables(ss, dir)
+    t.registerViews(t.names.filter(n => s"(?i)\\b$n\\b".r.findFirstIn(sql).isDefined))
     ss.sql(sql)
   }
 

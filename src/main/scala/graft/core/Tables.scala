@@ -55,9 +55,10 @@ final case class Tables(spark: SparkSession, dir: String) {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Register every table as a temp view so `spark.sql` works against
-    * the same names the DuckDB oracle uses (S15 ad-hoc SQL surface). */
-  def registerViews(): Unit = names.foreach { n =>
+  /** Register tables (by default every one) as temp views so
+    * `spark.sql` works against the same names the DuckDB oracle uses
+    * (S15 ad-hoc SQL surface). Each costs one schema-inference job. */
+  def registerViews(only: Seq[String] = names): Unit = only.foreach { n =>
     table(n).createOrReplaceTempView(n)
   }
 }

@@ -3,7 +3,6 @@ package graft.ml
 import org.apache.spark.ml.recommendation.{ALS, ALSModel}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import scala.collection.concurrent.TrieMap
 import graft.core.Tables
 
@@ -104,50 +103,62 @@ object Recommender {
     .setUserCol("user").setItemCol("item").setRatingCol("rating")
     .setColdStartStrategy("drop")
 
-  // native codegen'd dot product (GraftExtensions); same left-fold
-  // accumulation order as the aggregate-HOF formulation, so swapping
-  // it in is bit-invisible to results.
-  private def dotExpr(a: String, b: String): String = s"vec_dot($a, $b)"
+  /** L2-normalize a factor (zero vectors pass through unscaled —
+    * mf_knn_recommender.py:489-499). The squared norm is a left fold
+    * from 0.0 in index order, the accumulation order of `vec_dot`, so
+    * scores match any SQL formulation over the same factors bit for bit. */
+  private def unit(f: Array[Float]): Array[Double] = {
+    val d = f.map(_.toDouble)
+    var ss = 0.0; var i = 0
+    while (i < d.length) { ss += d(i) * d(i); i += 1 }
+    val n = math.sqrt(ss)
+    if (n > 0) d.map(_ / n) else d
+  }
 
-  /** L2-normalize a factor array (zero vectors pass through unscaled —
-    * mf_knn_recommender.py:489-499). Output: array<double> `nf`. */
-  private def normalize(factors: DataFrame): DataFrame =
-    factors
-      .withColumn("_d", expr("transform(features, x -> CAST(x AS DOUBLE))"))
-      .withColumn("_n", sqrt(expr(dotExpr("_d", "_d"))))
-      .withColumn("nf", when(col("_n") > 0,
-        expr("transform(_d, x -> x / _n)")).otherwise(col("_d")))
-      .select(col("id"), col("nf"))
-
-  /** M3/M4: cosine top-k for a set of users. Two-phase partial top-k:
-    * the (small) query-user factor block is broadcast, each item
-    * partition keeps a bounded per-user heap (the ranking analog of a
-    * map-side combine), and only users×k×partitions survivor rows meet
-    * the final per-user selection — the full users×items score matrix
-    * is never shuffled or sorted. */
   /** Query-user block ceiling for cosineTopK: above this, the
     * broadcast block stops being "small" and the MLlib blocked path
     * (`recommendForAllUsers`) is the right tool. Guarded explicitly so
     * the serve-path collect can never silently become a driver OOM. */
   val MaxQueryUsers = 100000
 
-  def cosineTopK(model: ALSModel, users: DataFrame, k: Int): DataFrame = {
+  // ranking order of the final selection: score desc under Spark SQL's
+  // double comparison (-0.0 = 0.0, NaN largest), then item asc
+  private def better(a: (Int, Double), b: (Int, Double)): Boolean = {
+    val c = if (a._2 == b._2) 0 else java.lang.Double.compare(a._2, b._2)
+    c > 0 || (c == 0 && a._1 < b._1)
+  }
+
+  /** The k best items of every distinct known query user, best first,
+    * users in ascending id order. Two jobs: one filtered collect of the
+    * query users' normalized factors (the query ids themselves are
+    * collected first, which is free for a local frame), then one scan
+    * of the item factors in which each partition keeps a bounded
+    * per-user heap (the ranking analog of a map-side combine) and the
+    * partition heaps merge by `treeReduce`. Only users×k×partitions
+    * candidates ever leave the executors; the full users×items score
+    * matrix is never shuffled or sorted. */
+  private def topKPools(model: ALSModel, users: DataFrame, k: Int)
+      : Array[(Int, Array[(Int, Double)])] = {
     val spark = model.userFactors.sparkSession
     import spark.implicits._
-    val uvecs: Array[(Int, Array[Double])] = normalize(model.userFactors)
-      .join(users.select(col("user").cast("int").as("id")), "id")
-      .as[(Int, Seq[Double])].collect().map { case (u, v) => (u, v.toArray) }
-    require(uvecs.length <= MaxQueryUsers,
-      s"cosineTopK serves bounded query sets (got ${uvecs.length} users, " +
+    // distinct ids: a repeated query user is one ranking, not two
+    val ids = users.select(col("user").cast("int")).collect()
+      .collect { case r if !r.isNullAt(0) => r.getInt(0) }.distinct
+    require(ids.length <= MaxQueryUsers,
+      s"cosineTopK serves bounded query sets (got ${ids.length} users, " +
         s"max $MaxQueryUsers); use ALSModel.recommendForAllUsers for full-catalog batch")
+    if (ids.isEmpty || k <= 0) return Array.empty
+    val uvecs: Array[(Int, Array[Double])] = model.userFactors
+      .where(col("id").isin(ids: _*))
+      .as[(Int, Array[Float])].collect().map { case (u, f) => (u, unit(f)) }
+      .sortBy(_._1)
+    if (uvecs.isEmpty) return Array.empty
     val bc = spark.sparkContext.broadcast(uvecs)
-    val partials = normalize(model.itemFactors)
-      .select(col("id").as("item"), col("nf"))
-      .as[(Int, Seq[Double])]
+    val top = model.itemFactors.as[(Int, Array[Float])].rdd
       .mapPartitions { it =>
         val us = bc.value
         val nU = us.length
-        val rank = if (nU == 0) 0 else us(0)._2.length
+        val rank = us(0)._2.length
         // the user block as ONE flat primitive matrix: the inner loop
         // below runs O(queryUsers × items) times per partition — at
         // the 100× rehearsal that was 3×10¹⁰ iterations, and indexing
@@ -162,12 +173,12 @@ object Recommender {
         while (i < nU) {
           System.arraycopy(us(i)._2, 0, uflat, i * rank, rank); i += 1
         }
-        // per-user bounded heap ordered worst-first: (score asc, item desc)
-        val ord = Ordering.by[(Int, Double), (Double, Int)] { case (item, s) => (-s, item) }
+        // per-user bounded heap whose head is the worst kept candidate
+        val worstFirst = Ordering.fromLessThan[(Int, Double)](better)
         val heaps = Array.fill(nU)(
-          new scala.collection.mutable.PriorityQueue[(Int, Double)]()(ord))
-        it.foreach { case (item, nfSeq) =>
-          val nf = nfSeq.toArray
+          new scala.collection.mutable.PriorityQueue[(Int, Double)]()(worstFirst))
+        it.foreach { case (item, f) =>
+          val nf = unit(f)
           var ui = 0
           var off = 0
           while (ui < nU) {
@@ -185,23 +196,33 @@ object Recommender {
             off += rank
           }
         }
-        heaps.iterator.zipWithIndex.flatMap { case (h, ui) =>
-          h.iterator.map { case (item, s) => (us(ui)._1, item, s) }
-        }
+        Iterator(heaps.map(_.toArray.sortWith(better)))
       }
-    // final exact selection over users × k × partitions survivor rows
-    val w = Window.partitionBy(col("user")).orderBy(col("score").desc, col("item"))
-    partials.toDF("user", "item", "score")
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .treeReduce((a, b) => a.zip(b).map { case (x, y) => (x ++ y).sortWith(better).take(k) })
+    bc.destroy()
+    uvecs.map(_._1).zip(top)
+  }
+
+  /** M3/M4: cosine top-k for a set of users, as a local
+    * (user, item, score, rank) frame — the ranking is already complete
+    * on the driver when this returns (see `topKPools` for the two jobs
+    * it runs). Unknown and null query users get no rows; a repeated
+    * user is ranked once. Driver memory: the query block's factors
+    * plus users × k result rows, under the `MaxQueryUsers` guard. */
+  def cosineTopK(model: ALSModel, users: DataFrame, k: Int): DataFrame = {
+    val spark = model.userFactors.sparkSession
+    import spark.implicits._
+    topKPools(model, users, k).toSeq.flatMap { case (u, top) =>
+      top.toSeq.zipWithIndex.map { case ((item, s), i) => (u, item, s, i + 1) }
+    }.toDF("user", "item", "score", "rank")
   }
 
   /** M6: Maximal-Marginal-Relevance diversification, exactly the
     * reference's greedy loop (mf_knn_recommender.py:477-547): pool =
     * top 3k by cosine relevance, first pick = argmax relevance, then
     * argmax of λ·rel − (1−λ)·maxSimToSelected; ties break on first
-    * occurrence in relevance order (np.argmax semantics). Runs
-    * distributed: one group per user via mapGroups. */
+    * occurrence in relevance order (np.argmax semantics). Pure
+    * driver-side function of one user's pool. */
   def mmrSelect(cands: Seq[(Int, Double, Array[Double])], k: Int, lambda: Double)
       : Seq[(Int, Double)] = {
     if (cands.isEmpty || k <= 0) return Nil
@@ -229,27 +250,28 @@ object Recommender {
     selected.map(i => (cands(i)._1, rel(i))).toSeq
   }
 
-  /** MMR over a user set: top-3k cosine candidates per user, joined to
-    * their normalized factors, diversified per group. */
+  /** MMR over a user set: the merged top-3k cosine pool per user (one
+    * `topKPools` pass), the normalized vectors of the pools' distinct
+    * items in one filtered collect, then `mmrSelect` per user on the
+    * driver — three jobs for a local user frame. Driver memory: users
+    * × 3k pool entries plus one vector per distinct pool item, under
+    * the `MaxQueryUsers` guard. */
   def diversify(model: ALSModel, users: DataFrame, k: Int = 5,
                 lambda: Double = 0.5): DataFrame = {
     val spark = users.sparkSession
     import spark.implicits._
-    val pool = cosineTopK(model, users, k * 3)
-    val itf = normalize(model.itemFactors)
-      .select(col("id").as("item"), col("nf"))
-    val withVecs = pool.join(itf, "item")
-      .select(col("user"), col("item"), col("score"), col("nf"))
-      .as[(Int, Int, Double, Seq[Double])]
-    withVecs.groupByKey(_._1)
-      .flatMapGroups { (user, it) =>
-        val cands = it.toSeq.sortBy(c => (-c._3, c._2))
-          .map(c => (c._2, c._3, c._4.toArray))
-        mmrSelect(cands, k, lambda).zipWithIndex.map {
-          case ((item, rel), i) => (user, item, rel, i + 1)
-        }
+    val pools = topKPools(model, users, k * 3)
+    val poolItems = pools.flatMap(_._2.map(_._1)).distinct
+    val vecs: Map[Int, Array[Double]] =
+      if (poolItems.isEmpty) Map.empty
+      else model.itemFactors.where(col("id").isin(poolItems: _*))
+        .as[(Int, Array[Float])].collect().map { case (i, f) => i -> unit(f) }.toMap
+    pools.toSeq.flatMap { case (user, pool) =>
+      val cands = pool.toSeq.map { case (item, s) => (item, s, vecs(item)) }
+      mmrSelect(cands, k, lambda).zipWithIndex.map {
+        case ((item, rel), i) => (user, item, rel, i + 1)
       }
-      .toDF("user", "item", "score", "rank")
+    }.toDF("user", "item", "score", "rank")
   }
 
   /** M7: ranking evaluation with the reference's exact (nonstandard)

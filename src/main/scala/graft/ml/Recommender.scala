@@ -149,7 +149,7 @@ object Recommender {
         s"max $MaxQueryUsers); use ALSModel.recommendForAllUsers for full-catalog batch")
     if (ids.isEmpty || k <= 0) return Array.empty
     val uvecs: Array[(Int, Array[Double])] = model.userFactors
-      .where(col("id").isin(ids: _*))
+      .where(col("id").isin(ids.toIndexedSeq: _*))
       .as[(Int, Array[Float])].collect().map { case (u, f) => (u, unit(f)) }
       .sortBy(_._1)
     if (uvecs.isEmpty) return Array.empty
@@ -264,7 +264,7 @@ object Recommender {
     val poolItems = pools.flatMap(_._2.map(_._1)).distinct
     val vecs: Map[Int, Array[Double]] =
       if (poolItems.isEmpty) Map.empty
-      else model.itemFactors.where(col("id").isin(poolItems: _*))
+      else model.itemFactors.where(col("id").isin(poolItems.toIndexedSeq: _*))
         .as[(Int, Array[Float])].collect().map { case (i, f) => i -> unit(f) }.toMap
     pools.toSeq.flatMap { case (user, pool) =>
       val cands = pool.toSeq.map { case (item, s) => (item, s, vecs(item)) }

@@ -106,7 +106,7 @@ object Reco {
     // M4 cold-start contract: the reference WARNS and returns a
     // message for a user absent from training
     // (mf_knn_recommender.py:234-236, 276-290) — it never silently
-    // drops them. cosineTopK inner-joins probe users to the trained
+    // drops them. cosineTopK ranks only probe users with trained
     // factors, so unknown users yield zero rec rows; this entry makes
     // that the DECLARED serving answer: every probe user comes back
     // with (known, n_recs), recs empty exactly for the cold ones. The
@@ -172,8 +172,8 @@ object Reco {
     }),
     // M6 λ-sweep serving contract (use_model.py:94-98: the reference
     // demos MMR at λ∈{0.0, 0.5, 1.0} for one user). One deterministic
-    // probe user (the min sample user — a single-row agg frame, no
-    // collect), three diversify plans unioned. Per-λ contract: K
+    // probe user (the min sample user — a single-row agg frame),
+    // three diversify results unioned. Per-λ contract: K
     // dense-ranked distinct finite-scored picks anchored at the top-1
     // relevance item; for λ=1 additionally the WHOLE ranked list
     // equals the cosine top-K relevance list (MMR degenerates to pure

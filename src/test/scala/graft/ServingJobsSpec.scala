@@ -1,6 +1,6 @@
 package graft
 
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.analytics.Analytics
@@ -23,13 +23,14 @@ class ServingJobsSpec extends SparkSpec {
     val sc = spark.sparkContext
     val group = s"jobs-${java.util.UUID.randomUUID()}"
     val sentinel = s"$group-sentinel"
-    val counts = new ConcurrentHashMap[String, AtomicInteger]()
+    val jobs = new AtomicInteger()
     val seen = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
-          counts.computeIfAbsent(g, _ => new AtomicInteger()).incrementAndGet()
-          if (g == sentinel) seen.countDown()
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`sentinel`) => seen.countDown()
+          case _ =>
         }
     }
     sc.addSparkListener(listener)
@@ -39,7 +40,7 @@ class ServingJobsSpec extends SparkSpec {
       sc.setJobGroup(sentinel, "sentinel")
       sc.parallelize(Seq(1), 1).count()
       assert(seen.await(30, TimeUnit.SECONDS), "listener bus did not deliver the sentinel")
-      Option(counts.get(group)).map(_.get).getOrElse(0)
+      jobs.get
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)

@@ -4,12 +4,13 @@ import org.apache.spark.sql.SparkSession
 
 /** SparkSession factory for the engine.
   *
-  * Local-mode defaults are tuned for the test harness (local[32],
-  * 32 shuffle partitions); on a real cluster the same builder is used
-  * with `master` unset (taken from spark-submit) and shuffle
-  * partitions sized to ~2-3x total executor cores. AQE is enabled so
-  * the physical plan re-sizes partitions / rewrites skewed joins at
-  * runtime — the knob that matters most at 100 TB.
+  * In local mode the session runs one task thread per CPU
+  * (`SPARK_GRAFT_CPUS`, default 32; the specs use local[4]) and as many
+  * shuffle partitions. On a real cluster the same builder is used with
+  * `master` unset (taken from spark-submit) and shuffle partitions sized
+  * to ~2-3x total executor cores. AQE is enabled so the physical plan
+  * re-sizes partitions / rewrites skewed joins at runtime — the knob
+  * that matters most at 100 TB.
   */
 object GraftSession {
   def builder(appName: String = "graft", cpus: String = defaultCpus): SparkSession.Builder = {
@@ -35,6 +36,14 @@ object GraftSession {
       // and convert in Tables (exact — data is µs-granular).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // Spark's generated-class cache (static, one per JVM) must hold the
+      // working set, or a plan shape compiled a few requests ago is
+      // evicted and Janino compiles it again. Measured working sets: about
+      // 550 classes per nightly ETL + model + corpus cycle, about 250 for
+      // the serving set-up. The default 100 evicted nearly all of them
+      // (a warm nightly cycle recompiled 543 of 546); 2048 keeps both
+      // with room. Each entry is one loaded class, a few KB of metaspace.
+      .config("spark.sql.codegen.cache.maxEntries", "2048")
     // GRAFT_SESSION_CONF="k=v[,k=v...]": extra session confs for scale
     // rehearsals (e.g. graft.reco.niBroadcastLimit past the 4M default
     // at an sf30 corpus's 6M-item catalog) — a no-op unless set, so

@@ -128,10 +128,26 @@ object Recommender {
     c > 0 || (c == 0 && a._1 < b._1)
   }
 
+  /** The (id, factor) rows of `factors` (`userFactors` or `itemFactors`)
+    * whose id is in `ids`, in one job. The ids reach the tasks as data —
+    * a sorted array in the filter's closure, searched by binary search.
+    * An `isin` filter would write them into the generated code as
+    * `In`/`InSet` literals, so each request would compile new classes
+    * that no cache can reuse; here the generated code depends only on
+    * the plan shape and compiles once per JVM. */
+  private def factorsOf(factors: DataFrame, ids: Array[Int]): Array[(Int, Array[Float])] = {
+    val spark = factors.sparkSession
+    import spark.implicits._
+    val sorted = ids.sorted
+    factors.as[(Int, Array[Float])].rdd
+      .filter { case (id, _) => java.util.Arrays.binarySearch(sorted, id) >= 0 }
+      .collect()
+  }
+
   /** The k best items of every distinct known query user, best first,
-    * users in ascending id order. Two jobs: one filtered collect of the
-    * query users' normalized factors (the query ids themselves are
-    * collected first, which is free for a local frame), then one scan
+    * users in ascending id order. Two jobs: one `factorsOf` lookup of
+    * the query users' factors (the query ids themselves are collected
+    * first, which is free for a local frame), then one scan
     * of the item factors in which each partition keeps a bounded
     * per-user heap (the ranking analog of a map-side combine) and the
     * partition heaps merge by `treeReduce`. Only users×k×partitions
@@ -148,10 +164,8 @@ object Recommender {
       s"cosineTopK serves bounded query sets (got ${ids.length} users, " +
         s"max $MaxQueryUsers); use ALSModel.recommendForAllUsers for full-catalog batch")
     if (ids.isEmpty || k <= 0) return Array.empty
-    val uvecs: Array[(Int, Array[Double])] = model.userFactors
-      .where(col("id").isin(ids.toIndexedSeq: _*))
-      .as[(Int, Array[Float])].collect().map { case (u, f) => (u, unit(f)) }
-      .sortBy(_._1)
+    val uvecs: Array[(Int, Array[Double])] = factorsOf(model.userFactors, ids)
+      .map { case (u, f) => (u, unit(f)) }.sortBy(_._1)
     if (uvecs.isEmpty) return Array.empty
     val bc = spark.sparkContext.broadcast(uvecs)
     val top = model.itemFactors.as[(Int, Array[Float])].rdd
@@ -252,8 +266,9 @@ object Recommender {
 
   /** MMR over a user set: the merged top-3k cosine pool per user (one
     * `topKPools` pass), the normalized vectors of the pools' distinct
-    * items in one filtered collect, then `mmrSelect` per user on the
-    * driver — three jobs for a local user frame. Driver memory: users
+    * items in one `factorsOf` lookup (ids as data, so no per-request
+    * code), then `mmrSelect` per user on the driver — three jobs for a
+    * local user frame. Driver memory: users
     * × 3k pool entries plus one vector per distinct pool item, under
     * the `MaxQueryUsers` guard. */
   def diversify(model: ALSModel, users: DataFrame, k: Int = 5,
@@ -264,8 +279,7 @@ object Recommender {
     val poolItems = pools.flatMap(_._2.map(_._1)).distinct
     val vecs: Map[Int, Array[Double]] =
       if (poolItems.isEmpty) Map.empty
-      else model.itemFactors.where(col("id").isin(poolItems.toIndexedSeq: _*))
-        .as[(Int, Array[Float])].collect().map { case (i, f) => i -> unit(f) }.toMap
+      else factorsOf(model.itemFactors, poolItems).map { case (i, f) => i -> unit(f) }.toMap
     pools.toSeq.flatMap { case (user, pool) =>
       val cands = pool.toSeq.map { case (item, s) => (item, s, vecs(item)) }
       mmrSelect(cands, k, lambda).zipWithIndex.map {

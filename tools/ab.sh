@@ -15,10 +15,13 @@
 # number of pairs the working tree won (ties count for neither side). A
 # metric is a gain when the working tree wins at least nine tenths of the
 # pairs and the medians differ by more than the parent's interquartile
-# range. Raw result lines go to <scratch-dir>/results.jsonl.
+# range. Below the verdicts it prints each side's median of the compile
+# counters in the per-seed sidecars (.bench_build/sidecars/<workload>-
+# trace0-seed<N>.json): generated classes compiled and JIT ms in the timed
+# region. Raw result lines go to <scratch-dir>/results.jsonl.
 set -euo pipefail
 
-[ $# -ge 2 ] || { sed -n '2,18p' "$0"; exit 2; }
+[ $# -ge 2 ] || { sed -n '2,21p' "$0"; exit 2; }
 workload=$1 pairs=$2 ref=${3:-HEAD~1} seed0=${4:-1}
 scratch=${5:-${TMPDIR:-/tmp}/graft-ab}
 repo=$(pwd)
@@ -56,10 +59,10 @@ for ((i = 0; i < pairs; i++)); do
   fi
 done
 
-python3 - "$results" "$repo/BENCHMARK.json" "$workload" "$ref" <<'EOF'
-import json, statistics, sys
+python3 - "$results" "$repo/BENCHMARK.json" "$workload" "$ref" "$parent" "$repo" <<'EOF'
+import json, os, statistics, sys
 
-results, bench, workload, ref = sys.argv[1:]
+results, bench, workload, ref, parent_dir, change_dir = sys.argv[1:]
 spec = json.load(open(bench))
 runs = {"parent": {}, "change": {}}
 for line in open(results):
@@ -94,4 +97,17 @@ for m in spec["end_to_end"]:
     fmt = lambda a, b, c: f"{a:.4g}/{b:.4g}/{c:.4g}"
     print(f"{name:<18}{fmt(p1, pm, p3):>30}{fmt(c1, cm, c3):>30}{wins:>5}/{len(seeds):<2}  "
           f"{verdict} ({(cm - pm) / pm:+.1%} median)" if pm else f"{name:<18} parent median 0")
+
+def sidecar(side_dir, seed):
+    path = os.path.join(side_dir, ".bench_build", "sidecars", f"{workload}-trace0-seed{seed}.json")
+    return json.load(open(path)) if os.path.exists(path) else None
+
+print("sidecar medians (timed region)")
+for key in ("timed_codegen_classes", "timed_jit_ms"):
+    cols = []
+    for side, side_dir in (("parent", parent_dir), ("change", change_dir)):
+        cars = [sidecar(side_dir, s) for s in seeds if runs[side][s]]
+        xs = [c[key] for c in cars if c]
+        cols.append(f"{side} {statistics.median(xs):.6g} (n={len(xs)})" if xs else f"{side} -")
+    print(f"{key:<24}{cols[0]:>24}{cols[1]:>24}")
 EOF

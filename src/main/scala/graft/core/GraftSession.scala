@@ -128,6 +128,18 @@ object GraftSession {
     }
   }
 
+  /** Row count of the table file `<dir>/<table>.parquet`, one memo for
+    * every gate and sizing probe that reads it, so each file is counted
+    * once per JVM + file listing. A failed probe memoizes nothing and
+    * returns the caller's fail-closed `onError` for this call
+    * (Long.MaxValue for "too big to broadcast", -1 for "unknown, use
+    * floor sizing"). */
+  def rowCount(t: Tables, table: String, onError: Long): Long = {
+    val n = rowCounts(t.spark, s"${t.dir}/$table.parquet")(t.table(table).count())
+    if (n < 0) onError else n
+  }
+  private val rowCounts = new CountMemo(onError = -1L)
+
   /** Local session used by mains and tests. */
   def local(appName: String = "graft"): SparkSession = {
     val cpus = defaultCpus

@@ -3,8 +3,9 @@ package graft.core
 import org.apache.spark.sql.DataFrame
 
 /** Driver-metadata answer to "would this frame's scan under-parallelize
-  * a CPU-heavy per-row projection?" — the shared gate behind
-  * Dedup.spread / Similarity.spread.
+  * a CPU-heavy per-row projection?" — the gate behind `spread`, which
+  * the text-dedup, corpus and vector operators run before their
+  * signature, normalize and cosine projections.
   *
   * Primary signal: the optimizer's size estimate (never an execution —
   * `.rdd.getNumPartitions` under AQE materializes every upstream query
@@ -52,4 +53,18 @@ object PlanStats {
         s"-> ${if (decision) "repartition" else "keep"}")
     decision
   }
+
+  /** Spread a small-file frame across the cluster before a CPU-heavy
+    * per-row projection: a compact parquet source (one ~MB file → one
+    * input split) would otherwise run the whole projection on a single
+    * core. Below the `needsSpread` threshold the repartition is a
+    * KB-to-MB exchange hashed on `keyCol`, its partition count pinned
+    * because AQE would otherwise re-coalesce it, blind to the compute
+    * downstream. Above it the source's own splits already parallelize
+    * and the frame passes through with no exchange. */
+  def spread(df: DataFrame, keyCol: String): DataFrame =
+    if (needsSpread(df))
+      df.repartition(df.sparkSession.sparkContext.defaultParallelism,
+        org.apache.spark.sql.functions.col(keyCol))
+    else df
 }

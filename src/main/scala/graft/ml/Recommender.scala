@@ -80,17 +80,15 @@ object Recommender {
     * rehearsal) at 16 tasks on 32 cores — ALS trained 35 min there.
     * ~1.5M fact rows per block is the measured crossover grain; the
     * upper clamp is the core count here, executor count on a real
-    * cluster. A failed probe sizes to the floor (small fits tolerate
-    * few blocks; the env override covers operational emergencies). */
-  private val liCounts = new graft.core.GraftSession.CountMemo(onError = -1L)
+    * cluster. A failed probe (-1) sizes to the floor: small fits
+    * tolerate few blocks. */
   private def blocksFor(spark: SparkSession, dir: String): Int = {
-    val n = liCounts(spark, s"$dir/lineitem.parquet")(
-      Tables(spark, dir).lineitem.count())
+    val n = graft.core.GraftSession.rowCount(Tables(spark, dir), "lineitem", -1L)
     math.min(32L, math.max(4L, n / 1500000L)).toInt
   }
 
   /** ALS configured for the harness scale: block count from
-    * `blocksFor` (data-sized, env-overridable) and 5 iterations
+    * `blocksFor` (data-sized) and 5 iterations
     * (implicit ALS converges in a handful of sweeps; the reference's
     * 200-500 SGD epochs are a solver artifact). */
   private def als(blocks: Int) = new ALS()
@@ -99,7 +97,7 @@ object Recommender {
     .setRegParam(0.01)
     .setMaxIter(5)
     .setSeed(42)
-    .setNumBlocks(sys.env.get("GRAFT_ALS_BLOCKS").map(_.toInt).getOrElse(blocks))
+    .setNumBlocks(blocks)
     .setUserCol("user").setItemCol("item").setRatingCol("rating")
     .setColdStartStrategy("drop")
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.PlanStats
 import graft.functions.TextFunctions.normText
 
 /** Document deduplication operators for training-data pipelines:
@@ -23,35 +24,6 @@ import graft.functions.TextFunctions.normText
   */
 object Dedup {
 
-  /** Spread a small-file corpus across the cluster before a
-    * CPU-heavy projection: a compact parquet source (one ~MB file →
-    * one input split) would otherwise run the whole signature build
-    * on a single core. At warehouse scale the source's own splits
-    * already provide parallelism and the exchange is one narrow
-    * hash pass; locally it is the difference between 1 and 32 cores.
-    *
-    * The small/large decision reads the optimizer's SIZE ESTIMATE —
-    * driver-side metadata, never an execution. The previous probe
-    * (`docs.rdd.getNumPartitions`) looked exact but under AQE `.rdd`
-    * materializes every upstream query stage just to report a
-    * partition count, so each spread() of a post-join frame silently
-    * re-executed its whole subtree once (three serialized ~2.3 s
-    * single-task jobs per llm_corpus_build at sf0.1 — and a full
-    * extra pipeline pass at any scale). Below the threshold
-    * (defaultParallelism input splits' worth of bytes) the repartition
-    * is a KB-to-MB exchange that buys full-cluster parallelism for
-    * the signature build; above it the source's own splits already
-    * parallelize and big corpora skip the exchange exactly as before. */
-  private def spread(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
-    // shared sentinel-guarded gate (PlanStats.needsSpread): estimates at
-    // the defaultSizeInBytes sentinel mean "no stats exist" (LogicalRDD
-    // leaves), not "big" — those fall back to the leaves' concrete RDD
-    // partition counts instead of silently skipping the repartition.
-    if (graft.core.PlanStats.needsSpread(docs))
-      docs.repartition(docs.sparkSession.sparkContext.defaultParallelism,
-        col(idCol))
-    else docs
-
   /** Word n-gram shingle set (distinct) of the canonical text.
     * `normalize = false` declares textCol ALREADY canonical (the
     * caller ran normText once and cached it) — the regex chain is the
@@ -61,7 +33,7 @@ object Dedup {
     * idempotent. */
   def withShingles(docs: DataFrame, textCol: String = "text", n: Int = 3,
                    normalize: Boolean = true): DataFrame =
-    spread(docs)
+    PlanStats.spread(docs, "doc_id")
       .withColumn("_words", split(
         if (normalize) normText(col(textCol)) else col(textCol), " "))
       .withColumn("shingles", array_distinct(transform(
@@ -171,7 +143,7 @@ object Dedup {
     val digitCols = (1 to 16).map { g =>
       expr(s"instr('$hexChars', substr(m, $g, 1)) - 1").as(s"d_$g")
     }
-    val words = spread(docs, idCol).select(
+    val words = PlanStats.spread(docs, idCol).select(
       col(idCol).as("doc_id"),
       explode(split(normText(col(textCol)), " ")).as("w"))
       .withColumn("m", md5(col("w")))
@@ -439,7 +411,7 @@ object Dedup {
           // two, the division is lossless in double
           floor(length(t) / lit(64)).cast("long").as("lb"),
           sigOf(gs).as("sig"))), lit(1))), lit(1))
-    val grams = spread(docs)
+    val grams = PlanStats.spread(docs, "doc_id")
       .select(col("doc_id"), packed.as("s"))
       .persist()
       .select(col("doc_id"), col("s.grams").as("grams"),

@@ -71,19 +71,15 @@ object Flagship {
     // take it with normalize = false (identical semantics — normText
     // is idempotent). At warehouse scale this column is exactly what
     // you'd store alongside the raw text.
-    // spread the corpus BEFORE the normalize+persist (the Dedup.spread
-    // gate, shared via PlanStats): a compact parquet source caches at
-    // its few input splits, and every one-time heavy pass the cache
-    // build pays (the normText regex chain, the gate's bigram agg)
-    // inherits that width — measured at sf10: the cache-build stages
+    // spread the corpus BEFORE the normalize+persist (PlanStats.spread):
+    // a compact parquet source caches at its few input splits, and
+    // every one-time heavy pass the cache build pays (the normText
+    // regex chain, the gate's bigram agg) inherits that width — measured at sf10: the cache-build stages
     // ran 14-wide (the source's split count) at ~50-63 task-s each.
     // Small corpora pay one narrow exchange for full-width builds; at
     // warehouse scale the estimate exceeds the threshold and the
     // source's own splits already parallelize (no exchange — §6).
-    val raw = Tables(s, dir).documents
-    val docs = (if (graft.core.PlanStats.needsSpread(raw))
-        raw.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-      else raw)
+    val docs = graft.core.PlanStats.spread(Tables(s, dir).documents, "doc_id")
       .withColumn("nrm", normText(col("text"))).persist()
 
     // stage 1 — quality gate, same thresholds as tx_filter_pipeline

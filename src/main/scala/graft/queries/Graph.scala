@@ -1,18 +1,21 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{GraftSession, Tables}
 
 /** Graph signals over the order interaction graph — the warehouse
   * analog of the link-analysis quality scores (PageRank-family) that
   * large-scale web-corpus pipelines attach to documents before
   * filtering/mixing.
   *
-  * The graph is bipartite: customer ↔ supplier, one undirected edge
-  * per distinct (o_custkey, l_suppkey) trading relationship from
+  * The trading graph is bipartite: customer ↔ supplier, one undirected
+  * edge per distinct (o_custkey, l_suppkey) trading relationship from
   * orders ⋈ lineitem (both directions materialized, so every node has
-  * out-degree ≥ 1 and the dangling-mass correction vanishes).
+  * out-degree ≥ 1 and PageRank's dangling-mass correction vanishes).
+  * PageRank, label propagation and reachability all run on it through
+  * one round loop (`iterate`): one edge build, one layout choice, one
+  * lineage cut per round, one decode.
   *
   * Determinism across engines: floating-point PageRank sums drift
   * under reordering, so DuckDB could never hash-match a Spark run.
@@ -23,16 +26,12 @@ import graft.core.Tables
   * order — the same trick the decimal-exact streaming sums play.
   *
   * Scale shape: the classic Pregel/GraphX iteration expressed as
-  * joins — per iteration, one shuffle join (edges ⋈ ranks on src) and
-  * one keyed aggregation (contributions by dst). Edges and the node
-  * table are persisted once and reused across all iterations, so each
-  * iteration touches O(E) rows; the rank frame is O(N). On a cluster,
-  * pre-partitioning edges and ranks by the node key makes every
-  * iteration's join co-located — the exact layout GraphX's
-  * EdgePartition2D maintains. Iteration count is fixed (5): bounded
-  * depth keeps the lineage and the oracle (one CTE per iteration)
-  * finite; production runs to a convergence threshold with
-  * checkpointing every ~10 rounds.
+  * joins — per round, one join of the O(E) edges against the O(N)
+  * vertex frame and one keyed aggregation by destination. The edges
+  * are persisted once, pre-partitioned for the chosen layout, and
+  * reused by every round. Round count is fixed (5 for PageRank and
+  * label propagation, 3 hops for reachability): bounded depth keeps
+  * the oracle (one CTE per round) finite.
   */
 object Graph {
   type Q = (SparkSession, String) => DataFrame
@@ -41,34 +40,17 @@ object Graph {
   private[graft] val Iters = 5
   private val MaxNbrs = 64   // hub cap for neighborhood joins
   private val TopPairs = 100 // link-prediction candidates served
-  private val MaxHops = 3    // BFS depth for reachability
-
-  /** Memoized dim-table row counts for g_label_propagation's broadcast
-    * gate: every graph node is a customer or a supplier, so
-    * |customer| + |supplier| is a FREE upper bound on the node count —
-    * one tiny count job per JVM+dir (the reco CountMemo pattern)
-    * instead of counting the materialized label frame per query (an
-    * exact count would cost an extra action before the edge layout can
-    * be chosen — measured ~+0.4 s at sf0.1 for zero gate benefit: the
-    * bound and the exact count sit on the same side of a 10⁷ ceiling
-    * for any corpus shape this warehouse produces). A failed probe
-    * returns Long.MaxValue — failing CLOSED onto the shuffled path,
-    * never onto an unbounded broadcast. */
-  private val custCounts =
-    new graft.core.GraftSession.CountMemo(onError = Long.MaxValue)
-  private val suppCounts =
-    new graft.core.GraftSession.CountMemo(onError = Long.MaxValue)
+  private[graft] val MaxHops = 3 // BFS depth for reachability
 
   /** Memoized dim-key UPPER bounds for g_label_propagation's packed
-    * argmax gate (same memo discipline as the counts above): the memo
-    * holds max(key) when every key is non-negative, Long.MaxValue when
-    * any key is negative or the probe fails — packing is then unsafe
-    * and the gate falls back to the struct argmax. One tiny dim-table
-    * agg per JVM+dir, memoized. */
+    * argmax gate: the memo holds max(key) when every key is
+    * non-negative, Long.MaxValue when any key is negative or the probe
+    * fails — packing is then unsafe and the gate falls back to the
+    * struct argmax. One tiny dim-table agg per JVM + file listing. */
   private val custKeyBound =
-    new graft.core.GraftSession.CountMemo(onError = Long.MaxValue)
+    new GraftSession.CountMemo(onError = Long.MaxValue)
   private val suppKeyBound =
-    new graft.core.GraftSession.CountMemo(onError = Long.MaxValue)
+    new GraftSession.CountMemo(onError = Long.MaxValue)
   private def keyBound(df: DataFrame, key: String): Long = {
     val r = df.agg(min(col(key)).cast("long"), max(col(key)).cast("long"))
       .first()
@@ -77,63 +59,97 @@ object Graph {
     else r.getLong(1)
   }
 
+  /** Every node is a customer or a supplier, so |customer| + |supplier|
+    * bounds the node count from two memoized row counts, with no action
+    * on the graph itself. An unknown count fails closed to
+    * Long.MaxValue, which `iterate` never broadcasts. */
+  private def nodeBound(t: Tables): Long = {
+    val c = GraftSession.rowCount(t, "customer", Long.MaxValue)
+    val sp = GraftSession.rowCount(t, "supplier", Long.MaxValue)
+    if (c == Long.MaxValue || sp == Long.MaxValue) Long.MaxValue else c + sp
+  }
+
+  /** The trading graph's directed edges (src, dst), both directions of
+    * every distinct customer↔supplier pair. Node keys are packed into
+    * one long — 2·id for a customer, 2·id + 1 for a supplier — so every
+    * round's join and aggregation keys on a long instead of a
+    * (node_type, node_id) pair. The packing is bijective on the two
+    * non-negative key spaces, so group sets, counts and tie-breaks are
+    * those of the pair keys, and `decode` restores the oracle's rows. */
+  private def tradeEdges(t: Tables): DataFrame = {
+    val pairs = t.orders.select(col("o_orderkey"), col("o_custkey"))
+      .join(t.lineitem.select(col("l_orderkey"), col("l_suppkey")),
+        col("o_orderkey") === col("l_orderkey"))
+      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
+      .distinct()
+    pairs.select(col("c").as("src"), col("s").as("dst"))
+      .unionByName(pairs.select(col("s").as("src"), col("c").as("dst")))
+  }
+
+  /** Packed `node` key → the oracle's (node_type, node_id), beside `valueCol`. */
+  private def decode(df: DataFrame, valueCol: Column): DataFrame =
+    df.select(when(col("node") % 2 === 1, "s").otherwise("c").as("node_type"),
+      expr("node div 2").as("node_id"), valueCol)
+
+  /** What one round of `iterate` works with: the laid-out edges, how a
+    * vertex frame meets them, and the round's number (from 1). */
+  private final case class Round(edges: DataFrame, meet: DataFrame => DataFrame,
+                                 number: Int)
+
+  /** Run `rounds` synchronous rounds over `edges`: the vertex frame
+    * starts as `init` (built from the laid-out edges) and each round
+    * maps it to the next.
+    *
+    * Layout, chosen once: when `nodeBound` rows of the vertex frame fit
+    * under `spark.sql.autoBroadcastJoinThreshold` — the ceiling Spark
+    * applies to every other broadcast, sized per row as Catalyst does
+    * (8 bytes plus each column's default size) — every round broadcasts
+    * the vertex frame into the edges, which are partitioned by
+    * destination, so the per-destination aggregation needs no exchange
+    * and a round shuffles nothing. Past it, the edges are partitioned
+    * by source and each vertex frame meets them through a
+    * shuffle_merge-hinted join: only the O(n) vertex frame moves onto
+    * the persisted layout, and the hint keeps AQE from demoting the
+    * join back to a broadcast on small-stats inputs. A threshold of -1
+    * disables broadcasting here as everywhere else.
+    *
+    * Each round's frame is lineage-truncated (eager localCheckpoint),
+    * so driver planning stays O(1) per round. `edges` is released once
+    * laid out — a caller that persisted it to derive other frames hands
+    * that cache over — and the laid-out copy is released before the
+    * result, which no longer reads it, is returned. */
+  private def iterate(edges: DataFrame, init: DataFrame => DataFrame,
+                      nodeBound: Long, rounds: Int)(
+      round: (Round, DataFrame) => DataFrame): DataFrame = {
+    // init's schema is the same over either layout: analyze it on the
+    // edges as given, before the layout exists
+    val rowBytes = 8 + init(edges).schema.map(_.dataType.defaultSize).sum
+    val broadcastable = BigInt(nodeBound) * rowBytes <=
+      edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val laid = edges.repartition(col(if (broadcastable) "dst" else "src"))
+      .persist()
+    val meet: DataFrame => DataFrame =
+      if (broadcastable) broadcast(_) else _.hint("shuffle_merge")
+    laid.count() // built while a caller's cached `edges` still serves it
+    edges.unpersist()
+    var state = init(laid)
+    for (i <- 1 to rounds)
+      state = round(Round(laid, meet, i), state).localCheckpoint(true)
+    laid.unpersist()
+    state
+  }
+
   val queries: Map[String, Q] = Map(
     "g_pagerank" -> ((s, dir) => {
-      val t = Tables(s, dir)
-      val pairs = t.orders.select(col("o_orderkey"), col("o_custkey"))
-        .join(t.lineitem.select(col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
-        .distinct()
+      // the node table (with each node's out-degree) comes from the
+      // edges, which are persisted so the layout built inside `iterate`
+      // reads them from cache. Counting the nodes yields the exact n
+      // for the rank base and the layout gate.
+      val edges = tradeEdges(Tables(s, dir)).persist()
+      val nodes = edges.groupBy(col("src").as("node"))
+        .agg(count(lit(1)).as("outdeg"))
         .persist()
-      // the node table comes straight from pairs — a customer's
-      // out-degree is its distinct supplier partners (= its pair
-      // count) and vice versa, so two cheap aggs replace both the
-      // countDistinct Expand this round briefly carried (measured
-      // +1.2 s) and the original edges-side groupBy. Counting nodes
-      // here also yields n BEFORE the edge layout is chosen, which the
-      // layout depends on.
-      // nodes, edges and ranks all key on ONE packed long (2·id, +1
-      // for suppliers — the g_label_propagation encoding): per edge
-      // per iteration that replaces a string hash + compare with a
-      // long's and narrows every broadcast entry. Bijective on the
-      // two non-negative key spaces, decoded once at the end, so the
-      // fixed-point arithmetic — and the oracle rows — are untouched.
-      val nodes = pairs
-        .groupBy((col("ck") * 2).as("node")).agg(count(lit(1)).as("outdeg"))
-        .unionByName(pairs
-          .groupBy((col("sk") * 2 + 1).as("node")).agg(count(lit(1)).as("outdeg")))
-        .persist()
-      val n = nodes.count() // bounded: one row per distinct node key
-      // broadcast ceiling for the O(n)-row rank frame: below it, each
-      // iteration ships the vertex state to the edges (GraphX's
-      // strategy — zero shuffles per iteration); above it (~10⁷ nodes
-      // ≈ hundreds of MB serialized, past any sane broadcast), fall
-      // back to co-partitioned shuffled joins. Conf-gated so specs can
-      // pin both paths on one fixture.
-      val useBroadcast = n <= s.conf.get(
-        "graft.pagerank.broadcastNodeLimit",
-        sys.env.getOrElse("GRAFT_PR_BCAST_LIMIT", "10000000")).toLong
-      // edges are pre-partitioned ONCE by the key each path joins on:
-      // broadcast path by DESTINATION (the contribution rows inherit
-      // the edge partitioning through the broadcast join, so the
-      // per-dst aggregation needs NO exchange — 5 shuffle-free
-      // iterations); shuffled path by SOURCE (the per-iteration
-      // ranks join reuses it, so only the O(n) rank frame moves)
-      val edges = {
-        val e = pairs.select((col("ck") * 2).as("src"),
-            (col("sk") * 2 + 1).as("dst"))
-          .unionByName(pairs.select((col("sk") * 2 + 1).as("src"),
-            (col("ck") * 2).as("dst")))
-        (if (useBroadcast) e.repartition(col("dst"))
-         else e.repartition(col("src"))).persist()
-      }
-      // force-materialize the edge layout before the timed iteration
-      // chain (nodes already materialized by the count above, pulling
-      // pairs through its cache), then release the pairs scratch —
-      // the iterations must never recompute the base
-      edges.count()
-      pairs.unpersist(blocking = false)
+      val n = nodes.count()
       // empty graph (no orders↔lineitem pairs — an empty partition or
       // a fully-filtered slice in production): rank mass is 1/n per
       // node, undefined at n=0. Every frame below is already empty, so
@@ -141,37 +157,21 @@ object Graph {
       // the driver-side division.
       val base = if (n == 0) 0L else Scale / n
       val teleport = (15L * base) / 100L
-      var ranks = nodes.select(col("node"), col("outdeg"),
-        lit(base).as("rank"))
-      // ONE copy of the iteration arithmetic (PageRankSpec pins the two
-      // paths bit-identical — duplicated loops would let a future
-      // fixed-point change silently diverge them): the scale paths
-      // differ only in how the O(n) vertex frames meet the edges.
-      // Broadcast below the node ceiling = zero shuffles per iteration.
-      // Past it, the rank frame is shuffled onto the edges' persisted
-      // (src_t, src) layout (no O(E) exchange), contributions aggregate
-      // by dst (map-side combined — the one corpus-shaped shuffle a
-      // non-broadcastable vertex state forces), and the new-rank join
-      // against nodes runs on two already-hash-partitioned O(n) frames;
-      // the merge hint pins the shuffled form so small-stats fixtures
-      // (and AQE) cannot silently demote the path under test back to
-      // broadcast.
-      val meet: DataFrame => DataFrame =
-        if (useBroadcast) broadcast(_) else _.hint("shuffle_merge")
-      for (_ <- 1 to Iters) {
-        val contribs = edges
-          .join(meet(ranks), col("src") === col("node"))
+      val init = (_: DataFrame) =>
+        nodes.select(col("node"), col("outdeg"), lit(base).as("rank"))
+      // contributions aggregate by dst, and the new-rank join against
+      // nodes runs on the aggregate's dst partitioning
+      val ranks = iterate(edges, init, n, Iters) { (r, ranks) =>
+        r.edges.join(r.meet(ranks), col("src") === col("node"))
           .select(col("dst"), expr("rank div outdeg").as("c"))
           .groupBy(col("dst"))
           .agg(sum(col("c")).as("csum"))
-        ranks = contribs
-          .join(meet(nodes), col("node") === col("dst"))
+          .join(r.meet(nodes), col("node") === col("dst"))
           .select(col("node"), col("outdeg"),
             (lit(teleport) + expr("(85 * csum) div 100")).as("rank"))
       }
-      ranks.select(
-        when(col("node") % 2 === 1, "s").otherwise("c").as("node_type"),
-        expr("node div 2").as("node_id"), col("rank").as("rank_scaled"))
+      nodes.unpersist()
+      decode(ranks, col("rank").as("rank_scaled"))
     }),
     "g_reachability" -> ((s, dir) => {
       // multi-source BFS: exact min hop distance (≤ MaxHops) from the
@@ -179,38 +179,19 @@ object Graph {
       // graph — the reachability/blast-radius primitive (fraud rings,
       // recall campaigns). Pure integer semantics, so unlike PageRank
       // no fixed-point scaling is needed. Each hop is one equi-join
-      // frontier expansion + a min-agg merge; the distance frame is
-      // one row per reached node and is lineage-truncated per hop
-      // (eager localCheckpoint) so driver planning stays O(1) per
-      // iteration — the ss_knn_graph lesson applied from the start.
-      // packed-long node keys per the g_pagerank / LP argument: every
-      // hop's frontier join and min-agg key on one long instead of a
-      // (string, long) pair; decoded once at the end, rows identical.
+      // frontier expansion + a min-agg merge over one row per reached
+      // node.
       val t = Tables(s, dir)
-      val pairs = t.orders.select(col("o_orderkey"), col("o_custkey"))
-        .join(t.lineitem.select(col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
-        .distinct()
-      val edges = pairs.select((col("ck") * 2).as("src"),
-          (col("sk") * 2 + 1).as("dst"))
-        .unionByName(pairs.select((col("sk") * 2 + 1).as("src"),
-          (col("ck") * 2).as("dst")))
-        .persist()
       val seeds = t.supplier.filter(col("s_nationkey") === 0)
         .select((col("s_suppkey") * 2 + 1).as("node"), lit(0).as("hops"))
-      var dist = seeds.localCheckpoint(true)
-      for (h <- 1 to MaxHops) {
-        val next = dist.join(edges, col("node") === col("src"))
-          .select(col("dst").as("node"), lit(h).as("hops"))
-        dist = dist.unionByName(next)
-          .groupBy(col("node"))
-          .agg(min(col("hops")).as("hops"))
-          .localCheckpoint(true)
+      val dist = iterate(tradeEdges(t), _ => seeds, nodeBound(t), MaxHops) {
+        (r, dist) =>
+          dist.unionByName(r.edges.join(r.meet(dist), col("src") === col("node"))
+              .select(col("dst").as("node"), lit(r.number).as("hops")))
+            .groupBy(col("node"))
+            .agg(min(col("hops")).as("hops"))
       }
-      dist.select(
-        when(col("node") % 2 === 1, "s").otherwise("c").as("node_type"),
-        expr("node div 2").as("node_id"), col("hops"))
+      decode(dist, col("hops"))
     }),
     "g_label_propagation" -> ((s, dir) => {
       // community detection by SYNCHRONOUS label propagation, fixed 5
@@ -220,89 +201,30 @@ object Graph {
       // this variant is deterministic by construction (integer counts,
       // value tie-break, synchronous updates), so DuckDB replays it
       // bit-for-bit with one CTE per round. Labels start as globally
-      // unique ids (2·id for customers, 2·id+1 for suppliers — the two
-      // key spaces overlap). Note the graph is bipartite, where purely
-      // synchronous LP can oscillate between sides rather than
-      // converge — fixed-round output is still well-defined and
-      // deterministic; a production run would use semi-synchronous
-      // updates (alternate sides) on bipartite inputs.
-      // Scale shape: per round, one O(E) equi-join of edges against
-      // the O(N) label frame, one (node, label) count agg, one per-node
-      // argmax window — the window's row_number(1) is a map-side
-      // WindowGroupLimit above the count shuffle. Label frames are
-      // lineage-truncated per round (the ss_knn_graph lesson).
-      import org.apache.spark.sql.expressions.Window
+      // unique ids: a node's packed key (2·id for customers, 2·id+1 for
+      // suppliers — the two key spaces overlap). Note the graph is
+      // bipartite, where purely synchronous LP can oscillate between
+      // sides rather than converge — fixed-round output is still
+      // well-defined and deterministic; a production run would use
+      // semi-synchronous updates (alternate sides) on bipartite inputs.
       val t = Tables(s, dir)
-      // every per-round join and aggregation keys on a SINGLE packed
-      // long (2·id, +1 for suppliers — exactly the label encoding, so
-      // a node's initial label IS its packed key) instead of the
-      // (node_type STRING, node_id) pair: per edge per round that
-      // replaces a string hash + compare with a long's, and halves
-      // the broadcast entry width. The packing is bijective on the
-      // two non-negative key spaces, so group sets, counts and
-      // tie-breaks are untouched; node_type/node_id are decoded once
-      // at the end and the oracle sees identical rows.
-      val pairs = t.orders.select(col("o_orderkey"), col("o_custkey"))
-        .join(t.lineitem.select(col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
-        .distinct()
-      // broadcast ceiling for the O(n)-row label frame — the g_pagerank
-      // gate: below it each round ships the labels to the edges (zero
-      // shuffles per round); past ~10⁷ nodes (hundreds of MB serialized
-      // per round × 5 rounds) fall back to co-partitioned shuffled
-      // joins. The gate reads the memoized |customer| + |supplier|
-      // UPPER bound (every node is one or the other), so choosing the
-      // layout costs no action on the graph itself — a first version
-      // counted the materialized label frame exactly, which added two
-      // serialized jobs per query (measured +0.4 s at sf0.1, the whole
-      // round-trip being decided the same way). Conf-gated so the spec
-      // pins both paths on one fixture.
-      val custN = custCounts(s, s"$dir/customer.parquet")(t.customer.count())
-      val suppN = suppCounts(s, s"$dir/supplier.parquet")(t.supplier.count())
-      val nBound =
-        if (custN == Long.MaxValue || suppN == Long.MaxValue) Long.MaxValue
-        else custN + suppN
-      val useBroadcast = nBound <= s.conf.get(
-        "graft.labelprop.broadcastNodeLimit",
-        sys.env.getOrElse("GRAFT_LP_BCAST_LIMIT", "10000000")).toLong
-      // edges pre-partitioned ONCE by the key each path joins on:
-      // broadcast path by DESTINATION (the (dst, label) count agg
-      // inherits the layout — no per-round exchange); shuffled path by
-      // SOURCE (the per-round label join reuses it, so only the O(n)
-      // label frame moves per round).
-      val edges = {
-        val e = pairs.select((col("ck") * 2).as("src"),
-            (col("sk") * 2 + 1).as("dst"))
-          .unionByName(pairs.select((col("sk") * 2 + 1).as("src"),
-            (col("ck") * 2).as("dst")))
-        (if (useBroadcast) e.repartition(col("dst"))
-         else e.repartition(col("src"))).persist()
-      }
-      // ONE copy of the round arithmetic (LabelPropagationSpec pins the
-      // two paths identical): the paths differ only in how the O(n)
-      // label frame meets the edges — broadcast under the ceiling,
-      // shuffle_merge-pinned shuffled join past it (the hint keeps
-      // small-stats fixtures/AQE from silently demoting the path under
-      // test back to broadcast).
-      val meet: DataFrame => DataFrame =
-        if (useBroadcast) broadcast(_) else _.hint("shuffle_merge")
+      val nBound = nodeBound(t)
       // per-round argmax form: the struct-ordered max_by is correct at
       // any key range but its struct agg buffer is not HashAggregate-
       // compatible, so every round pays a SortAggregate pair + an
-      // explicit Sort of the (node, label, c) count frame (measured in
-      // the per-action plan dumps). When the label and count ranges
-      // provably fit, the same argmax packs into ONE BIGINT ordering —
-      // p = c·2³² + (2³² − 1 − label) — which is strictly monotone in
-      // (c ASC, label DESC) lexicographic order exactly when
-      // 0 ≤ label ≤ 2³²−1 (second term stays in [0, 2³²−1]) and
-      // c < 2³¹ (no overflow: c·2³² ≤ 2⁶²), so max_by(label, p) picks
-      // the same row as the struct form: highest count, tie → smallest
-      // label. Labels only propagate (every round's labels ⊆ initial
-      // labels = packed keys ≤ 2·maxKey+1) and c ≤ degree ≤ nBound, so
-      // the gate reads the memoized dim-key bounds + the node bound —
-      // no extra action on the graph. Past the gate (keys ≥ 2³¹,
-      // unknown bounds, negative keys) the struct form stays.
+      // explicit Sort of the (node, label, c) count frame. When the
+      // label and count ranges provably fit, the same argmax packs into
+      // ONE BIGINT ordering — p = c·2³² + (2³² − 1 − label) — which is
+      // strictly monotone in (c ASC, label DESC) lexicographic order
+      // exactly when 0 ≤ label ≤ 2³²−1 (second term stays in
+      // [0, 2³²−1]) and c < 2³¹ (no overflow: c·2³² ≤ 2⁶²), so
+      // max_by(label, p) picks the same row as the struct form: highest
+      // count, tie → smallest label. Labels only propagate (every
+      // round's labels ⊆ initial labels = packed keys ≤ 2·maxKey+1) and
+      // c ≤ degree ≤ nBound, so the gate reads the memoized dim-key
+      // bounds + the node bound — no extra action on the graph. Past
+      // the gate (keys ≥ 2³¹, unknown bounds, negative keys) the struct
+      // form stays.
       val packedArgmax = {
         val custKB = custKeyBound(s, s"$dir/customer.parquet")(
           keyBound(t.customer, "c_custkey"))
@@ -311,49 +233,28 @@ object Graph {
         val maxKey = math.max(custKB, suppKB)
         maxKey < (1L << 31) && nBound < (1L << 30)
       }
+      // The key is unique per (node, label) group, so max_by's
+      // tie-nondeterminism can never engage: highest count wins, then
+      // the SMALLEST label. Being order-free, the argmax needs no
+      // per-round sort; with the packed ordering both per-round
+      // aggregates are codegen'd HashAggregates, and under the
+      // broadcast layout both group on a prefix of the edges' dst
+      // partitioning, so the round's only exchange is the broadcast.
       val argmax =
         if (packedArgmax)
           expr("max_by(label, c * 4294967296 + (4294967295 - label))")
         else expr("max_by(label, named_struct('c', c, 'nl', -label))")
-      var labels = edges
-        .select(col("src")).distinct()
+      val init = (e: DataFrame) => e.select(col("src")).distinct()
         .select(col("src").as("node"), col("src").as("label"))
-        .localCheckpoint(true)
-      for (_ <- 1 to Iters) {
-        // broadcast round (the g_pagerank layout argument): the O(N)
-        // label frame broadcasts into the edge join, the count agg
-        // groups on (dst, label) whose clustering the edges' dst
-        // pre-partitioning already satisfies, and the per-node argmax
-        // is a SECOND hash aggregate on the same prefix — so the only
-        // per-round exchange is the broadcast itself. Shuffled round:
-        // the label frame shuffles onto the edges' persisted src
-        // layout, and the (dst, label) count agg is the one
-        // corpus-shaped exchange a non-broadcastable vertex state
-        // forces (map-side combined). The argmax used
-        // to be a row_number window (sort per round); max_by with the
-        // (c, -label) tie-break is order-free, and with the packed
-        // BIGINT ordering (gate above) both per-round aggregates run
-        // as codegen'd HashAggregates — no per-round sort at all.
-        // The key is unique per (node, label) group, so max_by's
-        // tie-nondeterminism can never engage: highest count wins,
-        // then the SMALLEST label — exactly the window's
-        // (c DESC, label ASC) first row.
-        labels = edges
-          .join(meet(labels.withColumnRenamed("node", "src")), Seq("src"))
+      val labels = iterate(tradeEdges(t), init, nBound, Iters) { (r, labels) =>
+        r.edges
+          .join(r.meet(labels.withColumnRenamed("node", "src")), Seq("src"))
           .groupBy(col("dst").as("node"), col("label"))
           .agg(count(lit(1)).as("c"))
           .groupBy(col("node"))
           .agg(argmax.as("label"))
-          .localCheckpoint(true)
       }
-      // the final labels localCheckpoint is eager, so the edge cache
-      // is no longer reachable from the returned plan — release it
-      // rather than leaving session-lifetime blocks to embedding
-      // callers (Verify/Bench clearCache between queries, specs don't)
-      edges.unpersist()
-      labels.select(
-        when(col("node") % 2 === 1, "s").otherwise("c").as("node_type"),
-        expr("node div 2").as("node_id"), col("label"))
+      decode(labels, col("label"))
     }),
     "g_common_neighbors" -> ((s, dir) => {
       // link prediction on the part co-order graph: for non-adjacent

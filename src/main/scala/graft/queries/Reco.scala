@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.Tables
+import graft.core.{GraftSession, Tables}
 import graft.ml.Recommender
 
 /** Recommender surface (SURVEY.md §2.8 M1–M10).
@@ -27,30 +27,25 @@ object Reco {
 
   private val K = 5
 
-  /** Memoized row counts — the reco_item_item gate + sizing probes
-    * (part = kernel/broadcast gate; lineitem, customer = the kernel's
-    * pair-volume estimate). One count job per JVM + dir + file-listing
-    * fingerprint (GraftSession.CountMemo: a dir regenerated larger in
-    * this JVM re-probes instead of serving the stale small count to
-    * the gate). A transient read error returns Long.MaxValue for THIS
-    * call — failing CLOSED onto the size-safe path (legacy shuffle, or
-    * the kernel's upper partition clamp), never onto a driver-OOM
-    * broadcast or an under-split task — and the next call re-probes.
-    * The part memo distinguishes a PROVABLY-missing table (hand
-    * fixtures without a part table → MissingTable, the kernel then
-    * sizes via its bounded limit+1 collect) from a transient error
-    * (MaxValue → legacy), so the kernel gate shares this memo's
+  /** The reco_item_item gate + sizing probes: the part count gates
+    * the kernel/broadcast path; the lineitem and customer counts
+    * (GraftSession.rowCount, shared with the other probes of those
+    * files) feed the kernel's pair-volume estimate. Each is one count
+    * job per JVM + dir + file-listing fingerprint (a dir regenerated
+    * larger in this JVM re-probes instead of serving the stale small
+    * count to the gate). A transient read error returns Long.MaxValue
+    * for THIS call — failing CLOSED onto the size-safe path (legacy
+    * shuffle, or the kernel's upper partition clamp), never onto a
+    * driver-OOM broadcast or an under-split task — and the next call
+    * re-probes. The part memo distinguishes a PROVABLY-missing table
+    * (hand fixtures without a part table → MissingTable, the kernel
+    * then sizes via its bounded limit+1 collect) from a transient
+    * error (MaxValue → legacy), so the kernel gate shares this memo's
     * staleness model instead of carrying its own exists() probe. */
-  private val partCounts = new graft.core.GraftSession.CountMemo(
+  private val partCounts = new GraftSession.CountMemo(
     onError = Long.MaxValue, onMissing = graft.ml.ItemItem.MissingTable)
-  private val lineitemCounts = new graft.core.GraftSession.CountMemo(onError = Long.MaxValue)
-  private val customerCounts = new graft.core.GraftSession.CountMemo(onError = Long.MaxValue)
   private def partCountFor(t: Tables): Long =
     partCounts(t.spark, s"${t.dir}/part.parquet")(t.part.count())
-  private def lineitemCountFor(t: Tables): Long =
-    lineitemCounts(t.spark, s"${t.dir}/lineitem.parquet")(t.lineitem.count())
-  private def customerCountFor(t: Tables): Long =
-    customerCounts(t.spark, s"${t.dir}/customer.parquet")(t.customer.count())
 
   private def sampleUsers(s: SparkSession, dir: String): DataFrame =
     Recommender.interactions(Tables(s, dir))
@@ -320,7 +315,8 @@ object Reco {
         s.conf.getOption("graft.reco.niBroadcastLimit").map(_.toLong)
           .getOrElse(4_000_000L)
       graft.ml.ItemItem.neighbors(t, K, niBroadcastLimit,
-        partCountFor(t), lineitemCountFor(t), customerCountFor(t))
+        partCountFor(t), GraftSession.rowCount(t, "lineitem", Long.MaxValue),
+        GraftSession.rowCount(t, "customer", Long.MaxValue))
     }))
 
   val oracles: Map[String, String] = Map(

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.Tables
+import graft.core.{PlanStats, Tables}
 import graft.functions.VectorFunctions._
 import graft.functions.{PqAdc, PqEncode, PqExpressions}
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -95,15 +95,13 @@ object Similarity {
   private def satMul(a: Long, b: Long): Long =
     if (b > 0 && a > Long.MaxValue / b) Long.MaxValue else a * b
 
-  /** Memoized corpus row count per dir + file-listing fingerprint —
-    * the gate probe (one count job per JVM+dir, regeneration-safe via
-    * CountMemo's fingerprint key). Fails CLOSED: a transient read
-    * error returns Long.MaxValue for THIS call — the size-safe
-    * non-broadcast path, never a driver-OOM broadcast — and the next
-    * call re-probes. */
-  private val embCounts = new graft.core.GraftSession.CountMemo(onError = Long.MaxValue)
+  /** Memoized corpus row count — the gate probe (GraftSession.rowCount,
+    * regeneration-safe via its file-listing key). Fails CLOSED: a
+    * transient read error returns Long.MaxValue for THIS call — the
+    * size-safe non-broadcast path, never a driver-OOM broadcast — and
+    * the next call re-probes. */
   private def embCountFor(s: SparkSession, dir: String): Long =
-    embCounts(s, s"$dir/embeddings.parquet")(Tables(s, dir).embeddings.count())
+    graft.core.GraftSession.rowCount(Tables(s, dir), "embeddings", Long.MaxValue)
 
   /** Upper bound on the every-100th query-stratum size (MaxValue when
     * the probe failed — the gates then fail closed). */
@@ -211,25 +209,6 @@ object Similarity {
     cents
   }
 
-  /** Spread a small-file corpus across the cluster before a CPU-heavy
-    * per-vector projection (assignment cosines, PQ encode): a compact
-    * parquet source (one ~MB file → one input split) would otherwise
-    * run it all on a single core — and the partition count must be
-    * pinned or AQE re-coalesces the KB-sized exchange, blind to the
-    * downstream compute (same pattern as Dedup.spread). At corpus
-    * scale the source's own splits already parallelize. */
-  private def spread(e: DataFrame): DataFrame =
-    // size-estimate gate, not `.rdd.getNumPartitions`: under AQE the
-    // rdd probe MATERIALIZES every upstream stage to learn a partition
-    // count (see Dedup.spread) — the estimate is driver-side metadata.
-    // Sentinel-guarded (PlanStats.needsSpread): stats-free leaves fall
-    // back to their concrete RDD partition counts instead of silently
-    // reading the defaultSizeInBytes sentinel as "big".
-    if (graft.core.PlanStats.needsSpread(e))
-      e.repartition(e.sparkSession.sparkContext.defaultParallelism,
-        col("vec_id"))
-    else e
-
   /** Exact brute-force top-K pairs for the every-100th query set —
     * shared by the baseline query and the ANN recall contracts.
     * `nQ` = (an upper bound on) the query-stratum size, for the
@@ -238,7 +217,7 @@ object Similarity {
     val q = e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
-    qCross(spread(e), q, nQ)
+    qCross(PlanStats.spread(e, "vec_id"), q, nQ)
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
         expr(cosineSql("qe", "embedding", DIM)).as("cosine"))
@@ -317,7 +296,7 @@ object Similarity {
     val q = e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val w = Window.partitionBy(col("qid")).orderBy(col("dot").desc, col("vec_id"))
-    qCross(spread(e), q, nQ)
+    qCross(PlanStats.spread(e, "vec_id"), q, nQ)
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
         expr(dotSql("qe", "embedding", DIM)).as("dot"))
@@ -400,7 +379,7 @@ object Similarity {
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       val vecW = Window.partitionBy(col("qid"))
         .orderBy(col("cosine").desc, col("doc_id"))
-      val vec = qCross(spread(e), q, nQueryEst(s, dir))
+      val vec = qCross(PlanStats.spread(e, "vec_id"), q, nQueryEst(s, dir))
         .filter(col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id").as("doc_id"),
           expr(cosineSql("qe", "embedding", DIM)).as("cosine"))
@@ -435,7 +414,7 @@ object Similarity {
       val e = Tables(s, dir).embeddings
       val n = e.count()
       val nQ = e.filter(col("vec_id") % 100 === 0).count()
-      val m2Row = spread(e)
+      val m2Row = PlanStats.spread(e, "vec_id")
         .agg(max(expr(dotSql("embedding", "embedding", DIM)))).head()
       // empty corpus: no max norm exists; 0 keeps the augmentation
       // sqrt well-defined and every frame below is empty anyway
@@ -443,7 +422,7 @@ object Similarity {
       val nP = adaptivePlanes(n)
       // greatest(…, 0): the max-norm vector itself can go ε-negative
       // under float re-association; its augmented coordinate is 0
-      val aug = spread(e).withColumn("aemb",
+      val aug = PlanStats.spread(e, "vec_id").withColumn("aemb",
         expr(s"array_append(CAST(embedding AS ARRAY<DOUBLE>), " +
           s"sqrt(greatest($m2 - vec_dot(embedding, embedding), 0.0D)))"))
         .withColumn("bucket", expr(signBucketSql("aemb", DIM + 1, nP)))
@@ -478,7 +457,8 @@ object Similarity {
       val n = e.count()
       val nQ = e.filter(col("vec_id") % 100 === 0).count()
       val nP = adaptivePlanes(n)
-      val eb = spread(e).withColumn("bucket", expr(signBucketSql("embedding", DIM, nP)))
+      val eb = PlanStats.spread(e, "vec_id")
+        .withColumn("bucket", expr(signBucketSql("embedding", DIM, nP)))
       val q = eb.filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("bucket"))
         .withColumn("probe", explode(expr(probeArraySql("bucket", nP))))
@@ -573,7 +553,7 @@ object Similarity {
       val cents = e.filter(pmod(col("vec_id"), lit(step)) === 0)
         .select(col("vec_id").as("cid"), col("embedding").as("ce"))
       val wa = Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cid"))
-      val assigned = qCross(spread(e), cents, nCents)
+      val assigned = qCross(PlanStats.spread(e, "vec_id"), cents, nCents)
         .select(col("vec_id"), col("embedding"), col("cid"),
           expr(cosineSql("embedding", "ce", DIM)).as("csim"))
         .withColumn("arn", row_number().over(wa)).filter(col("arn") === 1)
@@ -615,7 +595,7 @@ object Similarity {
       val cents = e.filter(pmod(col("vec_id"), lit(step)) === 0)
         .select(col("vec_id").as("cid"), col("embedding").as("ce"))
       val wa = Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cid"))
-      val assignedDf = qCross(spread(e), cents, nCents)
+      val assignedDf = qCross(PlanStats.spread(e, "vec_id"), cents, nCents)
         .select(col("vec_id"), col("embedding"), col("cid"),
           expr(cosineSql("embedding", "ce", DIM)).as("csim"))
         .withColumn("arn", row_number().over(wa)).filter(col("arn") === 1)
@@ -685,7 +665,7 @@ object Similarity {
             .toDF("cid", "ce")
         }
       val wa = Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cid"))
-      val assigned = qCross(spread(e), cents, nCells)
+      val assigned = qCross(PlanStats.spread(e, "vec_id"), cents, nCells)
         .select(col("vec_id"), col("embedding"), col("cid"),
           expr(cosineSql("embedding", "ce", DIM)).as("csim"))
         .withColumn("arn", row_number().over(wa)).filter(col("arn") === 1)
@@ -730,7 +710,7 @@ object Similarity {
       // persisted: the quantized relation feeds both sides of the
       // query×corpus scoring join — without it the quantization
       // lineage runs twice.
-      val eq = spread(e).crossJoin(broadcast(stats))
+      val eq = PlanStats.spread(e, "vec_id").crossJoin(broadcast(stats))
         .select(col("vec_id"), expr(quant).as("qv"))
         .persist()
       val q = eq.filter(col("vec_id") % 100 === 0)
@@ -767,7 +747,7 @@ object Similarity {
       val cbFlat = PqExpressions.flatten(pqCodebook(e, n))
       // encode: per subspace, distances to all 16 centroids, then the
       // argmin index — one native codegen'd expression
-      val enc = spread(e)
+      val enc = PlanStats.spread(e, "vec_id")
         .select(col("vec_id"), pqEncodeCol(col("embedding"), cbFlat).as("codes"))
       val q = e.filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -837,7 +817,7 @@ object Similarity {
       // index pass: nearest cell (argmax cosine over broadcast
       // centroids) + PQ codes, one corpus scan, all codegen'd
       val wa = Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cid"))
-      val assigned = qCross(spread(e), cents, nCells)
+      val assigned = qCross(PlanStats.spread(e, "vec_id"), cents, nCells)
         .select(col("vec_id"), col("embedding"), col("cid"),
           expr(cosineSql("embedding", "ce", DIM)).as("csim"))
         .withColumn("arn", row_number().over(wa)).filter(col("arn") === 1)
@@ -914,7 +894,7 @@ object Similarity {
       val p = neardupPlanes(n)
       val nBands = 12 // more seed chances than the near-dup join: top-K
                       // targets sit at lower cosine than τ-near-dups
-      // deliberately NOT spread(e): r18 measured the estimate-gated
+      // deliberately NOT PlanStats.spread: r18 measured the estimate-gated
       // repartition here (to widen the 0.8 s single-task seed-join
       // probe over the 1-split sf0.1 cache) and REJECTED it — the
       // 32-partition cache makes each of this query's ~26 small jobs

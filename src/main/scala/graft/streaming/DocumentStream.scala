@@ -51,15 +51,11 @@ object DocumentStream {
     * with the batch pipeline's global-min-keeper semantics, which the
     * DuckDB oracle pins. Within a micro-batch, group rows are ordered
     * by doc_id so output is deterministic under any arrival order. */
-  /** Memoized document count per dir + file-listing fingerprint (the
-    * state-partition sizing gate below; GraftSession.CountMemo — only
-    * successful counts memoize, a regenerated dir re-probes, and a
-    * failed probe sizes conservative THIS call and re-probes next
-    * time). */
-  private val docCounts = new graft.core.GraftSession.CountMemo(onError = -1L)
+  /** Memoized document count (the state-partition sizing gate below;
+    * GraftSession.rowCount — a regenerated dir re-probes, and a failed
+    * probe (-1) sizes conservative THIS call and re-probes next time). */
   private def docCountFor(spark: SparkSession, dir: String): Long =
-    docCounts(spark, s"$dir/documents.parquet")(
-      spark.read.parquet(s"$dir/documents.parquet").count())
+    graft.core.GraftSession.rowCount(graft.core.Tables(spark, dir), "documents", -1L)
 
   def corpusIngest(spark: SparkSession, dir: String): DataFrame = {
     // state-partition count sized to the KEYED-STATE cardinality (one

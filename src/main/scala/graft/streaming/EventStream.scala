@@ -81,19 +81,15 @@ object EventStream {
     * The default provider wins when state is SMALL per instance
     * (stream-stream join buffers: 2.3 s vs 2.9 s) — there the RocksDB
     * native-instance overhead never pays off. So: RocksDB for
-    * declared-large state, default provider otherwise;
-    * `GRAFT_STREAM_STATESTORE=rocksdb|hdfs` forces either for A/B. */
-  private def stateStoreConf(ss: SparkSession, largeState: Boolean): Unit = {
-    val mode = sys.env.getOrElse("GRAFT_STREAM_STATESTORE",
-      if (largeState) "rocksdb" else "hdfs")
-    if (mode == "rocksdb") {
+    * declared-large state, default provider otherwise. */
+  private def stateStoreConf(ss: SparkSession, largeState: Boolean): Unit =
+    if (largeState) {
       ss.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       ss.conf.set(
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
         "true")
     }
-  }
 
   /** Run a one-shot stream to an in-memory table. The stream is built
     * on a CHILD SESSION (`newSession`: shared SparkContext and catalog

@@ -80,6 +80,17 @@ class EmptyInputSpec extends SparkSpec {
     // one orders row + one lineitem row that do NOT join → still an
     // empty graph; the n=0 guard must hold downstream of a non-empty scan
     assert(run("g_pagerank", oneDir).isEmpty)
+    Seq(emptyDir, oneDir).foreach { d =>
+      assert(run("g_label_propagation", d).isEmpty, s"g_label_propagation on $d")
+    }
+    // no edges: reachability answers with exactly its hop-0 seeds, the
+    // nation-0 suppliers
+    assert(run("g_reachability", emptyDir).isEmpty)
+    val seeds = spark.read.parquet(s"$oneDir/supplier.parquet")
+      .filter("s_nationkey = 0").count()
+    val reached = run("g_reachability", oneDir)
+    assert(reached.length == seeds && reached.forall(_.getInt(2) == 0),
+      reached.mkString(", "))
   }
 
   test("model-backed recommender operators survive an empty model") {

@@ -70,33 +70,22 @@ class PageRankSpec extends SparkSpec {
         .collect()
         .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     val viaBroadcast = run()
-    spark.conf.set("graft.pagerank.broadcastNodeLimit", "0")
-    try {
-      val q = graft.queries.Graph.queries("g_pagerank")(spark, fixtureDir)
-      val viaShuffle = q.collect()
-        .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
-      assert(viaShuffle == viaBroadcast)
-      assert(viaShuffle == reference)
-      // the scale path really took the shuffled form: walk the FINAL
-      // physical tree (a tree walk, unlike the plan string, does not
-      // descend into InMemoryRelation's cached edge-build lineage —
-      // where the orders⋈lineitem broadcast legitimately lives) and
-      // require every iteration join to be sort-merge, none broadcast
-      import org.apache.spark.sql.execution.SparkPlan
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
-      def unwrap(p: SparkPlan): Seq[SparkPlan] = p match {
-        case a: AdaptiveSparkPlanExec => unwrap(a.executedPlan)
-        case st: QueryStageExec => unwrap(st.plan)
-        case other => other +: other.children.flatMap(unwrap)
-      }
-      val ops = unwrap(q.queryExecution.executedPlan)
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    val (viaShuffle, rounds) = ActionPlans.withoutBroadcast(spark) {
+      ActionPlans.of(spark, "localCheckpoint", graft.queries.Graph.Iters)(run())
+    }
+    assert(viaShuffle == viaBroadcast)
+    assert(viaShuffle == reference)
+    // the scale path really took the shuffled form: each round is one
+    // checkpointed action whose two joins (edges ⋈ ranks, contributions
+    // ⋈ nodes) are sort-merge, none broadcast
+    assert(rounds.size == graft.queries.Graph.Iters, s"rounds=${rounds.size}")
+    rounds.foreach { ops =>
       val smj = ops.count(_.isInstanceOf[SortMergeJoinExec])
       val bhj = ops.count(_.isInstanceOf[BroadcastHashJoinExec])
-      // 2 joins × Iters iterations, all shuffled
-      assert(smj == 2 * graft.queries.Graph.Iters, s"smj=$smj")
+      assert(smj == 2, s"smj=$smj")
       assert(bhj == 0, s"broadcast join leaked into the scale path: $bhj")
-    } finally spark.conf.unset("graft.pagerank.broadcastNodeLimit")
+    }
   }
 }
 
@@ -156,57 +145,32 @@ class LabelPropagationSpec extends SparkSpec {
     // the label-frame arithmetic is integer counts + value tie-break —
     // order-independent by construction — so the past-the-ceiling path
     // (co-partitioned shuffled joins) must reproduce the broadcast
-    // path's labels EXACTLY, and both must equal the reference
-    def run(): Map[(String, Long), Long] =
-      SparkEntry.queries("g_label_propagation")(spark, fixtureDir)
-        .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val viaBroadcast = run()
-    // the per-round label frames are lineage-truncated (localCheckpoint
-    // per round), so the returned frame's plan shows only the final
-    // projection — the join strategy must be observed per ACTION via a
-    // QueryExecutionListener instead of walking the final plan (the
-    // g_pagerank test's approach doesn't transfer)
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    // path's labels EXACTLY, and both must equal the reference. The
+    // fixture carries customer/supplier tables, so the node bound is
+    // known and the default run takes the broadcast layout.
+    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_lpb_" +
+      java.util.UUID.randomUUID().toString.take(8)
+    writeFixture(dir, keyOffset = 0L)
+    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
-    def unwrap(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => unwrap(a.executedPlan)
-      case st: QueryStageExec => unwrap(st.plan)
-      case other => other +: other.children.flatMap(unwrap)
-    }
-    val smj = new java.util.concurrent.atomic.AtomicInteger
-    val bhj = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, d: Long): Unit = {
-        val ops = unwrap(qe.executedPlan)
-        smj.addAndGet(ops.count(_.isInstanceOf[SortMergeJoinExec]))
-        bhj.addAndGet(ops.count(_.isInstanceOf[BroadcastHashJoinExec]))
+    def run(): (Map[(String, Long), Long], Seq[Seq[SparkPlan]]) =
+      ActionPlans.of(spark, "localCheckpoint", graft.queries.Graph.Iters) {
+        SparkEntry.queries("g_label_propagation")(spark, dir)
+          .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
       }
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    // let the broadcast run's straggler listener events drain before
-    // counting (the execution listener bus is asynchronous)
-    Thread.sleep(1500)
-    spark.conf.set("graft.labelprop.broadcastNodeLimit", "0")
-    spark.listenerManager.register(listener)
-    try {
-      val viaShuffle = run()
-      assert(viaShuffle == viaBroadcast)
-      assert(viaShuffle == reference)
-      // one shuffled label join per round; every visible join tree in
-      // the run window belongs to the rounds (pairs' orders⋈lineitem
-      // broadcast lives inside the InMemoryRelation cache build, which
-      // a tree walk does not descend into)
-      val deadline = System.currentTimeMillis() + 30000
-      while (smj.get() < graft.queries.Graph.Iters &&
-        System.currentTimeMillis() < deadline) Thread.sleep(100)
-      assert(smj.get() == graft.queries.Graph.Iters, s"smj=${smj.get()}")
-      assert(bhj.get() == 0,
-        s"broadcast join leaked into the scale path: ${bhj.get()}")
-    } finally {
-      spark.listenerManager.unregister(listener)
-      spark.conf.unset("graft.labelprop.broadcastNodeLimit")
-    }
+    def joins(rounds: Seq[Seq[SparkPlan]]) = (
+      rounds.map(_.count(_.isInstanceOf[SortMergeJoinExec])),
+      rounds.map(_.count(_.isInstanceOf[BroadcastHashJoinExec])))
+    val (viaBroadcast, bRounds) = run()
+    val (viaShuffle, sRounds) = ActionPlans.withoutBroadcast(spark)(run())
+    assert(viaShuffle == viaBroadcast)
+    assert(viaShuffle == referenceFor(pairsAt(0L)))
+    // one label join per round: broadcast by default, sort-merge past
+    // the threshold
+    val one = Seq.fill(graft.queries.Graph.Iters)(1)
+    val none = Seq.fill(graft.queries.Graph.Iters)(0)
+    assert(joins(bRounds) == (none, one), s"broadcast layout (smj, bhj) per round: ${joins(bRounds)}")
+    assert(joins(sRounds) == (one, none), s"shuffled layout (smj, bhj) per round: ${joins(sRounds)}")
   }
 
   // --- packed-BIGINT argmax gate (round 18) ---------------------------
@@ -217,8 +181,8 @@ class LabelPropagationSpec extends SparkSpec {
   // path each and pin both against the SAME independent reference; the
   // listener asserts the plan shape actually switched.
   // (The legacy fixture above has no customer/supplier tables, so its
-  // key probe fails closed onto the struct path — the three original
-  // tests pin that fallback.)
+  // key probe fails closed onto the struct path and its node bound onto
+  // the shuffled layout — the reference test pins that fallback.)
 
   private def writeFixture(dir: String, keyOffset: Long): Unit = {
     import spark.implicits._
@@ -243,39 +207,14 @@ class LabelPropagationSpec extends SparkSpec {
     Set((1L + o, 1L + o), (1L + o, 2L + o), (2L + o, 2L + o), (3L + o, 2L + o))
 
   private def runCountingAggs(dir: String): (Map[(String, Long), Long], Int, Int) = {
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, SortAggregateExec}
-    def unwrap(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => unwrap(a.executedPlan)
-      case st: QueryStageExec => unwrap(st.plan)
-      case other => other +: other.children.flatMap(unwrap)
-    }
-    val sortAgg = new java.util.concurrent.atomic.AtomicInteger
-    val hashAgg = new java.util.concurrent.atomic.AtomicInteger
-    val actions = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, d: Long): Unit = {
-        val ops = unwrap(qe.executedPlan)
-        sortAgg.addAndGet(ops.count(_.isInstanceOf[SortAggregateExec]))
-        hashAgg.addAndGet(ops.count(_.isInstanceOf[HashAggregateExec]))
-        actions.incrementAndGet()
-      }
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    Thread.sleep(1500) // drain stragglers from earlier runs
-    spark.listenerManager.register(listener)
-    try {
-      val got = SparkEntry.queries("g_label_propagation")(spark, dir)
+    val (got, rounds) = ActionPlans.of(spark, "localCheckpoint", graft.queries.Graph.Iters) {
+      SparkEntry.queries("g_label_propagation")(spark, dir)
         .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
-      // the per-round localCheckpoints are Iters actions; wait for the
-      // asynchronous listener bus to deliver at least those
-      val deadline = System.currentTimeMillis() + 30000
-      while (actions.get() < graft.queries.Graph.Iters &&
-        System.currentTimeMillis() < deadline) Thread.sleep(100)
-      Thread.sleep(1500) // and let the tail drain before reading counts
-      (got, sortAgg.get(), hashAgg.get())
-    } finally spark.listenerManager.unregister(listener)
+    }
+    val ops = rounds.flatten
+    (got, ops.count(_.isInstanceOf[SortAggregateExec]),
+      ops.count(_.isInstanceOf[HashAggregateExec]))
   }
 
   test("packed-BIGINT argmax: small-key corpus runs sort-free and matches the reference") {

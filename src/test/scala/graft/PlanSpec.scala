@@ -556,17 +556,32 @@ class PlanSpec extends SparkSpec {
 
   test("g_pagerank: every iteration reuses the persisted edge relation") {
     // 5 iterations but ONE edges/nodes computation: every iteration's
-    // join reads the cached relations (InMemoryTableScan / AQE
-    // TableCacheQueryStage; the cache print embeds its build lineage,
-    // so the orders scan TEXT still appears — what matters is that the
-    // joins consume the cache, not a re-derived edge build)
-    val plan = executedPlan("g_pagerank")
-    assert(plan.contains("InMemoryTableScan"), plan)
-    assert(plan.contains("TableCacheQueryStage"), plan)
-    // iterations are shuffle-free: rank/node frames broadcast, so no
-    // shuffle-family join anywhere in the iteration chain
-    assert(!plan.contains("SortMergeJoin"), plan)
-    assert(!plan.contains("ShuffledHashJoin"), plan)
+    // join reads the cached edge relation (InMemoryTableScan / AQE
+    // TableCacheQueryStage) and never re-derives the edge build from
+    // the orders/lineitem scans. Each iteration is its own checkpointed
+    // action, so its plan is read through a listener.
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.TableCacheQueryStageExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val (_, rounds) = ActionPlans.of(spark, "localCheckpoint",
+        graft.queries.Graph.Iters) {
+      SparkEntry.queries("g_pagerank")(spark, dir).collect()
+    }
+    assert(rounds.size == graft.queries.Graph.Iters, s"rounds=${rounds.size}")
+    def readsCachedEdges(ops: Seq[SparkPlan]) = ops.exists {
+      case m: InMemoryTableScanExec => m.output.map(_.name).toSet == Set("src", "dst")
+      case _ => false
+    }
+    rounds.foreach { ops =>
+      val plan = ops.head.treeString
+      assert(readsCachedEdges(ops), plan)
+      assert(ops.exists(_.isInstanceOf[TableCacheQueryStageExec]), plan)
+      assert(!ops.exists(_.isInstanceOf[FileSourceScanExec]), plan)
+      // iterations are shuffle-free: rank/node frames broadcast, so no
+      // shuffle-family join anywhere in the iteration chain
+      assert(!plan.contains("SortMergeJoin"), plan)
+      assert(!plan.contains("ShuffledHashJoin"), plan)
+    }
   }
 
   test("tx_bpe_encode: tokenization is a pure narrow projection — zero exchanges") {

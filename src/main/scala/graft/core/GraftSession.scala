@@ -45,9 +45,10 @@ object GraftSession {
       // with room. Each entry is one loaded class, a few KB of metaspace.
       .config("spark.sql.codegen.cache.maxEntries", "2048")
     // GRAFT_SESSION_CONF="k=v[,k=v...]": extra session confs for scale
-    // rehearsals (e.g. graft.reco.niBroadcastLimit past the 4M default
-    // at an sf30 corpus's 6M-item catalog) — a no-op unless set, so
-    // the driver's bench/verify contract is untouched by default.
+    // rehearsals (e.g. spark.driver.maxResultSize for the item-item
+    // n_i collect of a multi-million-item catalog, or
+    // spark.sql.shuffle.partitions) — a no-op unless set, so the
+    // bench/verify contract is untouched by default.
     sys.env.get("GRAFT_SESSION_CONF").toSeq
       .flatMap(_.split(",")).map(_.split("=", 2))
       .collect { case Array(k, v) => (k, v) }
@@ -92,26 +93,11 @@ object GraftSession {
     * broadcast", -1 for "unknown, use floor sizing") — and the next
     * call re-probes. Stale-fingerprint entries for the same path are
     * dropped on write, so the map stays O(live paths). */
-  final class CountMemo(onError: Long, onMissing: Long) {
-    /** Missing tables indistinguishable from errors (original form). */
-    def this(onError: Long) = this(onError, onError)
+  final class CountMemo(onError: Long) {
     private val cache =
       new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
     def apply(spark: SparkSession, path: String)(compute: => Long): Long = {
       val fp = pathFingerprint(spark, path)
-      // "absent" covers both provably-missing and unreadable paths; an
-      // explicit exists() (metadata-only, and only on this rare branch)
-      // splits them so a gate can treat "table genuinely not there"
-      // (onMissing) differently from "transient FS error" (onError,
-      // via the compute throwing below). Never cached: a table created
-      // later must be seen on the next call.
-      if (onMissing != onError && fp == "absent") {
-        val provablyMissing = scala.util.Try {
-          val p = new org.apache.hadoop.fs.Path(path)
-          !p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-        }.getOrElse(false)
-        if (provablyMissing) return onMissing
-      }
       val key = s"$path@$fp"
       Option(cache.get(key)).map(_.longValue).getOrElse {
         val c = scala.util.Try(compute).getOrElse(onError)

@@ -48,7 +48,7 @@ object Warehouse {
       .sortWithinPartitions(naturalKey)
     val schema = ordered.schema.add(keyName,
       org.apache.spark.sql.types.LongType, nullable = false)
-    val rdd = ordered.rdd.zipWithIndex.map { case (row, i) =>
+    val rdd = ordered.rdd.zipWithIndex().map { case (row, i) =>
       org.apache.spark.sql.Row.fromSeq(row.toSeq :+ (i + 1))
     }
     spark.createDataFrame(rdd, schema)

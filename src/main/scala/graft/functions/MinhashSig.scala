@@ -9,7 +9,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** minhash_sig(arr, k): the k-slot min-hash signature of a string
   * array — one salted md5 per (salt, element) sliced into four 32-bit
-  * slots, exactly the Dedup.sigExpr / chargram sigOf formulation:
+  * slots, exactly the md5-HOF reference (MinhashSigSpec.sigExpr) and
+  * chargram sigOf formulation:
   *
   *   sig[j] = min over elements g of substr(md5((j/4) + ":" + g),
   *                                          (j%4)*8 + 1, 8)
@@ -28,8 +29,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * per document for the slice minima, and allocates a 32-char hex
   * UTF8String per digest plus an 8-char one per slice BEFORE
   * comparing. Signature hashing is the dominant per-row cost of the
-  * minhash dedup family (the round-6 note on sigExpr measured the
-  * signature stage at 9 s → 2.5 s just from 4× fewer digests). This
+  * minhash dedup family (the signature stage measured 9 s → 2.5 s
+  * just from 4× fewer digests). This
   * expression walks the element array ONCE, allocates nothing per
   * element beyond the digest's own 16-byte output, and compiles to a
   * single static call inside whole-stage codegen.

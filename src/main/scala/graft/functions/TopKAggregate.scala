@@ -123,122 +123,3 @@ case class TopKScores(
       newChildren: IndexedSeq[Expression]): TopKScores =
     copy(itemExpr = newChildren(0), scoreExpr = newChildren(1), kExpr = newChildren(2))
 }
-
-/** Bounded buffer for TopKTagged: same worst-first heap discipline as
-  * TopKBuffer over (item, score, payload). The payload participates as
-  * the FINAL tie-break (after score desc, item asc) so the kept set is
-  * a deterministic function of the input multiset even when duplicate
-  * (item, score) rows carry different payloads — without it, which
-  * duplicate survived a full buffer would depend on partition/merge
-  * order. On unique (item, score) inputs (e.g. reco_item_item's
-  * neighbor lists) the selected set is byte-identical to TopKBuffer's. */
-final class TopKTaggedBuffer(val k: Int) {
-  private val ord = Ordering.by[(Long, Double, Long), (Double, Long, Long)] {
-    case (item, score, payload) => (-score, item, payload)
-  }
-  val heap = new scala.collection.mutable.PriorityQueue[(Long, Double, Long)]()(ord)
-
-  def add(item: Long, score: Double, payload: Long): Unit = {
-    if (heap.size < k) heap.enqueue((item, score, payload))
-    else {
-      val (wItem, wScore, wPayload) = heap.head
-      if (score > wScore || (score == wScore &&
-          (item < wItem || (item == wItem && payload < wPayload)))) {
-        heap.dequeue(); heap.enqueue((item, score, payload))
-      }
-    }
-  }
-
-  def sortedDesc: Seq[(Long, Double, Long)] =
-    heap.toSeq.sortBy { case (item, score, payload) => (-score, item, payload) }
-}
-
-/** topk_tagged(item, score, payload, k): TopKScores with an opaque
-  * bigint payload carried per entry (e.g. the co-occurrence count
-  * behind a similarity score). Needed because the window-free top-k
-  * would otherwise force a re-join of the full scored relation just
-  * to recover per-pair attributes — the payload rides in the k-entry
-  * heap instead, so the exchange still sees only k rows per group per
-  * partition. Returns array<struct<item, score, payload>> ordered by
-  * (score desc, item asc, payload asc) — payload is the last tie-break
-  * so the result is order-insensitive for arbitrary inputs. */
-case class TopKTagged(
-    itemExpr: Expression,
-    scoreExpr: Expression,
-    payloadExpr: Expression,
-    kExpr: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TopKTaggedBuffer] {
-
-  private lazy val k: Int = kExpr.eval().asInstanceOf[Number].intValue
-
-  override def children: Seq[Expression] = Seq(itemExpr, scoreExpr, payloadExpr, kExpr)
-  override def nullable: Boolean = false
-  override def prettyName: String = "topk_tagged"
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("item", LongType, nullable = false),
-    StructField("score", DoubleType, nullable = false),
-    StructField("payload", LongType, nullable = false))), containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (!kExpr.foldable)
-      TypeCheckResult.TypeCheckFailure("k must be a literal")
-    else if (itemExpr.dataType != LongType || scoreExpr.dataType != DoubleType ||
-             payloadExpr.dataType != LongType)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (bigint item, double score, bigint payload, int k), got " +
-          s"(${itemExpr.dataType.catalogString}, ${scoreExpr.dataType.catalogString}, " +
-          s"${payloadExpr.dataType.catalogString})")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def createAggregationBuffer(): TopKTaggedBuffer = new TopKTaggedBuffer(k)
-
-  override def update(b: TopKTaggedBuffer, input: InternalRow): TopKTaggedBuffer = {
-    val item = itemExpr.eval(input)
-    val score = scoreExpr.eval(input)
-    val payload = payloadExpr.eval(input)
-    if (item != null && score != null && payload != null)
-      b.add(item.asInstanceOf[Long], score.asInstanceOf[Double],
-        payload.asInstanceOf[Long])
-    b
-  }
-
-  override def merge(b: TopKTaggedBuffer, other: TopKTaggedBuffer): TopKTaggedBuffer = {
-    other.heap.foreach { case (item, score, payload) => b.add(item, score, payload) }
-    b
-  }
-
-  override def eval(b: TopKTaggedBuffer): Any =
-    new GenericArrayData(b.sortedDesc.map { case (item, score, payload) =>
-      InternalRow(item, score, payload)
-    }.toArray[Any])
-
-  override def serialize(b: TopKTaggedBuffer): Array[Byte] = {
-    val entries = b.heap.toSeq
-    val buf = ByteBuffer.allocate(8 + entries.size * 24)
-    buf.putInt(b.k).putInt(entries.size)
-    entries.foreach { case (item, score, payload) =>
-      buf.putLong(item).putDouble(score).putLong(payload)
-    }
-    buf.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): TopKTaggedBuffer = {
-    val buf = ByteBuffer.wrap(bytes)
-    val b = new TopKTaggedBuffer(buf.getInt())
-    val n = buf.getInt()
-    (1 to n).foreach(_ => b.add(buf.getLong(), buf.getDouble(), buf.getLong()))
-    b
-  }
-
-  override def withNewMutableAggBufferOffset(offset: Int): TopKTagged =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): TopKTagged =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): TopKTagged =
-    copy(itemExpr = newChildren(0), scoreExpr = newChildren(1),
-      payloadExpr = newChildren(2), kExpr = newChildren(3))
-}

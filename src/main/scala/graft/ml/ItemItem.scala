@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 
@@ -12,171 +12,91 @@ import graft.core.Tables
   * bit-deterministic (integer counts, one correctly-rounded sqrt +
   * division), so it hash-matches the DuckDB oracle directly.
   *
-  * Scale shape: the pair build self-joins users, so its cost is
-  * Σ_u d(u)² — bounded ONLY if per-user degree is; the degree cap
+  * Scale shape: the pair build pairs every user's items, so its cost
+  * is Σ_u d(u)² — bounded ONLY if per-user degree is; the degree cap
   * (≤1000 distinct items, a no-op on this data, load-bearing on
   * power-law users) keeps the quadratic term linear-ish in practice.
   *
-  * TWO physical strategies behind one result contract:
+  * One physical strategy, a packed-pair kernel. Every item is replaced
+  * by its CODE, its index in the sorted array of distinct item ids.
+  * Codes are dense ints and keep the order of the ids, so any id
+  * (negative, ≥ 2³¹) packs with its neighbor into ONE long
+  * ((codeA<<32)|codeB), and "neighbor ascending" on codes is
+  * "neighbor ascending" on ids. The directed pair stream (a≠b, both
+  * directions — emitting both out of one user's item list costs
+  * nothing more than the canonical half, and spares a mirror pass) is
+  * routed once BY SOURCE ITEM, and each reduce partition sorts its
+  * packed longs and run-length-scans them: a run of equal values IS
+  * (a, b, n_ab), runs of one item are consecutive and already
+  * neighbor-ordered, so exact counts, the cosine against the broadcast
+  * n_i array and the bounded top-k selection all happen in one
+  * primitive-array pass that emits FINAL rows (item, rank, neighbor,
+  * n_ab, cosine). A shuffle plan of the same contract (pair
+  * aggregate, two denominator joins, a mirror and a top-k aggregate)
+  * needs several exchanges of the Σ d(u)² pair volume; this needs one.
   *
-  * KERNEL (default whenever the item catalog fits a driver-side count
-  * table — the same ceiling the legacy path uses to broadcast its
-  * denominator joins): the directed pair stream (a≠b, both directions
-  * — emitting both directions out of the self-join costs nothing,
-  * the join materializes d(u)² rows either way) is packed into ONE
-  * long per pair ((a<<32)|b; gated on ids in [0, 2³¹)), routed once
-  * BY SOURCE ITEM, and each reduce partition sorts its packed longs
-  * and run-length-scans them: a run of equal values IS (a, b, n_ab),
-  * runs of one item are consecutive and already neighbor-ordered, so
-  * exact counts, the cosine against the broadcast n_i table and the
-  * bounded top-k selection all happen in one primitive-array pass
-  * that emits FINAL rows (item, rank, neighbor, n_ab, cosine).
-  * Replaces the legacy tail — a 10⁹-key final hash aggregate that
-  * spilled ~37 GB at the 100× rehearsal, two denominator joins and a
-  * mirror union re-streaming every pair, and a top-k heap aggregate
-  * with its own exchange — with one exchange and an O(m log m)
-  * per-partition scan.
+  * The exchange ships DELTA+VARINT BLOBS, not rows: each map task
+  * sorts a batch of its pairs and LEB128-encodes, per reduce
+  * partition, the first pk + gaps (a duplicate pk — the same pair
+  * seen via two users in one batch — is one 0x00 byte).
+  * Consecutive sorted pks within one source item differ by
+  * ~catalog/d(i), so a pair costs ~2 B on the wire vs 8 B packed +
+  * UnsafeRow/serializer overhead as rows. The reduce side decodes
+  * (multiset-exact by construction), re-sorts, and scans. Map-side
+  * memory is bounded by the batch (≤ 8M longs per task); the shuffle
+  * sorter sees only a few hundred small records per task. The reduce
+  * partition count derives from a metadata-cheap pair-volume estimate
+  * so the decoded slice stays ~128 MB at any scale, the analog of one
+  * executor core's shuffle slice on a real cluster.
   *
-  * The exchange itself ships DELTA+VARINT BLOBS, not rows: each map
-  * task batches its pairs into per-reduce-partition chunks, sorts
-  * each chunk, and LEB128-encodes first-pk + gaps (a duplicate pk —
-  * the same pair seen via two users in one chunk — is one 0x00
-  * byte). On this corpus shape consecutive sorted pks within one
-  * source item differ by ~catalog/d(i), so a pair costs ~2 B on the
-  * wire vs 8 B packed + UnsafeRow/serializer overhead as rows — the
-  * shuffle-disk term that ENOSPC'd the sf30 rehearsal and spilled
-  * one bounded pass at sf20 (measured numbers in BASELINE.md). The reduce side decodes (multiset-exact
-  * by construction), re-sorts, and scans as before, so the result is
-  * bit-identical to the row exchange. Map-side memory is bounded by
-  * the chunk budget (≤ 64M longs = 512 MB across all targets, and in
-  * practice the emit-widening law keeps a task's whole pair slice
-  * near ~32M pairs); the shuffle sorter itself sees only a few
-  * hundred small records per task, so the sorter's buffer-then-merge
-  * double-write of the raw-row layout is gone entirely. The reduce
-  * partition count derives from a metadata-cheap pair-volume
-  * estimate so the decoded slice stays ~128 MB at any scale, the
-  * analog of one executor core's shuffle slice on a real cluster.
-  *
-  * LEGACY (ids outside [0, 2³¹) or a catalog past the broadcast
-  * ceiling): canonical a<b half-pair aggregation + dual-path
-  * denominator attach + mirror + bounded-heap top-k aggregate — every
-  * stage shuffle-hash hinted sort-free; see the inline comments.
-  *
-  * The kernel's driver-side n_i collect is the entry's MODEL BUILD,
-  * deliberately at query-construction time like the ALS family's
-  * train() — bounded by the same gate that already bounded the legacy
-  * broadcast (`graft.reco.niBroadcastLimit`, default 4M items), so it
-  * can never become an unbounded driver fetch on a corpus where the
-  * legacy path wouldn't have broadcast the same table.
+  * The n_i table (one row per distinct item) is collected to the
+  * driver and broadcast: the cosine of a source item a needs n_b for
+  * EVERY neighbor b, and n_b is not co-partitioned with a, so the
+  * table must be whole wherever a is scanned. That collect is the
+  * entry's MODEL BUILD, at query-construction time like the ALS
+  * family's train(); its driver memory (16 B per item in the arrays,
+  * plus the collected rows) is bounded by Spark's own
+  * `spark.driver.maxResultSize`, a deployment setting — past it Spark
+  * aborts the collect with an error that names the setting.
   */
 object ItemItem {
 
-  /** Sentinel a gate probe returns for a PROVABLY-missing table
-    * (CountMemo onMissing) — distinct from Long.MaxValue (transient
-    * error → legacy path): missing means "no catalog pre-check
-    * available, size via the bounded limit+1 collect instead". */
-  val MissingTable: Long = -1L
-
-  /** The most recent kernel invocation's capped-purchases EXECUTED
-    * plan, RENDERED (the fact join → distinct → degree-cap pipeline
-    * the checkpoint materializes). TEST HOOK ONLY (PlanSpec): the
-    * kernel's served plan is the RowBridge RDD wrap, so this
-    * pipeline's physical plan (the shuffle_hash pins) is otherwise
-    * invisible to plan inspection. Never read on a production path.
-    *
-    * Stored as a STRING, never the QueryExecution: a retained QE pins
-    * every upstream ShuffleDependency of the executed pipeline for the
-    * hook's lifetime (a @volatile var outliving the query), keeping
-    * tens of GB of already-consumed fact-join/distinct/cap shuffle
-    * files undeletable through the pair emit — measured as the biggest
-    * single component of the sf30 rehearsal's ~55-58 GB scratch peak
-    * (the ENOSPC wall; BASELINE.md). The rendering costs one sub-ms
-    * string build per construction and pins nothing. */
-  @volatile private[graft] var lastKernelPlan: Option[String] = None
-
-  /** Whether the most recent kernel invocation had to repartition the
-    * checkpointed frame by user — for EITHER reason (the AQE-skew
-    * guard refusing the executed plan, or routine emit widening past
-    * gate scale). TEST HOOK ONLY (PlanSpec pins that the normal path
-    * does NOT pay the exchange and that the guard logic itself
-    * discriminates). */
-  @volatile private[graft] var lastPairSrcRepartitioned: Option[Boolean] = None
-
-  /** The two exchange causes SEPARATELY — (guardRefused, widened) —
-    * so scale evidence can distinguish "locality proof failed" from
-    * "pair volume widened the map side" (they coincide in the boolean
-    * above for any corpus past ~sf10). TEST/DIAG HOOK ONLY. */
-  @volatile private[graft] var lastPairExchangeCause: Option[(Boolean, Boolean)] = None
-
-  /** n_i lookup shipped to the kernel: dense direct-indexed array when
-    * the id space is compact (TPC-H partkeys are 1..P — one DRAM touch
-    * per probe), open-addressing linear-probe table otherwise (~1-2
-    * touches; never more than 50% loaded). Both deterministic. */
-  private[graft] sealed trait NiLookup extends Serializable {
-    def get(item: Long): Long
-  }
-  private final class DenseNi(arr: Array[Long]) extends NiLookup {
-    def get(item: Long): Long = arr(item.toInt)
-  }
-  private final class HashNi(keys: Array[Int], vals: Array[Long]) extends NiLookup {
-    private val mask = keys.length - 1
-    def get(item: Long): Long = {
-      val k = item.toInt
-      var i = (((k * 0x9E3779B9) >>> 16) ^ k) & mask
-      while (keys(i) != k) i = (i + 1) & mask // gate guarantees presence
-      vals(i)
-    }
+  /** The code table of the collected (item, n_i) rows: ids ascending,
+    * counts aligned. An item's code is its index in `ids`. */
+  private[graft] def codeTable(rows: Array[(Long, Long)]): (Array[Long], Array[Long]) = {
+    val sorted = rows.sortBy(_._1)
+    (sorted.map(_._1), sorted.map(_._2))
   }
 
-  private[graft] def buildLookup(ids: Array[Long], counts: Array[Long]): NiLookup = {
-    val n = ids.length
-    var maxId = -1L
-    var i = 0
-    while (i < n) { if (ids(i) > maxId) maxId = ids(i); i += 1 }
-    // dense when ≤4× overallocated (and never >32M slots): the direct
-    // array wins every probe it can afford the memory for
-    if (maxId < (1L << 25) && maxId + 1 <= 4L * n + 1024) {
-      val arr = new Array[Long]((maxId + 1).toInt)
-      i = 0
-      while (i < n) { arr(ids(i).toInt) = counts(i); i += 1 }
-      new DenseNi(arr)
-    } else {
-      var cap = 16
-      while (cap < 2 * n) cap <<= 1
-      val keys = new Array[Int](cap)
-      java.util.Arrays.fill(keys, -1)
-      val vals = new Array[Long](cap)
-      val mask = cap - 1
-      i = 0
-      while (i < n) {
-        val k = ids(i).toInt
-        var j = (((k * 0x9E3779B9) >>> 16) ^ k) & mask
-        while (keys(j) != -1) j = (j + 1) & mask
-        keys(j) = k; vals(j) = counts(i)
-        i += 1
-      }
-      new HashNi(keys, vals)
-    }
+  /** The code of `item` in the sorted `ids`. Every purchased item is in
+    * the table (both read the same checkpoint), so a miss is a bug, not
+    * an input shape. */
+  private[graft] def codeOf(ids: Array[Long], item: Long): Int = {
+    val c = java.util.Arrays.binarySearch(ids, item)
+    if (c < 0) throw new IllegalStateException(s"item $item is not in the n_i table")
+    c
   }
 
-  /** The sorted-scan core: run-length-scan packed (a<<32)|b pairs —
-    * runs of equal values are exact (a, b, n_ab); runs of one item are
-    * consecutive and neighbor-ascending — keeping a k-slot
+  /** The sorted-scan core: run-length-scan packed (a<<32)|b code
+    * pairs — runs of equal values are exact (a, b, n_ab); runs of one
+    * item are consecutive and neighbor-ascending — keeping a k-slot
     * insertion-sorted best list per item. Strict > on the cosine
     * preserves the (cosine desc, neighbor asc) tie-break because
-    * neighbors arrive ascending. Emits FINAL result rows. */
-  private[graft] def scanSorted(buf: Array[Long], n: Int, ni: NiLookup, k: Int)
+    * neighbors arrive ascending and codes keep id order. Emits FINAL
+    * result rows in ids (`counts(code)` is n_i). */
+  private[graft] def scanSorted(buf: Array[Long], n: Int, ids: Array[Long],
+                                counts: Array[Long], k: Int)
       : scala.collection.mutable.ArrayBuffer[(Long, Int, Long, Long, Double)] = {
     val out = new scala.collection.mutable.ArrayBuffer[(Long, Int, Long, Long, Double)]
-    val tCos = new Array[Double](k); val tNb = new Array[Long](k)
+    val tCos = new Array[Double](k); val tNb = new Array[Int](k)
     val tCnt = new Array[Long](k)
     var tSize = 0
-    var curItem = -1L
+    var curItem = -1
     var na = 0L
     def flush(): Unit = {
       var r = 0
       while (r < tSize) {
-        out += ((curItem, r + 1, tNb(r), tCnt(r), tCos(r))); r += 1
+        out += ((ids(curItem), r + 1, ids(tNb(r)), tCnt(r), tCos(r))); r += 1
       }
       tSize = 0
     }
@@ -185,13 +105,13 @@ object ItemItem {
       val pk = buf(i)
       var j = i + 1
       while (j < n && buf(j) == pk) j += 1
-      val a = pk >>> 32
-      val b = pk & 0xFFFFFFFFL
-      if (a != curItem) { flush(); curItem = a; na = ni.get(a) }
+      val a = (pk >>> 32).toInt
+      val b = pk.toInt
+      if (a != curItem) { flush(); curItem = a; na = counts(a) }
       val cnt = (j - i).toLong
       // same arithmetic shape as the SQL: long product, one cast, one
       // correctly-rounded sqrt and division — bit-identical to DuckDB
-      val cos = cnt.toDouble / math.sqrt((na * ni.get(b)).toDouble)
+      val cos = cnt.toDouble / math.sqrt((na * counts(b)).toDouble)
       if (tSize < k || cos > tCos(tSize - 1)) {
         var pos = if (tSize < k) tSize else k - 1
         while (pos > 0 && cos > tCos(pos - 1)) {
@@ -211,12 +131,12 @@ object ItemItem {
     "item BIGINT NOT NULL, rank INT NOT NULL, neighbor BIGINT NOT NULL, " +
       "n_ab BIGINT NOT NULL, cosine DOUBLE NOT NULL")
 
-  /** Deterministic reduce-partition of a source item. A mixed hash,
-    * not bare `a % p`: sequential id spaces (TPC-H partkeys) modulo a
-    * small p would alias any id-assignment periodicity straight into
-    * partition skew. Content-defined, so the exchange layout is
-    * deterministic; changing it is a repartitioning, never a semantic
-    * change (the reduce side re-sorts whatever multiset it receives). */
+  /** Deterministic reduce-partition of a source item code. A mixed
+    * hash, not bare `a % p`: a small p would alias any periodicity of
+    * item popularity along the code order straight into partition
+    * skew. Content-defined, so the exchange layout is deterministic;
+    * changing it is a repartitioning, never a semantic change (the
+    * reduce side re-sorts whatever multiset it receives). */
   private[graft] def targetOf(a: Int, p: Int): Int = {
     var h = a * 0x9E3779B9
     h ^= h >>> 16
@@ -233,35 +153,13 @@ object ItemItem {
     def toArray: Array[Byte] = java.util.Arrays.copyOf(a, n)
   }
 
-  /** REFERENCE encoder for the wire format (the production emit path
-    * is encodePairBlobs' sorted walk, which streams the same format
-    * without materializing per-target long buffers; the spec
-    * roundtrips both through decodeChunk): sort buf[0..n) in place
-    * and delta+LEB128 encode it — the first pk absolute, every later
-    * pk as its gap to the previous one (sorted ⇒ nonnegative ⇒ no
-    * zigzag; pks are < 2⁶³ by the id gate so the absolute head fits
-    * 9 bytes). A duplicate pk — the same (a, b) co-occurring via two
-    * users in this chunk — is gap 0, one byte: the map-side combining
-    * the raw-row exchange lacked, for free. */
-  private[graft] def encodeChunk(buf: Array[Long], n: Int): Array[Byte] = {
-    java.util.Arrays.sort(buf, 0, n)
-    val out = new ByteVec(n * 3)
-    var prev = 0L
-    var i = 0
-    while (i < n) {
-      var x = if (i == 0) buf(0) else buf(i) - prev
-      prev = buf(i)
-      while ((x & ~0x7FL) != 0) { out.add(((x & 0x7FL) | 0x80L).toByte); x >>>= 7 }
-      out.add(x.toByte)
-      i += 1
-    }
-    out.toArray
-  }
-
   /** Decode one chunk into (a possibly-regrown) buf, returning the new
-    * (buf, n). Exact inverse of encodeChunk up to order — the caller
-    * re-sorts the union of all chunks, so per-chunk sortedness is an
-    * encoding detail, not a decode contract. */
+    * (buf, n). The wire format: the first pk absolute, every later pk
+    * as its gap to the previous one, LEB128 (sorted ⇒ nonnegative gaps
+    * ⇒ no zigzag; codes are < 2³¹, so a pk is < 2⁶³ and the absolute
+    * head fits 9 bytes). Decodes the pk multiset of the chunk; the
+    * caller re-sorts the union of all chunks, so per-chunk sortedness
+    * is an encoding detail, not a decode contract. */
   private[graft] def decodeChunk(bytes: Array[Byte], buf0: Array[Long],
                                  n0: Int): (Array[Long], Int) = {
     var buf = buf0; var n = n0
@@ -281,7 +179,7 @@ object ItemItem {
   }
 
   /** True iff the EXECUTED (post-AQE-finalization) plan of the capped
-    * purchases proves pairGenRows' invariant — every user's rows in
+    * purchases proves encodePairBlobs' invariant — every user's rows in
     * one partition. The positive proof: the plan root (through narrow
     * wrappers) is the degree-cap semi-join as a NON-skew
     * ShuffledHashJoin streaming on exactly `user`. Two runtime events
@@ -298,7 +196,7 @@ object ItemItem {
     * safety exchange on EVERY run. Anything unrecognized fails closed
     * onto the exchange — wrong answers are never on the table. */
   private[graft] def pairLocalityHolds(
-      qe: org.apache.spark.sql.execution.QueryExecution): Boolean = {
+      plan: org.apache.spark.sql.execution.SparkPlan): Boolean = {
     import org.apache.spark.sql.execution._
     def unwrap(p: SparkPlan): SparkPlan = p match {
       case a: adaptive.AdaptiveSparkPlanExec => unwrap(a.executedPlan)
@@ -307,7 +205,7 @@ object ItemItem {
       case i: InputAdapter => unwrap(i.child)
       case _ => p
     }
-    unwrap(qe.executedPlan) match {
+    unwrap(plan) match {
       case j: joins.ShuffledHashJoinExec =>
         !j.isSkewJoin && j.leftKeys.nonEmpty && j.leftKeys.forall {
           case a: org.apache.spark.sql.catalyst.expressions.Attribute =>
@@ -319,58 +217,38 @@ object ItemItem {
   }
 
   /** Directed-pair ENCODER over one partition of the CAPPED purchases
-    * (which are hash-partitioned by user — the cap semi-join's
-    * exchange — so every user's items are local): group items per
-    * user in a small map, then generate every ordered pair (i≠j) as a
-    * packed (a<<32)|b long APPENDED to one contiguous batch array,
-    * sort the batch once, and walk it in ascending pk order streaming
-    * LEB128 deltas into one small byte encoder per reduce target.
-    * This replaces both a d(u)²-row self-JOIN (the join's
-    * per-output-row probe machinery and its two extra checkpoint
-    * scans measured ~30% of the whole entry at the 100× rehearsal)
-    * and the raw-row pair exchange (8 B + row overhead per pair; the
-    * encoded stream is ~1.7 B/pair measured on this corpus shape, and
-    * the shuffle sorter sees a few hundred blob records instead of
-    * tens of millions of rows — its spill-then-merge double-write is
-    * gone).
+    * (every user's items partition-local — see pairLocalityHolds):
+    * code each item once per purchase row (one binary search in the
+    * sorted `ids`), group codes per user, then generate every ordered
+    * pair (i≠j) as a packed (a<<32)|b long APPENDED to one contiguous
+    * batch array, sort the batch once, and walk it in ascending pk
+    * order streaming LEB128 deltas into one small byte encoder per
+    * reduce target. The per-user double loop replaces a d(u)²-row
+    * self-join (a hash probe per emitted pair plus two extra scans of
+    * the checkpoint), and the blobs replace a raw-row pair exchange.
     *
-    * Why ONE array + ONE sort, not per-target chunk buffers: the
-    * first shipped layout kept p growing long buffers per task and
-    * sorted each ~chunk as it filled — at sf10 that is ~150 × 3.6 MB
-    * live arrays per task (~17 GB across 32 local threads), every one
-    * a G1 humongous object churning per chunk cycle, and the emit
-    * stage measured 5220 task-s against the raw-row layout's 863.
-    * The batch layout generates sequentially into one allocation,
-    * sorts once (the per-chunk sorts did the same O(n log n) compares
-    * with worse locality), and the ascending walk hands each target
-    * an ASCENDING pk subsequence — so per-target delta encoding needs
-    * only (prev, started) per target, no long buffering at all, and
-    * duplicates land adjacent GLOBALLY (strictly no-worse compression
-    * than per-chunk sorting). Wire format unchanged: decodeChunk
-    * reads every blob either layout writes.
+    * Why ONE array + ONE sort, not per-target chunk buffers: p growing
+    * long buffers per task are p live large arrays per task (G1
+    * humongous objects churning per chunk cycle). One batch is one
+    * allocation, one sort, and the ascending walk hands each target an
+    * ASCENDING pk subsequence — so per-target delta encoding needs only
+    * (prev, started) per target, and duplicates land adjacent.
     *
     * Memory law: the batch is min(task's total pairs, 8M) longs —
-    * 64 MB at the cap, ONE allocation reused across however many
-    * batches the task needs, so emit memory is bounded at 64 MB per
-    * task AT ANY CORPUS SIZE, independent of the emit-widening law's
-    * ~32M-pairs-per-task CPU/slice budget (a first cut sized the
-    * batch to that whole budget — 256 MB × 32 local threads of
-    * G1-humongous arrays alongside the 5 GB checkpoint blocks OOM'd a
-    * 30 g heap at sf10; decoupling the two bounds is the point). A
-    * task processes whole users in batch-sized groups — each batch
-    * closes its targets' streams and emits, so peak memory stays at
-    * the cap however many pairs the task holds (the degree cap bounds
+    * 64 MB at the cap, ONE allocation reused across the task's
+    * batches, so emit memory is bounded per task at any corpus size,
+    * independently of the emit-widening law's ~32M-pairs-per-task
+    * budget. A task processes whole users in batch-sized groups; each
+    * batch closes its targets' streams and emits (the degree cap bounds
     * one user's pairs at ~1M, far under the cap, so a batch always
     * makes progress; a cap-dodging user larger than the whole batch
-    * grows it rather than corrupt it). Cross-batch duplicate pairs no
-    * longer merge to a 1-byte gap and each batch re-pays one absolute
-    * head per target (~p·9 B) — measured ~1.7 B/pair either way. Null
-    * items (kept upstream for the degree count, exactly like the
-    * legacy plan) never pair. `batchCap` is a law parameter for the
-    * spec's multi-batch exercise, never overridden in production. */
+    * grows it rather than corrupt it). Each batch re-pays one absolute
+    * head per target (~p·9 B). Null items (kept upstream for the degree
+    * count) never pair. `batchCap` is a law parameter for the spec's
+    * multi-batch exercise, never overridden in production. */
   private[graft] def encodePairBlobs(
-      it: Iterator[org.apache.spark.sql.catalyst.InternalRow], p: Int,
-      batchCap: Long = 1L << 23): Iterator[(Int, Array[Byte])] = {
+      it: Iterator[org.apache.spark.sql.catalyst.InternalRow], ids: Array[Long],
+      p: Int, batchCap: Long = 1L << 23): Iterator[(Int, Array[Byte])] = {
     final class IntVec {
       var a = new Array[Int](8)
       var n = 0
@@ -387,7 +265,7 @@ object ItemItem {
         val u = r.getLong(0)
         var vec = byUser.get(u)
         if (vec == null) { vec = new IntVec; byUser.put(u, vec) }
-        vec.add(r.getLong(1).toInt)
+        vec.add(codeOf(ids, r.getLong(1)))
         // n items so far: the new item pairs with the n-1 before it,
         // in both directions
         totalPairs += 2L * (vec.n - 1)
@@ -447,13 +325,13 @@ object ItemItem {
         val vecs = new Array[ByteVec](p)
         val prev = new Array[Long](p)
         val live = new Array[Boolean](p)
-        var curA = -1L
+        var curA = -1
         var t = 0
         var i = 0
         while (i < n) {
           val pk = batch(i)
-          val a = pk >>> 32
-          if (a != curA) { curA = a; t = targetOf(a.toInt, p) }
+          val a = (pk >>> 32).toInt
+          if (a != curA) { curA = a; t = targetOf(a, p) }
           var bv = vecs(t)
           if (bv == null) { bv = new ByteVec(64); vecs(t) = bv }
           var x = if (live(t)) pk - prev(t) else { live(t) = true; pk }
@@ -495,11 +373,10 @@ object ItemItem {
 
   /** One reduce partition of the kernel: decode every incoming chunk
     * into one primitive long array, sort, run-length scan, emit
-    * UnsafeRows. Bit-identical to the raw-row layout's result — the
-    * decoded union is the same pk multiset the rows carried, and the
-    * sort+scan is unchanged. */
+    * UnsafeRows. The decoded union is exactly the pk multiset the map
+    * side generated for this partition's source items. */
   private[graft] def decodeScanPartition(
-      blobs: Iterator[Array[Byte]], ni: NiLookup, k: Int)
+      blobs: Iterator[Array[Byte]], ids: Array[Long], counts: Array[Long], k: Int)
       : Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
     var buf = new Array[Long](1 << 13)
     var n = 0
@@ -508,7 +385,7 @@ object ItemItem {
       buf = r._1; n = r._2
     }
     java.util.Arrays.sort(buf, 0, n)
-    val out = scanSorted(buf, n, ni, k)
+    val out = scanSorted(buf, n, ids, counts, k)
     val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
       .create(outputSchema)
     val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(5)
@@ -519,7 +396,7 @@ object ItemItem {
     }
   }
 
-  /** Distinct capped (user, item) purchases — shared by both paths. */
+  /** Distinct capped (user, item) purchases. */
   private def cappedPurchases(t: Tables): DataFrame = {
     val ui = t.orders.select(col("o_orderkey"), col("o_custkey"))
       .hint("shuffle_hash")
@@ -533,146 +410,83 @@ object ItemItem {
       Seq("user"), "left_semi")
   }
 
-  /** Top-k item neighbors. `partCount`/`lineitemCount`/`customerCount`
-    * are the caller's memoized parquet-metadata probes (Long.MaxValue
-    * on error — fails CLOSED onto the legacy/default path). */
-  def neighbors(t: Tables, k: Int, niBroadcastLimit: Long,
-                partCount: Long, lineitemCount: Long,
+  /** Top-k item neighbors. `lineitemCount`/`customerCount` are the
+    * caller's memoized parquet-metadata probes (Long.MaxValue on error
+    * — the pair-volume estimate's fail-closed sentinel). */
+  def neighbors(t: Tables, k: Int, lineitemCount: Long,
                 customerCount: Long): DataFrame = {
-    val out = neighborsImpl(t, k, niBroadcastLimit, partCount,
-      lineitemCount, customerCount)
-    // rehearsal-scale scratch release: once the impl frame returns, the
-    // capped pipeline's QueryExecution (and with it every upstream
+    val out = neighborsImpl(t, k, lineitemCount, customerCount)
+    // scratch release: once the impl frame returns, the capped
+    // pipeline's QueryExecution (and with it every upstream
     // fact-join/distinct/cap ShuffleDependency) is unreachable — the
     // served frame roots only at the localCheckpoint blocks — but the
     // ContextCleaner only unregisters (and deletes) those shuffle files
-    // after a GC notices them, and with a rehearsal-sized heap the JVM
-    // may not GC before the emit has already written its own chunk
-    // shuffle on top (the sf30 ENOSPC stack-up). One explicit GC here
-    // frees the upstream tens of GB BEFORE the emit starts. Gated on a
-    // REAL pair estimate ≥ 2³⁰ (sf0.1's is ~24M; the sentinel is not a
-    // measurement), so gate-scale entries never pay the pause.
+    // after a GC notices them, and a large heap may not GC before the
+    // emit has written its own chunk shuffle on top. One explicit GC
+    // here frees the upstream shuffle files BEFORE the emit starts.
+    // Gated on a REAL pair estimate ≥ 2³⁰ (sf0.1's is ~24M; the
+    // sentinel is not a measurement), so small corpora never pay the
+    // pause.
     val est = pairsEstimate(lineitemCount, customerCount)
     if (est != Long.MaxValue && est >= (1L << 30)) System.gc()
     out
   }
 
-  private def neighborsImpl(t: Tables, k: Int, niBroadcastLimit: Long,
-                            partCount: Long, lineitemCount: Long,
+  private def neighborsImpl(t: Tables, k: Int, lineitemCount: Long,
                             customerCount: Long): DataFrame = {
     val s = t.spark
-    import s.implicits._
     val capped = cappedPurchases(t)
-    val ni = capped.groupBy(col("item")).agg(count(lit(1)).as("n_i"))
-
-    // kernel gate: the n_i table must fit the driver. The memoized
-    // part-table count is the cheap pre-check (same ceiling the legacy
-    // broadcast uses); corpora WITHOUT a part table (hand fixtures —
-    // partCount == MissingTable, distinguished from transient errors
-    // by the caller's shared CountMemo) fall through to the limit+1
-    // collect, whose driver footprint is bounded by construction even
-    // if the catalog turns out huge — the executors then did one
-    // wasted pass and legacy takes over.
-    if ((partCount >= 0 && partCount <= niBroadcastLimit)
-        || partCount == MissingTable) {
-      // one materialization of the capped purchases: without it the
-      // fact-join→distinct→cap subtree executes THREE times (the n_i
-      // collect job + once per self-join side — the alias rename
-      // defeats exchange reuse), measured as ~half the sf1 wall. The
-      // checkpoint is gated with the kernel, so it only ever pins a
-      // frame whose catalog already fit the driver table; Bench's
-      // inter-query hygiene (getPersistentRDDs.unpersist) reclaims it.
-      val cappedCp = capped.localCheckpoint()
-      // render the hook AFTER the checkpoint ran, so the string is the
-      // AQE-finalized executed plan (what PlanSpec asserts against)
-      lastKernelPlan = Some(capped.queryExecution.executedPlan.toString)
-      val niCp = cappedCp.groupBy(col("item")).agg(count(lit(1)).as("n_i"))
-      val rows = niCp.select(col("item").cast("long"), col("n_i"))
-        .limit(math.min(niBroadcastLimit + 1, Int.MaxValue.toLong).toInt)
+    // one materialization of the capped purchases: without it the
+    // fact-join→distinct→cap subtree executes once for the n_i collect
+    // and again for the pair emit. Bench's inter-query hygiene
+    // (getPersistentRDDs.unpersist) reclaims it.
+    val cappedCp = capped.localCheckpoint()
+    val (ids, counts) = codeTable(
+      cappedCp.groupBy(col("item")).agg(count(lit(1)).as("n_i"))
+        .select(col("item").cast("long"), col("n_i"))
         .collect()
-      val nonNull = rows.filter(!_.isNullAt(0))
-      val idsOk = nonNull.forall { r =>
-        val id = r.getLong(0); id >= 0 && id < (1L << 31)
+        .filter(!_.isNullAt(0)).map(r => (r.getLong(0), r.getLong(1))))
+    val bc = s.sparkContext.broadcast((ids, counts))
+    // encodePairBlobs needs every user's items in one partition. That
+    // is VERIFIED on the executed plan the checkpoint just ran, not
+    // assumed from the query's shape: an AQE skew-split semi-join
+    // leaves one user's items across slices, so that case (and any
+    // other unrecognized final shape) pays one explicit user exchange
+    // instead of silently dropping cross-slice pairs.
+    val userLocal = pairLocalityHolds(capped.queryExecution.executedPlan)
+    val defaultP = s.conf.get("spark.sql.shuffle.partitions").toInt
+    // the EMIT side scales with pair volume too: its task count is
+    // otherwise the cap semi-join's partition count, so pairs per map
+    // task would grow linearly with data. emitPartitions sizes the map
+    // side at ~32M pairs per task; when the checkpoint's ACTUAL
+    // partition count already meets it, nothing engages and the
+    // proven no-exchange path is untouched. Widening pays one slim
+    // (user, item) hash exchange, whose user locality holds by
+    // construction. (`.rdd` of a checkpointed frame is its stored
+    // RDD; it runs no job.)
+    val emitNeed = emitPartitions(
+      pairsEstimate(lineitemCount, customerCount), userLocal, defaultP)
+    val pairSrc0 = cappedCp.select(col("user"), col("item"))
+    val pairSrc =
+      if (!userLocal || emitNeed > cappedCp.rdd.getNumPartitions)
+        pairSrc0.repartition(math.max(emitNeed, defaultP), col("user"))
+      else pairSrc0
+    val p = pairPartitions(defaultP, lineitemCount, customerCount)
+    val rdd = org.apache.spark.sql.graftbridge.RowBridge
+      .toInternalRdd(pairSrc)
+      .mapPartitions(rows => encodePairBlobs(rows, bc.value._1, p))
+      .partitionBy(new IdPartitioner(p))
+      .mapPartitions { chunks =>
+        val (ids, counts) = bc.value
+        decodeScanPartition(chunks.map(_._2), ids, counts, k)
       }
-      if (rows.length > niBroadcastLimit || !idsOk) {
-        // catalog or id shape disqualified the kernel after the
-        // checkpoint already materialized — let legacy consume it
-        legacyNeighbors(t, cappedCp, niCp, k, niBroadcastLimit, partCount)
-      } else {
-        val ids = nonNull.map(_.getLong(0))
-        val counts = nonNull.map(_.getLong(1))
-        val bc = s.sparkContext.broadcast(buildLookup(ids, counts))
-        // directed pairs, BOTH orientations (the a<b + mirror form
-        // materializes the same d(u)² rows and then re-streams them),
-        // generated by pairGenRows straight off the user-partitioned
-        // checkpoint — a self-JOIN here would re-scan the checkpoint
-        // twice and pay a hash probe per emitted row for pairs the
-        // per-user double loop emits for free. The user-locality the
-        // loop requires is VERIFIED on the materialized plan, not
-        // assumed from its shape (pairLocalityHolds reads the executed
-        // QE the checkpoint just ran): an AQE skew-split semi-join
-        // leaves one user's items across slices, so that case (and any
-        // other unrecognized final shape) pays one explicit user
-        // exchange instead of silently dropping cross-slice pairs.
-        // (In Spark 4.1.2 OptimizeSkewedJoin additionally only matches
-        // joins whose children are BARE shuffle stages — the semi-join
-        // build side's agg/filter/project prevents a match today — but
-        // the guard does not RELY on that pattern-match detail
-        // surviving a Spark upgrade. graft.reco.forcePairExchange is
-        // the operator escape hatch: force the exchange on a Spark
-        // build where the positive proof can't be established.)
-        val forceExchange = s.conf
-          .getOption("graft.reco.forcePairExchange").exists(_.toBoolean)
-        val pairSrc0 = cappedCp.select(col("user"), col("item"))
-        val userLocal =
-          !forceExchange && pairLocalityHolds(capped.queryExecution)
-        val defaultP = s.conf.get("spark.sql.shuffle.partitions").toInt
-        // the EMIT side must scale with pair volume too: the emit
-        // stage's task count is otherwise pinned at the cap
-        // semi-join's partition count (spark.sql.shuffle.partitions,
-        // or fewer after AQE coalescing), so pairs per map task grow
-        // linearly with data — measured at the sf20 rehearsal: sf10
-        // 82M pairs/task ran clean, sf20 164M pairs/task hit a
-        // 139 GB-memory-spill cliff on the old raw-row sorter and,
-        // on the chunk encoder, would hold the whole slice's pair
-        // buffer on heap. emitPartitions sizes the map side from the
-        // same pairsEst (budget ~32M pairs/task ≈ 256 MB of packed
-        // longs); when the source's ACTUAL partition count already
-        // meets the budget — every gate-scale corpus — nothing
-        // engages and the guard-proven no-exchange path is untouched.
-        // Widening pays one slim (user, item) hash exchange whose
-        // locality encodePairBlobs needs holds by construction. A
-        // FAILED estimate (fail-closed sentinel, not a measurement)
-        // never converts the guard-proven no-exchange path into a
-        // wide shuffle (round-16 advice): sentinel + userLocal skips
-        // widening, sentinel + guard-refused caps the width at a
-        // small multiple of the session default.
-        val actualParts = cappedCp.rdd.getNumPartitions
-        val emitNeed = emitPartitions(
-          pairsEstimate(lineitemCount, customerCount), userLocal, defaultP)
-        val widenEmit = emitNeed > actualParts
-        lastPairSrcRepartitioned = Some(!userLocal || widenEmit)
-        lastPairExchangeCause = Some((!userLocal, widenEmit))
-        val pairSrc =
-          if (!userLocal || widenEmit)
-            pairSrc0.repartition(math.max(emitNeed, defaultP), col("user"))
-          else pairSrc0
-        val p = pairPartitions(defaultP, lineitemCount, customerCount)
-        val rdd = org.apache.spark.sql.graftbridge.RowBridge
-          .toInternalRdd(pairSrc)
-          .mapPartitions(rows => encodePairBlobs(rows, p))
-          .partitionBy(new IdPartitioner(p))
-          .mapPartitions(chunks =>
-            decodeScanPartition(chunks.map(_._2), bc.value, k))
-        org.apache.spark.sql.graftbridge.RowBridge
-          .ofInternalRows(s, rdd, outputSchema)
-      }
-    } else legacyNeighbors(t, capped, ni, k, niBroadcastLimit, partCount)
+    org.apache.spark.sql.graftbridge.RowBridge
+      .ofInternalRows(s, rdd, outputSchema)
   }
 
   /** The metadata-cheap directed-pair volume estimate L·(L/C) both
     * partition laws derive from — ONE definition so they can never
-    * diverge silently (they duplicated it verbatim through round 16).
+    * diverge silently.
     * Long.MaxValue is the fail-closed SENTINEL — failed probes or an
     * empty customer count, i.e. "no measurement exists" — and each
     * law chooses its own sentinel posture. A REAL estimate that
@@ -703,9 +517,8 @@ object ItemItem {
       pairsEstimate(lineitemCount, customerCount) / 16000000L).toInt)
 
   /** Map-side (pair-EMIT) partition NEED, same estimate but budgeted
-    * at ~32M pairs per map task: the emit task buffers Θ(pairs/task)
-    * (chunk buffers now, the raw-row shuffle sorter before round 17),
-    * and the measured zero-spill regime ended between 82M (sf10,
+    * at ~32M pairs per map task: the emit task works through
+    * Θ(pairs/task), and the measured zero-spill regime ended between 82M (sf10,
     * clean, 30g heap) and 164M (sf20, 139 GB mem-spill, 40g) pairs
     * per task — 32M is the measured sweet spot: sf20 measured 303 s
     * at 32 tasks, 162.6 s at 150 (this budget), 184.5 s at 300 (finer
@@ -714,7 +527,7 @@ object ItemItem {
     * the source's ACTUAL partition count, so gate-scale and
     * AQE-coalesced tiny corpora never pay the exchange.
     *
-    * Sentinel posture (round-16 advice): the sentinel is NOT a
+    * Sentinel posture: the sentinel is NOT a
     * measurement, so it must never convert the guard-PROVEN
     * no-exchange fast path into a 1024-wide shuffle on a corpus that
     * may be tiny — with `userLocal` the need is 0 (no widening; a
@@ -731,69 +544,4 @@ object ItemItem {
     if (pairsEst == Long.MaxValue) {
       if (userLocal) 0 else math.min(1024, 4 * math.max(1, defaultP))
     } else math.min(1024L, pairsEst / 32000000L).toInt
-
-  /** The shuffle-plan form — kept verbatim for catalogs past the
-    * driver ceiling or ids the packed-long kernel can't represent. */
-  private def legacyNeighbors(t: Tables, capped: DataFrame, ni: DataFrame,
-                              k: Int, niBroadcastLimit: Long,
-                              partCount: Long): DataFrame = {
-    // aggregate CANONICAL pairs only (a<b) — cosine is symmetric, so
-    // mirroring the aggregated relation afterwards costs O(distinct
-    // pairs) while halving the Σ d(u)² rows in the dominant shuffle.
-    // The denominators n_i deliberately do NOT ride that shuffle:
-    // grouping on bare (item, neighbor) keeps the pair rows two
-    // longs wide (~45% less shuffle volume than carrying both
-    // counts), and ni joins onto the aggregated CANONICAL pair frame
-    // below instead — broadcast at catalog sizes, a sort-free
-    // hash-join exchange of the O(distinct pairs)/2 side past the
-    // broadcast ceiling, either way off the dominant Σ d(u)² path.
-    // Every non-broadcast join is hinted sort-free: the frames (fact
-    // join, ui, pairs) are all large-and-flat, so each SMJ sort here
-    // is a full-frame spill for no merge benefit — the two full SORTS
-    // of the O(distinct pairs) frame (not the joins) were the first
-    // thing to exhaust executor spill space in the 100× rehearsal.
-    val half = capped.select(col("user"), col("item")).hint("shuffle_hash")
-      .join(capped.select(col("user"), col("item").as("neighbor")),
-        Seq("user"))
-      .filter(col("item") < col("neighbor"))
-      .groupBy(col("item"), col("neighbor"))
-      .agg(count(lit(1)).as("n_ab"))
-    // dual-path denominator attach, the g_pagerank precedent: below
-    // the bound the ni frame (≤ catalog rows; the part row count is
-    // parquet-metadata-cheap) broadcasts — zero pair-side exchange;
-    // past it an explicit broadcast would OOM the driver, so the
-    // joins go shuffle-hash. The gate must be explicit because the
-    // planner's STATIC estimate of ni (derived from the whole fact
-    // join) is catalog-size-blind: at the 100× rehearsal it planned
-    // sort-merge despite ni materializing at ~30 MB.
-    // MissingTable (-1) and MaxValue are both "size unknown" here: this
-    // path is reached with no trustworthy catalog count (the kernel's
-    // limit+1 probe may have just DISQUALIFIED the catalog as huge),
-    // so only a real 0 ≤ count ≤ limit may select the broadcast attach.
-    val niSmall = partCount >= 0 && partCount <= niBroadcastLimit
-    def attach(d: DataFrame): DataFrame =
-      if (niSmall) broadcast(d) else d.hint("shuffle_hash")
-    val halved = half
-      .join(attach(ni.select(col("item"), col("n_i").as("n_a"))),
-        Seq("item"))
-      .join(attach(ni.select(col("item").as("neighbor"),
-        col("n_i").as("n_b"))), Seq("neighbor"))
-    val co = halved.unionByName(halved.select(
-      col("neighbor").as("item"), col("item").as("neighbor"),
-      col("n_ab"), col("n_b").as("n_a"), col("n_a").as("n_b")))
-    val scored = co.withColumn("cosine",
-      col("n_ab").cast("double") /
-        sqrt((col("n_a") * col("n_b")).cast("double")))
-    // top-k via the bounded-heap aggregate (topk_tagged carries n_ab
-    // as payload): only k rows per item per partition reach the
-    // exchange, vs a window sort over every scored pair — at catalog
-    // scale that sort IS the query's cost. Ordering (cosine desc,
-    // neighbor asc) matches the heap's total order exactly.
-    scored.groupBy(col("item"))
-      .agg(expr(s"topk_tagged(neighbor, cosine, n_ab, $k)").as("topk"))
-      .select(col("item"), posexplode(col("topk")))
-      .select(col("item"), (col("pos") + 1).as("rank"),
-        col("col.item").as("neighbor"), col("col.payload").as("n_ab"),
-        col("col.score").as("cosine"))
-  }
 }

@@ -66,25 +66,13 @@ object Dedup {
   }
 
   /** The native one-pass signature expression (same slots, same bytes
-    * as sigExpr — MinhashSigSpec pins bit-equality; sigExpr below
-    * stays as the REFERENCE formulation the spec and the DuckDB
-    * oracle rendering are written against). */
+    * as the md5-HOF reference formulation that MinhashSigSpec pins it
+    * against and that DedupQueries.sigDuck renders for the DuckDB
+    * oracle). */
   private[graft] def minhashSig(arr: Column, k: Int): Column =
     org.apache.spark.sql.graftbridge.ColumnBridge.column(
       graft.functions.MinhashSig(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(arr), k))
-
-  /** k-slot min-hash signature expression over an array column: for
-    * each salt p in 0..k/4-1, digest every element once, then take
-    * the array_min of each of the 4 digest slices. Slot order is
-    * p-major: sig[j] = min over elements of slice (j%4) of
-    * md5(concat(j div 4, ':', element)). */
-  private[graft] def sigExpr(arrCol: String, k: Int): String =
-    s"""flatten(transform(
-       |  transform(sequence(0, ${k / 4 - 1}),
-       |    p -> transform($arrCol, g -> md5(concat(CAST(p AS STRING), ':', g)))),
-       |  hp -> transform(sequence(0, 3),
-       |    s -> array_min(transform(hp, h -> substr(h, s * 8 + 1, 8))))))""".stripMargin
 
   /** LSH banding: split the k-length signature into bands of r rows;
     * docs sharing any band hash become candidate pairs (one equi-join

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{TopKScores, TopKTagged, VecCosine, VecDot, VecSignBucket}
+import graft.functions.{TopKScores, VecCosine, VecDot, VecSignBucket}
 
 /** Engine extension point, wired via `spark.sql.extensions`
   * (GraftSession sets it). Registers the native vector expressions so
@@ -14,7 +14,11 @@ import graft.functions.{TopKScores, TopKTagged, VecCosine, VecDot, VecSignBucket
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     def info(name: String, usage: String) =
-      new ExpressionInfo(classOf[VecDot].getName, null, name, usage, "")
+      // (className, db, name, usage, arguments, examples, note, group,
+      // since, deprecated, source): the same empty fields the
+      // deprecated five-argument form fills in
+      new ExpressionInfo(classOf[VecDot].getName, null, name, usage,
+        "", "", "", "", "", "", "")
     ext.injectFunction((
       FunctionIdentifier("vec_dot"),
       info("vec_dot", "vec_dot(a, b) - dot product of two float/double array columns"),
@@ -87,10 +91,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         }
         graft.functions.CharNgrams(args(0), n)
       }))
-    ext.injectFunction((
-      FunctionIdentifier("topk_tagged"),
-      info("topk_tagged",
-        "topk_tagged(item, score, payload, k) - topk_scores with an opaque bigint payload per entry"),
-      (args: Seq[Expression]) => TopKTagged(args(0), args(1), args(2), args(3))))
   }
 }

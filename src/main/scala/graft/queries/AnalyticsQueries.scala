@@ -115,7 +115,7 @@ object AnalyticsQueries {
       val ndv = stats.attributeStats.map { case (a, st) =>
         a.name -> st.distinctCount.map(_.toLong).getOrElse(-1L) }
       val exact = ss.table(tn)
-        .agg(countDistinct(col("o_orderkey")), countDistinct(col("o_orderstatus"))).head
+        .agg(countDistinct(col("o_orderkey")), countDistinct(col("o_orderstatus"))).head()
       val (ek, es) = (exact.getLong(0), exact.getLong(1))
       ss.sql(s"DROP TABLE $tn")
       import s.implicits._

@@ -22,7 +22,7 @@ object DedupQueries {
     * JVM lowers ASCII 'I' to U+0131 inside non-ASCII strings) — the
     * gate must certify exactly the domain that gets packed. One
     * early-exit scan per JVM + dir + file-listing fingerprint; shared
-    * CountMemo sentinel convention (see Similarity/Reco): the result
+    * CountMemo sentinel convention (see Similarity/Graph): the result
     * here is a FOUND-WIDE-CHARS count (0 = packable, 1 = wide — both
     * legitimate, both memoized), and Long.MaxValue marks a FAILED
     * probe, which fails CLOSED onto the always-correct string path
@@ -330,8 +330,9 @@ object DedupQueries {
 
   private[queries] val norm = """regexp_replace(trim(lower(text)), '\s+', ' ', 'g')"""
 
-  /** DuckDB rendering of Dedup.sigExpr: k min-hash slots from k/4
-    * salted md5 passes, each digest sliced into four 32-bit hashes. */
+  /** DuckDB rendering of the minhash signature (MinhashSig): k
+    * min-hash slots from k/4 salted md5 passes, each digest sliced
+    * into four 32-bit hashes. */
   private[queries] def sigDuck(arr: String, k: Int): String =
     s"""flatten(list_transform(
        |  list_transform(range(0, ${k / 4}), p -> list_transform($arr, g -> md5(concat(p, ':', g)))),

@@ -27,26 +27,6 @@ object Reco {
 
   private val K = 5
 
-  /** The reco_item_item gate + sizing probes: the part count gates
-    * the kernel/broadcast path; the lineitem and customer counts
-    * (GraftSession.rowCount, shared with the other probes of those
-    * files) feed the kernel's pair-volume estimate. Each is one count
-    * job per JVM + dir + file-listing fingerprint (a dir regenerated
-    * larger in this JVM re-probes instead of serving the stale small
-    * count to the gate). A transient read error returns Long.MaxValue
-    * for THIS call — failing CLOSED onto the size-safe path (legacy
-    * shuffle, or the kernel's upper partition clamp), never onto a
-    * driver-OOM broadcast or an under-split task — and the next call
-    * re-probes. The part memo distinguishes a PROVABLY-missing table
-    * (hand fixtures without a part table → MissingTable, the kernel
-    * then sizes via its bounded limit+1 collect) from a transient
-    * error (MaxValue → legacy), so the kernel gate shares this memo's
-    * staleness model instead of carrying its own exists() probe. */
-  private val partCounts = new GraftSession.CountMemo(
-    onError = Long.MaxValue, onMissing = graft.ml.ItemItem.MissingTable)
-  private def partCountFor(t: Tables): Long =
-    partCounts(t.spark, s"${t.dir}/part.parquet")(t.part.count())
-
   private def sampleUsers(s: SparkSession, dir: String): DataFrame =
     Recommender.interactions(Tables(s, dir))
       .select("user").distinct().filter(col("user") % 100 === 0)
@@ -301,21 +281,15 @@ object Reco {
     "reco_item_item" -> ((s, dir) => {
       // item-item collaborative filtering on binary co-purchase — the
       // memory-based neighbor model that serves "customers also
-      // bought" without any trained factors. Implementation, scale
-      // design and the packed-pair kernel vs legacy shuffle plan:
-      // graft.ml.ItemItem. The pair build self-joins on user (cost
-      // Σ_u d(u)², bounded by the ≤1000-item degree cap); the
-      // shuffle_hash hint is load-bearing — sort-merge merge-steps
-      // the many-to-many duplicate-key groups that fan out to
-      // Σ d(u)² output rows, while a per-partition hash build of the
-      // (bounded, degree-capped) user side streams the probe straight
-      // through codegen — measured 6.0 s → 3.6 s at sf0.1.
+      // bought" without any trained factors. Implementation and scale
+      // design (the packed-pair kernel): graft.ml.ItemItem. The
+      // lineitem and customer counts (GraftSession.rowCount: one count
+      // job per JVM + file listing, shared with the other probes of
+      // those files; Long.MaxValue on a read error) feed the kernel's
+      // pair-volume estimate, which sizes its exchanges.
       val t = Tables(s, dir)
-      val niBroadcastLimit =
-        s.conf.getOption("graft.reco.niBroadcastLimit").map(_.toLong)
-          .getOrElse(4_000_000L)
-      graft.ml.ItemItem.neighbors(t, K, niBroadcastLimit,
-        partCountFor(t), GraftSession.rowCount(t, "lineitem", Long.MaxValue),
+      graft.ml.ItemItem.neighbors(t, K,
+        GraftSession.rowCount(t, "lineitem", Long.MaxValue),
         GraftSession.rowCount(t, "customer", Long.MaxValue))
     }))
 

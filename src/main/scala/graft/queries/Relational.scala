@@ -661,7 +661,7 @@ object Relational {
           StructField("c_custkey", LongType, nullable = false),
           StructField(rankName, LongType, nullable = false)))
         s.createDataFrame(
-          ordered.rdd.zipWithIndex.map { case (row, i) =>
+          ordered.rdd.zipWithIndex().map { case (row, i) =>
             Row(row.getLong(0), i + 1)
           }, schema)
       }

@@ -317,7 +317,7 @@ object ScaleOps {
           col("o_orderkey"), col("o_orderpriority"))
       // cutoff = max order date - 180 days (1-row bounded collect —
       // stand-in for the load watermark a production run would carry)
-      val cutRow = ord.agg(max(col("valid_from"))).head
+      val cutRow = ord.agg(max(col("valid_from"))).head()
       // empty orders: no watermark exists — any cutoff partitions the
       // (empty) history and delta identically, so pick a fixed epoch
       // instead of crashing on the typed get
@@ -688,7 +688,7 @@ object ScaleOps {
       // layout instead, which yields the correct 0-row aggregate
       val pruned =
         if (survivors.isEmpty) s.read.parquet(out).filter(lit(false))
-        else s.read.parquet(survivors: _*)
+        else s.read.parquet(survivors.toIndexedSeq: _*)
       pruned
         .filter(col("l_orderkey").between(lo, hi))
         .agg(count(lit(1)).as("n_rows"),
@@ -1019,7 +1019,7 @@ object ScaleOps {
           else graft.etl.ManifestLedger.read(ledgerRoot, head, conf).toSet
         val newFiles = srcFiles.filterNot(known)
         val n = if (newFiles.isEmpty) 0L
-          else s.read.parquet(newFiles: _*).count()
+          else s.read.parquet(newFiles.toIndexedSeq: _*).count()
         if (newFiles.nonEmpty)
           graft.etl.ManifestLedger.commitWithRetry(ledgerRoot, conf)(current =>
             (current ++ newFiles.filterNot(current.toSet)).sorted)

@@ -78,8 +78,8 @@ object Similarity {
   // exists, a shuffle-replicated nested loop (partitioned cartesian —
   // nothing routes through the driver) for the brute/assignment scans
   // whose all-pairs shape is the declared semantics. Mirrors
-  // Recommender.MaxQueryUsers and the fail-closed Reco.partCountFor
-  // gate; both paths of every gated entry are pinned by AnnGateSpec.
+  // Recommender.MaxQueryUsers and the fail-closed GraftSession.CountMemo
+  // probes; both paths of every gated entry are pinned by AnnGateSpec.
 
   /** Broadcast ceiling in ROWS of the (possibly probe-exploded)
     * broadcast frame: 100k rows × ~300 B packed vector ≈ 30 MB.

@@ -638,7 +638,7 @@ object EventStream {
             col("value"), col("ts"))
         // empty events: no watermark epoch exists — any cut splits the
         // empty stream into three empty chunks, so epoch 0 serves
-        val maxRow = ev.agg(max(col("ts"))).head
+        val maxRow = ev.agg(max(col("ts"))).head()
         val maxTs = if (maxRow.isNullAt(0)) 0L else maxRow.getTimestamp(0).getTime
         val cut1 = new java.sql.Timestamp(maxTs - 12L * 3600 * 1000)
         val cut2 = new java.sql.Timestamp(maxTs - 6L * 3600 * 1000)

@@ -17,9 +17,9 @@ object StageProf {
     val names = args.lift(1).map(_.split(",").toSeq).getOrElse(Seq("reco_item_item"))
     val spark = graft.core.GraftSession.local("graft-stageprof")
     // GRAFT_PROF_CONF="k=v[,k=v...]": session conf overrides (same as
-    // PlanDump's GRAFT_PLANDUMP_CONF) — rehearsals need conf-gated
-    // paths (e.g. graft.reco.niBroadcastLimit past the 4M default at
-    // sf30's 6M-item catalog) without code edits.
+    // PlanDump's GRAFT_PLANDUMP_CONF) — rehearsals set Spark confs
+    // (e.g. spark.sql.shuffle.partitions, or the broadcast threshold
+    // that picks the graph loop's layout) without code edits.
     sys.env.get("GRAFT_PROF_CONF").toSeq
       .flatMap(_.split(",")).map(_.split("=", 2))
       .collect { case Array(k, v) => (k, v) }

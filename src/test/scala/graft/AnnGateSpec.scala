@@ -81,19 +81,16 @@ class AnnGateSpec extends SparkSpec {
     assert(nBig / ivfStep(nBig) <= 40000L)
   }
 
-  test("CountMemo: onMissing distinguishes a provably-absent table from " +
-      "a transient error, and is never cached") {
-    // the shared gate memo (ANN embeddings gate, item-item kernel
-    // gate): missing table → onMissing without running compute;
-    // compute failure on an EXISTING path → onError, not memoized;
-    // a table created later is seen on the next call
-    val memo = new graft.core.GraftSession.CountMemo(
-      onError = Long.MaxValue, onMissing = -1L)
+  test("CountMemo: a failed probe returns onError and is never cached; " +
+      "a table created later is seen on the next call") {
+    // the shared gate memo (ANN embeddings gate, graph node bounds,
+    // item-item pair-volume probes): only successful counts memoize
+    val memo = new graft.core.GraftSession.CountMemo(onError = Long.MaxValue)
     val tmp = java.nio.file.Files.createTempDirectory("graft_memo").toString
     val path = s"$tmp/t.parquet"
     var computed = 0
-    assert(memo(spark, path) { computed += 1; 7L } == -1L)
-    assert(computed == 0, "compute must not run for a missing table")
+    // missing table: the probe fails → onError, nothing memoized
+    assert(memo(spark, path) { sys.error("missing") } == Long.MaxValue)
     // existing path, failing compute → onError for this call only
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
     assert(memo(spark, path) { sys.error("transient") } == Long.MaxValue)

@@ -16,8 +16,7 @@ object ClustersProps extends Properties("clusters") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(6)
 
-  private lazy val spark =
-    graft.core.GraftSession.builder("graft-test", "4").master("local[4]").getOrCreate()
+  private lazy val spark = SparkSpec.session
 
   private val genEdges: Gen[List[(Long, Long)]] = for {
     n <- Gen.choose(2, 30)

@@ -358,6 +358,32 @@ class ComposedOpsSpec extends SparkSpec {
       (3L, 1) -> ((1L, 1L, 1.0 / math.sqrt(3.0)))))
   }
 
+  test("reco_item_item: ids of any range (negative, ≥ 2³¹, null) match a " +
+      "brute-force reference") {
+    val d = java.nio.file.Files.createTempDirectory("graft_ii_ids").toString
+    val rnd = new scala.util.Random(31)
+    val pool = Array(Long.MinValue, -(1L << 40), -7L, -1L, 0L, 1L, 2L, 5L,
+      (1L << 31) - 1, 1L << 31, (1L << 31) + 1, 3000000000L, 1L << 40,
+      Long.MaxValue - 2, Long.MaxValue)
+    // 60 users with one order each: 1..8 lines from the pool, about one
+    // in ten without a part
+    val orders = (1 to 60).map(u => (100L + u, u.toLong))
+    val lines = orders.flatMap { case (o, _) =>
+      Seq.fill(1 + rnd.nextInt(8))(
+        if (rnd.nextInt(10) == 0) None else Some(pool(rnd.nextInt(pool.length))))
+        .map(i => (o, i))
+    }
+    // a user past the degree cap: every pool item plus enough others
+    // for 1001 distinct items — none of them may count toward n_i
+    val capped = (pool.toSeq ++ (0 until 1001 - pool.length).map(i => (1L << 33) + i))
+      .map(i => (999L, Option(i)))
+    val purchases = ItemItemRef.writeFixture(spark, d,
+      orders :+ ((999L, 999L)), lines ++ capped)
+    val got = ItemItemRef.collectSorted(SparkEntry.queries("reco_item_item")(spark, d))
+    assert(got.nonEmpty)
+    assert(got == ItemItemRef.neighbors(purchases, 5))
+  }
+
   test("w13_rfm: quintile formula and distributed ranks on 10 customers") {
     val d = java.nio.file.Files.createTempDirectory("graft_rfm_fix").toString
     def ts(day: Int) = java.sql.Timestamp.valueOf(f"2024-01-$day%02d 00:00:00")
@@ -484,31 +510,6 @@ class ComposedOpsSpec extends SparkSpec {
     assert(r.getLong(0) == 150000L)
     assert(r.getDouble(1) == lo && r.getDouble(2) == hi)
     assert(r.getDouble(3) == (lo + hi) / 2)
-  }
-
-  test("topk_tagged: equals the window formulation, payload rides intact") {
-    // randomized: 5k rows, 40 groups, scores with deliberate ties —
-    // the heap's (score desc, item asc) order must reproduce
-    // row_number() exactly, with each row's payload untouched
-    val rnd = new scala.util.Random(7)
-    val rows = (1 to 5000).map { i =>
-      (rnd.nextInt(40).toLong, i.toLong, rnd.nextInt(50).toDouble, rnd.nextLong())
-    }
-    val df = rows.toDF("g", "item", "score", "payload")
-    val agg = df.groupBy(col("g"))
-      .agg(expr("topk_tagged(item, score, payload, 7)").as("tk"))
-      .select(col("g"), posexplode(col("tk")))
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1)) -> {
-        val s = r.getStruct(2); (s.getLong(0), s.getDouble(1), s.getLong(2))
-      }).toMap
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("g")).orderBy(col("score").desc, col("item"))
-    val win = df.withColumn("rk", row_number().over(w) - 1).filter(col("rk") < 7)
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(4)) ->
-        ((r.getLong(1), r.getDouble(2), r.getLong(3)))).toMap
-    assert(agg == win)
   }
 
   test("tx_split: assignment is the md5-bucket pure function of doc_id") {

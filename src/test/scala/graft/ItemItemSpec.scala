@@ -4,21 +4,29 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ml.ItemItem
 
 /** Unit laws of the item-item kernel primitives (the query-level
-  * result is pinned by ComposedOpsSpec's hand-computed fixture and the
-  * DuckDB oracle; these cover the primitive structures directly —
-  * both n_i lookup layouts and the sorted-scan's count, cosine and
-  * tie-break semantics against a brute-force reference). */
+  * result is pinned by ComposedOpsSpec's fixtures and the DuckDB
+  * oracle; these cover the primitive structures directly — the item
+  * code table, the wire format, the pair encoder and the sorted-scan's
+  * count, cosine and tie-break semantics against a brute-force
+  * reference). */
 class ItemItemSpec extends AnyFunSuite {
 
-  test("buildLookup: dense and sparse layouts agree on every id") {
-    val ids = Array(1L, 3L, 7L, 8L, 200L)
-    val counts = Array(5L, 2L, 9L, 1L, 4L)
-    val dense = ItemItem.buildLookup(ids.take(4), counts.take(4)) // compact → dense
-    val sparse = ItemItem.buildLookup(ids, counts) // id 200 ≫ 4n → hash
-    for (i <- 0 until 4)
-      assert(dense.get(ids(i)) == counts(i))
-    for (i <- ids.indices)
-      assert(sparse.get(ids(i)) == counts(i))
+  test("item codes: ids round-trip, and codes keep id order") {
+    val rnd = new scala.util.Random(11)
+    val edge = Array(Long.MinValue, -(1L << 40), -1L, 0L, (1L << 31) - 1,
+      1L << 31, 1L << 32, Long.MaxValue)
+    val idSet = (edge ++ Array.fill(200)(rnd.nextLong())).distinct
+    val rows = rnd.shuffle(idSet.toSeq).map(id => (id, id & 0xFFFFL)).toArray
+    val (ids, counts) = ItemItem.codeTable(rows)
+    assert(ids.length == idSet.length)
+    for ((id, n) <- rows) {
+      val c = ItemItem.codeOf(ids, id)
+      assert(ids(c) == id && counts(c) == n, s"id $id")
+    }
+    for (x <- idSet; y <- idSet)
+      assert((x < y) == (ItemItem.codeOf(ids, x) < ItemItem.codeOf(ids, y)), s"$x vs $y")
+    // an item outside the table is a bug, never a silent wrong code
+    intercept[IllegalStateException](ItemItem.codeOf(ids, 12345L))
   }
 
   test("scanSorted matches a brute-force count+rank on random pair streams") {
@@ -26,18 +34,18 @@ class ItemItemSpec extends AnyFunSuite {
     for (trial <- 1 to 20) {
       val nItems = 2 + rnd.nextInt(12)
       val ni = Array.tabulate(nItems)(i => 1L + rnd.nextInt(50))
-      val ids = Array.tabulate(nItems)(_.toLong)
-      val lookup = ItemItem.buildLookup(ids, ni)
-      // random directed pair multiset (a ≠ b)
+      // ascending ids of any range; code i is ids(i)
+      val ids = Array.fill(nItems)(rnd.nextLong()).distinct.sorted
+      // random directed code-pair multiset (a ≠ b)
       val pairs = Array.fill(rnd.nextInt(400)) {
-        val a = rnd.nextInt(nItems)
-        var b = rnd.nextInt(nItems)
-        if (b == a) b = (b + 1) % nItems
+        val a = rnd.nextInt(ids.length)
+        var b = rnd.nextInt(ids.length)
+        if (b == a) b = (b + 1) % ids.length
         (a.toLong << 32) | b.toLong
       }
       val k = 1 + rnd.nextInt(4)
       val sorted = pairs.clone(); java.util.Arrays.sort(sorted)
-      val got = ItemItem.scanSorted(sorted, sorted.length, lookup, k)
+      val got = ItemItem.scanSorted(sorted, sorted.length, ids, ni, k)
         .map { case (a, r, b, n, c) => (a, r) -> ((b, n, c)) }.toMap
       // brute force
       val counts = pairs.groupBy(identity).map { case (pk, v) =>
@@ -45,9 +53,9 @@ class ItemItemSpec extends AnyFunSuite {
       }
       val want = counts.groupBy(_._1._1).flatMap { case (a, m) =>
         m.toSeq.map { case ((_, b), n) =>
-          (b, n, n.toDouble / math.sqrt((ni(a.toInt) * ni(b.toInt)).toDouble))
+          (ids(b.toInt), n, n.toDouble / math.sqrt((ni(a.toInt) * ni(b.toInt)).toDouble))
         }.sortBy { case (b, _, c) => (-c, b) }.take(k).zipWithIndex.map {
-          case ((b, n, c), i) => (a, i + 1) -> ((b, n, c))
+          case ((b, n, c), i) => (ids(a.toInt), i + 1) -> ((b, n, c))
         }
       }
       assert(got == want, s"trial $trial")
@@ -116,7 +124,7 @@ class ItemItemSpec extends AnyFunSuite {
   test("encodeChunk/decodeChunk: multiset-exact roundtrip on random pair streams") {
     val rnd = new scala.util.Random(4217)
     for (trial <- 1 to 50) {
-      // pk shape the kernel ships: two 31-bit ids packed — exercise
+      // pk shape the kernel ships: two 31-bit codes packed — exercise
       // small gaps, huge gaps (item transitions) and duplicates
       val n = rnd.nextInt(2000)
       val pks = Array.fill(n) {
@@ -128,7 +136,7 @@ class ItemItemSpec extends AnyFunSuite {
       if (n > 10 && trial % 3 == 0)
         for (i <- 1 until n if rnd.nextBoolean()) pks(i) = pks(i - 1)
       val want = pks.clone().sorted.toSeq
-      val bytes = ItemItem.encodeChunk(pks.clone(), n)
+      val bytes = ItemItemRef.encodeChunk(pks.clone(), n)
       val (buf, m) = ItemItem.decodeChunk(bytes, new Array[Long](4), 0)
       assert(m == n, s"trial $trial: count")
       assert(buf.take(m).toSeq == want, s"trial $trial: multiset")
@@ -138,27 +146,30 @@ class ItemItemSpec extends AnyFunSuite {
     }
     // boundary pks: 0, max packed value, singleton, empty
     val edge = Array(0L, (0x7FFFFFFFL << 32) | 0x7FFFFFFFL, 1L, 0L)
-    val eb = ItemItem.encodeChunk(edge.clone(), 4)
+    val eb = ItemItemRef.encodeChunk(edge.clone(), 4)
     val (dbuf, dn) = ItemItem.decodeChunk(eb, new Array[Long](1), 0)
     assert(dbuf.take(dn).toSeq == edge.sorted.toSeq)
-    assert(ItemItem.encodeChunk(new Array[Long](0), 0).isEmpty)
+    assert(ItemItemRef.encodeChunk(new Array[Long](0), 0).isEmpty)
   }
 
   test("encodePairBlobs: chunks reconstruct exactly the directed pair multiset, " +
       "keyed by targetOf") {
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-    // purchases: user → items (with a null item that must never pair)
+    // purchases: user → items (with a null item that must never pair);
+    // ids of any range, coded by their rank among the distinct ids
     val purchases: Seq[(Long, java.lang.Long)] = Seq(
-      (1L, 10L), (1L, 11L), (1L, 12L),
-      (2L, 10L), (2L, 11L),
+      (1L, 10L), (1L, -11L), (1L, 1L << 40),
+      (2L, 10L), (2L, -11L),
       (3L, 99L), // singleton: no pairs
       (4L, null), (4L, 20L), (4L, 21L))
+    val ids = purchases.flatMap(p => Option(p._2)).map(_.longValue).distinct.sorted.toArray
+    def code(item: java.lang.Long): Long = ids.indexOf(item.longValue).toLong
     val rows = purchases.map { case (u, i) =>
       new GenericInternalRow(Array[Any](u, i)).asInstanceOf[
         org.apache.spark.sql.catalyst.InternalRow]
     }
     for (p <- Seq(1, 3, 8)) {
-      val chunks = ItemItem.encodePairBlobs(rows.iterator, p).toList
+      val chunks = ItemItem.encodePairBlobs(rows.iterator, ids, p).toList
       // every chunk keyed by the targetOf of every pk it carries
       val decoded = chunks.flatMap { case (t, bytes) =>
         val (buf, n) = ItemItem.decodeChunk(bytes, new Array[Long](4), 0)
@@ -169,7 +180,7 @@ class ItemItemSpec extends AnyFunSuite {
       }
       val want = (for {
         (u, items) <- purchases.filter(_._2 != null).groupBy(_._1).toSeq
-        a <- items.map(_._2.longValue); b <- items.map(_._2.longValue)
+        a <- items.map(i => code(i._2)); b <- items.map(i => code(i._2))
         if a != b
       } yield (a << 32) | b).sorted
       assert(decoded.sorted == want.toList, s"p=$p multiset")
@@ -181,7 +192,7 @@ class ItemItemSpec extends AnyFunSuite {
     // an encoding detail). batchCap 4 < user 1's 6 pairs also
     // exercises the grow-don't-corrupt path for an over-cap user.
     for (p <- Seq(1, 3)) {
-      val chunks = ItemItem.encodePairBlobs(rows.iterator, p, batchCap = 4L).toList
+      val chunks = ItemItem.encodePairBlobs(rows.iterator, ids, p, batchCap = 4L).toList
       val decoded = chunks.flatMap { case (t, bytes) =>
         val (buf, n) = ItemItem.decodeChunk(bytes, new Array[Long](4), 0)
         buf.take(n).toList.map { pk =>
@@ -191,7 +202,7 @@ class ItemItemSpec extends AnyFunSuite {
       }
       val want = (for {
         (u, items) <- purchases.filter(_._2 != null).groupBy(_._1).toSeq
-        a <- items.map(_._2.longValue); b <- items.map(_._2.longValue)
+        a <- items.map(i => code(i._2)); b <- items.map(i => code(i._2))
         if a != b
       } yield (a << 32) | b).sorted
       assert(decoded.sorted == want.toList, s"p=$p multi-batch multiset")
@@ -202,12 +213,14 @@ class ItemItemSpec extends AnyFunSuite {
   }
 
   test("scanSorted tie-break: equal cosine prefers the smaller neighbor") {
-    // items 1..3 each with n_i = 4; pairs (0,1),(0,2),(0,3) each once:
-    // identical cosines — top-2 must be neighbors 1 and 2
-    val lookup = ItemItem.buildLookup(Array(0L, 1L, 2L, 3L), Array(4L, 4L, 4L, 4L))
+    // codes 0..3 (ids -5, 7, 2³¹, 2⁴⁰) each with n_i = 4; pairs
+    // (0,1),(0,2),(0,3) each once: identical cosines — top-2 must be
+    // the two smallest neighbor ids
+    val ids = Array(-5L, 7L, 1L << 31, 1L << 40)
     val buf = Array((0L << 32) | 3L, (0L << 32) | 1L, (0L << 32) | 2L)
     java.util.Arrays.sort(buf)
-    val out = ItemItem.scanSorted(buf, 3, lookup, 2)
-    assert(out.map(r => (r._2, r._3)).toList == List((1, 1L), (2, 2L)))
+    val out = ItemItem.scanSorted(buf, 3, ids, Array(4L, 4L, 4L, 4L), 2)
+    assert(out.map(r => (r._1, r._2, r._3)).toList ==
+      List((-5L, 1, 7L), (-5L, 2, 1L << 31)))
   }
 }

@@ -21,6 +21,18 @@ class PlanSpec extends SparkSpec {
   private def finalPlan(name: String): String =
     executedPlan(name).split("== Initial Plan ==").head
 
+  /** The executed plan of reco_item_item's capped-purchases checkpoint
+    * (fact join → distinct → degree cap), captured as its
+    * localCheckpoint action: the kernel's served plan is the RDD wrap,
+    * so the join-bearing pipeline is visible only as that action. */
+  private def kernelPurchasesPlan(): org.apache.spark.sql.execution.SparkPlan = {
+    val (_, plans) = ActionPlans.of(spark, "localCheckpoint", 1) {
+      SparkEntry.queries("reco_item_item")(spark, dir)
+    }
+    assert(plans.size == 1, s"expected one checkpoint action, saw ${plans.size}")
+    plans.head.head
+  }
+
   test("p1: projection prunes the parquet scan to the selected columns") {
     val plan = executedPlan("p1_projection")
     assert(plan.contains("ReadSchema: struct<c_custkey:bigint,c_mktsegment:string>"), plan)
@@ -108,13 +120,8 @@ class PlanSpec extends SparkSpec {
   test("new join-family ops: candidate joins are equi, nested loops only for 1-row scalars") {
     for (name <- Seq("g_triangle_count", "reco_item_item", "dd_containment")) {
       val plan =
-        if (name == "reco_item_item") {
-          // the kernel's served plan is the RDD wrap; the join-bearing
-          // pipeline is the checkpointed purchases build (test hook)
-          SparkEntry.queries(name)(spark, dir).collect()
-          graft.ml.ItemItem.lastKernelPlan
-            .getOrElse(fail("kernel did not engage"))
-        } else finalPlan(name)
+        if (name == "reco_item_item") kernelPurchasesPlan().toString
+        else finalPlan(name)
       assert(!plan.contains("CartesianProduct"), s"$name:\n$plan")
       // a BroadcastNestedLoopJoin is tolerable ONLY as the explicit
       // Cross attach of a 1-row aggregate (crossJoin(broadcast(_))) —
@@ -220,28 +227,13 @@ class PlanSpec extends SparkSpec {
   test("reco_item_item: default path is the packed-pair kernel, no pair sort") {
     // the kernel's result surface is the RowBridge RDD wrap — the
     // pair pipeline lives in the RDD lineage, so the pin here is that
-    // the kernel ENGAGED (ExistingRDD scan) and that no window sort
-    // or heap-agg tail leaked back into the served plan
+    // the kernel ENGAGED (ExistingRDD scan) and that no window sort,
+    // aggregate or exchange leaked back into the served plan
     val plan = finalPlan("reco_item_item")
     assert(plan.contains("ExistingRDD"), plan)
     assert(!plan.contains("Window"), plan)
-    assert(!plan.contains("topk_tagged"), plan)
-  }
-
-  test("reco_item_item: legacy path (catalog past the driver ceiling) " +
-      "keeps the heap agg + sort-free hash joins") {
-    // force the legacy branch the way a >4M-item catalog would
-    spark.conf.set("graft.reco.niBroadcastLimit", "-1")
-    try {
-      val q = SparkEntry.queries("reco_item_item")(spark, dir)
-      q.collect()
-      val plan = q.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      assert(plan.contains("partial_topk_tagged"), plan)
-      assert(!plan.contains("Window"), plan)
-      assert(plan.contains("ShuffledHashJoin"), plan)
-      assert(!plan.contains("SortMergeJoin"), plan)
-    } finally spark.conf.unset("graft.reco.niBroadcastLimit")
+    assert(!plan.contains("Aggregate"), plan)
+    assert(!plan.contains("Exchange"), plan)
   }
 
   test("j10_interval_join: sweep-line form — broadcast lookups, no pair join") {
@@ -263,25 +255,20 @@ class PlanSpec extends SparkSpec {
     // SMJ merge-steps the many-to-many duplicate-key groups and its
     // full-frame sorts were the first thing to exhaust spill in the
     // 100× rehearsal — keep the hints pinned so an AQE demotion can't
-    // quietly revert them. The kernel's served plan is the RDD wrap,
-    // so the pin reads the capped-purchases QueryExecution (the
-    // checkpointed fact-join → distinct → degree-cap pipeline)
-    // through the ItemItem test hook.
-    SparkEntry.queries("reco_item_item")(spark, dir).collect()
-    val plan = graft.ml.ItemItem.lastKernelPlan
-      .getOrElse(fail("kernel did not engage"))
+    // quietly revert them.
+    val plan = kernelPurchasesPlan().toString
     assert(plan.contains("ShuffledHashJoin"), plan)
     assert(!plan.contains("SortMergeJoin"), plan)
   }
 
   test("reco_item_item: broadcast-gate probe is memoized — one count job per JVM+dir") {
-    // the gate reads parquet-metadata counts (part = kernel ceiling,
-    // lineitem/customer = pair-volume estimate); on a serving path an
-    // unmemoized probe is one needless job per call. Construct once to
-    // populate the caches, then pin that FURTHER constructions run
-    // ZERO count jobs. (The kernel path's bounded n_i collect and
-    // checkpoint — the entry's model build, the ALS-family precedent —
-    // DO run at construction; they are not count jobs.)
+    // the kernel reads parquet-metadata counts (lineitem/customer =
+    // pair-volume estimate); on a serving path an unmemoized probe is
+    // one needless job per call. Construct once to populate the
+    // caches, then pin that FURTHER constructions run ZERO count jobs.
+    // (The kernel's n_i collect and checkpoint — the entry's model
+    // build, the ALS-family precedent — DO run at construction; they
+    // are not count jobs.)
     SparkEntry.queries("reco_item_item")(spark, dir) // warm the cache
     // parquet-footer schema reads ("parquet at Tables.scala") run on
     // EVERY construction and are not the probe; only count() jobs are
@@ -309,17 +296,25 @@ class PlanSpec extends SparkSpec {
   test("reco_item_item: kernel trusts the reported hash(user) partitioning " +
       "— no safety exchange on the normal path") {
     // encodePairBlobs requires every user's items partition-local; the
-    // kernel VERIFIES the checkpoint's reported partitioning instead
-    // of assuming the semi-join's plan shape (AQE's skew-join split
-    // breaks it and reports Unknown). Pin both directions: the normal
-    // run must NOT pay the repartition(user) fallback, and the guard
-    // itself must discriminate real partitionings.
-    graft.ml.ItemItem.lastPairSrcRepartitioned = None
-    SparkEntry.queries("reco_item_item")(spark, dir).collect()
-    assert(graft.ml.ItemItem.lastPairSrcRepartitioned.contains(false),
-      "kernel took the safety exchange (or did not engage) on a " +
-        "normally-partitioned corpus: " +
-        graft.ml.ItemItem.lastPairSrcRepartitioned)
+    // kernel VERIFIES the checkpoint's executed plan instead of
+    // assuming the semi-join's shape (AQE's skew-join split breaks it).
+    // Pin the decision's inputs on the captured plan: the locality
+    // proof holds, and the pair-volume estimate asks for no more emit
+    // partitions than the checkpoint has — so neither exchange cause
+    // fires. (The guard's own discrimination is pinned below; the
+    // exchange path end to end in "the safety exchange …".)
+    val plan = kernelPurchasesPlan()
+    assert(graft.ml.ItemItem.pairLocalityHolds(plan),
+      s"locality proof failed on a normally-partitioned corpus:\n$plan")
+    val t = graft.core.Tables(spark, dir)
+    val est = graft.ml.ItemItem.pairsEstimate(
+      graft.core.GraftSession.rowCount(t, "lineitem", Long.MaxValue),
+      graft.core.GraftSession.rowCount(t, "customer", Long.MaxValue))
+    assert(est != Long.MaxValue, "the harness corpus has both counts")
+    val need = graft.ml.ItemItem.emitPartitions(est, userLocal = true,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    assert(need <= plan.outputPartitioning.numPartitions,
+      s"emit widening engaged: need $need > ${plan.outputPartitioning}")
   }
 
   test("pairLocalityHolds discriminates the non-skew user-keyed SHJ " +
@@ -331,19 +326,19 @@ class PlanSpec extends SparkSpec {
     val keep = Seq(Tuple1(1L), Tuple1(2L)).toDF("user")
     val shj = df.join(keep.hint("shuffle_hash"), Seq("user"), "left_semi")
     shj.collect()
-    assert(graft.ml.ItemItem.pairLocalityHolds(shj.queryExecution))
+    assert(graft.ml.ItemItem.pairLocalityHolds(shj.queryExecution.executedPlan))
     val bhj = df.join(broadcast(keep), Seq("user"), "left_semi")
     bhj.collect()
-    assert(!graft.ml.ItemItem.pairLocalityHolds(bhj.queryExecution))
+    assert(!graft.ml.ItemItem.pairLocalityHolds(bhj.queryExecution.executedPlan))
     val plain = df.select(col("user"), col("item"))
     plain.collect()
-    assert(!graft.ml.ItemItem.pairLocalityHolds(plain.queryExecution))
+    assert(!graft.ml.ItemItem.pairLocalityHolds(plain.queryExecution.executedPlan))
     // keyed on item, not user → no locality claim
     val wrongKey = df.join(
       Seq(Tuple1(10L)).toDF("item").hint("shuffle_hash"),
       Seq("item"), "left_semi")
     wrongKey.collect()
-    assert(!graft.ml.ItemItem.pairLocalityHolds(wrongKey.queryExecution))
+    assert(!graft.ml.ItemItem.pairLocalityHolds(wrongKey.queryExecution.executedPlan))
   }
 
   test("pairLocalityHolds rejects a REAL AQE skew-split join on user") {
@@ -377,7 +372,7 @@ class PlanSpec extends SparkSpec {
         .split("== Initial Plan ==").head
       assert(planStr.contains("skew=true"),
         s"fixture failed to trigger OptimizeSkewedJoin:\n$planStr")
-      assert(!graft.ml.ItemItem.pairLocalityHolds(j.queryExecution),
+      assert(!graft.ml.ItemItem.pairLocalityHolds(j.queryExecution.executedPlan),
         "guard accepted a skew-split join")
     } finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
@@ -387,39 +382,46 @@ class PlanSpec extends SparkSpec {
 
   test("reco_item_item: the safety exchange keeps the kernel exact on a " +
       "skewed mega-user corpus") {
-    // end-to-end pin of the repartition fallback (the path taken when
-    // pairLocalityHolds refuses the materialized plan), driven through
-    // the operator escape hatch: result must be bit-identical to the
-    // legacy shuffle plan on the same skewed data.
+    // end-to-end pin of the repartition(user) path, driven by real
+    // input through the emit-widening gate: one customer and 20k
+    // (duplicate) lineitem rows estimate ~4·10⁸ directed pairs, so
+    // emitPartitions asks for more map tasks than the checkpoint has.
+    // The same data without customer.parquet estimates the sentinel,
+    // and the proven no-exchange path runs. Both must equal the
+    // brute-force reference; the listener shows the extra stage.
+    val base = java.nio.file.Files.createTempDirectory("graft_ii_skew").toString
+    // user 1: items 1..400 via one order, each line 50 times; users
+    // 2..9: two items each
+    val orders = Seq((10L, 1L)) ++ (2 to 9).map(u => (10L + u, u.toLong))
+    val lineitem = Seq.fill(50)((1 to 400).map(i => (10L, Option(i.toLong)))).flatten ++
+      (2 to 9).flatMap(u => Seq((10L + u, Option(u.toLong)), (10L + u, Option(u + 1L))))
+    val (widened, proven) = (s"$base/widened", s"$base/proven")
+    val purchases = ItemItemRef.writeFixture(spark, widened, orders, lineitem)
+    ItemItemRef.writeFixture(spark, proven, orders, lineitem)
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_ii_skew").toString
-    // user 1: items 1..400 via one order; users 2..9: two items each
-    val orders = (Seq((10L, 1L)) ++ (2 to 9).map(u => (10L + u, u.toLong)))
-      .toDF("o_orderkey", "o_custkey")
-    orders.repartition(4)
-      .write.mode("overwrite").parquet(s"$d/orders.parquet")
-    val items = (1 to 400).map(i => (10L, i.toLong)) ++
-      (2 to 9).flatMap(u => Seq((10L + u, u.toLong), (10L + u, (u + 1).toLong)))
-    items.toDF("l_orderkey", "l_partkey").repartition(8)
-      .write.mode("overwrite").parquet(s"$d/lineitem.parquet")
-    def collectSorted() =
-      SparkEntry.queries("reco_item_item")(spark, d).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3),
-          r.getDouble(4))).sortBy(t => (t._1, t._2)).toSeq
-    val (exchanged, legacy) = try {
-      spark.conf.set("graft.reco.forcePairExchange", "true")
-      graft.ml.ItemItem.lastPairSrcRepartitioned = None
-      val exchanged = collectSorted()
-      assert(graft.ml.ItemItem.lastPairSrcRepartitioned.contains(true),
-        "escape hatch did not route through the safety exchange")
-      spark.conf.unset("graft.reco.forcePairExchange")
-      spark.conf.set("graft.reco.niBroadcastLimit", "-1") // legacy path
-      (exchanged, collectSorted())
-    } finally {
-      spark.conf.unset("graft.reco.forcePairExchange")
-      spark.conf.unset("graft.reco.niBroadcastLimit")
+    Seq(1L).toDF("c_custkey").write.parquet(s"$widened/customer.parquet")
+    val want = ItemItemRef.neighbors(purchases, 5)
+    val est = graft.ml.ItemItem.pairsEstimate(lineitem.size.toLong, 1L)
+    assert(graft.ml.ItemItem.emitPartitions(est, userLocal = true,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt) > 1)
+    def stagesOf(d: String): Int = {
+      ItemItemRef.collectSorted(SparkEntry.queries("reco_item_item")(spark, d)) // warm the count memo
+      val stages = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onStageSubmitted(
+            e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+          stages.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        assert(ItemItemRef.collectSorted(
+          SparkEntry.queries("reco_item_item")(spark, d)) == want, d)
+        Thread.sleep(1500) // listener bus delivery
+        stages.get()
+      } finally spark.sparkContext.removeSparkListener(listener)
     }
-    assert(exchanged == legacy)
+    val (w, p) = (stagesOf(widened), stagesOf(proven))
+    assert(w == p + 1, s"widened run $w stages, proven run $p")
   }
 
   test("s10: partitioned layout prunes to one partition directory") {

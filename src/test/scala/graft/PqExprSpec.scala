@@ -20,7 +20,7 @@ class PqExprSpec extends SparkSpec {
     val df = Seq(Tuple1(v)).toDF("embedding")
     df.select(ColumnBridge.column(
         PqEncode(ColumnBridge.expression(col("embedding")), flat)).as("codes"))
-      .head.getSeq[Int](0)
+      .head().getSeq[Int](0)
   }
 
   test("encode picks the nearest centroid per subspace (hand-computed)") {
@@ -51,8 +51,8 @@ class PqExprSpec extends SparkSpec {
     val adc = df.select(ColumnBridge.column(PqAdc(
         ColumnBridge.expression(col("embedding")),
         ColumnBridge.expression(col("codes")), flat)).as("d"))
-      .head.getDouble(0)
-    val codes = df.head.getSeq[Int](1)
+      .head().getDouble(0)
+    val codes = df.head().getSeq[Int](1)
     val expected = (0 until 8).flatMap { m =>
       (0 until 8).map { d =>
         val t = v(m * 8 + d).toDouble - cb(m)(codes(m))(d)

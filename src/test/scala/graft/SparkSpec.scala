@@ -7,6 +7,14 @@ import org.scalatest.BeforeAndAfterAll
 /** Shared local session for Spark-backed specs (one JVM-wide session —
   * getOrCreate dedups across suites). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession =
-    graft.core.GraftSession.builder("graft-test", "4").master("local[4]").getOrCreate()
+  lazy val spark: SparkSession = SparkSpec.session
+}
+
+object SparkSpec {
+  lazy val session: SparkSession = {
+    val s = graft.core.GraftSession.builder("graft-test", "4").master("local[4]").getOrCreate()
+    // as GraftSession.local: INFO lines of every job would bury the results
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }

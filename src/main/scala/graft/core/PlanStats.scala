@@ -43,14 +43,13 @@ object PlanStats {
         }
         (leafParts.nonEmpty && leafParts.max < parts, "leaf-partitions")
       }
-    // GRAFT_SPREAD_LOG=1: one stderr line per gate decision, so scale
-    // rehearsals can confirm post-join frames take the intended branch
-    // (optimizer estimates can be badly wrong after joins/filters — a
-    // silent mis-estimate here single-tasks a signature build).
-    if (sys.env.get("GRAFT_SPREAD_LOG").contains("1"))
-      System.err.println(s"[spread] via=$via est=$est " +
-        s"threshold=${BigInt(splitBytes) * parts} parts=$parts " +
-        s"-> ${if (decision) "repartition" else "keep"}")
+    // one line per decision, so scale rehearsals can confirm post-join
+    // frames take the intended branch (optimizer estimates can be badly
+    // wrong after joins/filters — a silent mis-estimate here
+    // single-tasks a signature build)
+    graft.log.debug(s"[spread] via=$via est=$est " +
+      s"threshold=${BigInt(splitBytes) * parts} parts=$parts " +
+      s"-> ${if (decision) "repartition" else "keep"}")
     decision
   }
 

@@ -56,7 +56,7 @@ object Pipeline {
         scala.concurrent.duration.Duration(10, "s"))
         .getAs[Long]("n"))
       .getOrElse {
-        System.err.println(s"[etl] $name: observed row count " +
+        graft.log.warn(s"[etl] $name: observed row count " +
           "unavailable (metric wait elapsed or metric elided) — " +
           "falling back to a read-back count of the written output")
         spark.read.parquet(path).count()

@@ -486,22 +486,26 @@ object ItemItem {
 
   /** The metadata-cheap directed-pair volume estimate L·(L/C) both
     * partition laws derive from — ONE definition so they can never
-    * diverge silently.
-    * Long.MaxValue is the fail-closed SENTINEL — failed probes or an
-    * empty customer count, i.e. "no measurement exists" — and each
-    * law chooses its own sentinel posture. A REAL estimate that
-    * overflows multiplyExact (a plain * can overflow NEGATIVE at
-    * extreme row counts, which would collapse partition counts to the
-    * floor exactly where the clamps matter) saturates to
-    * MaxValue − 1: still "astronomically large" for the division
-    * laws, but never aliased with "unknown". */
+    * diverge silently. No lineitems estimate 0 pairs; lineitems with no
+    * customer rows estimate L·L, the bound of one user buying them all.
+    * Long.MaxValue is the fail-closed SENTINEL — a failed probe, i.e.
+    * "no measurement exists" — and each law chooses its own sentinel
+    * posture. A REAL estimate that overflows multiplyExact (a plain *
+    * can overflow NEGATIVE at extreme row counts, which would collapse
+    * partition counts to the floor exactly where the clamps matter)
+    * saturates to MaxValue − 1: still "astronomically large" for the
+    * division laws, but never aliased with "unknown". */
   private[graft] def pairsEstimate(lineitemCount: Long,
                                    customerCount: Long): Long =
-    if (lineitemCount == Long.MaxValue || customerCount == Long.MaxValue
-        || customerCount == 0L) Long.MaxValue
-    else scala.util.Try(Math.multiplyExact(lineitemCount,
-      math.max(1L, lineitemCount / customerCount)))
-      .getOrElse(Long.MaxValue - 1)
+    if (lineitemCount == Long.MaxValue || customerCount == Long.MaxValue)
+      Long.MaxValue
+    else {
+      val perUser =
+        if (customerCount == 0L) lineitemCount
+        else math.max(1L, lineitemCount / customerCount)
+      scala.util.Try(Math.multiplyExact(lineitemCount, perUser))
+        .getOrElse(Long.MaxValue - 1)
+    }
 
   /** Kernel reduce-exchange partition count: ~16M packed longs
     * (~128 MB decoded) per task slice at any scale, floored at the
@@ -536,9 +540,8 @@ object ItemItem {
     * correct). When the guard already refused (`!userLocal`) the
     * exchange is paid regardless, so the width is capped at a small
     * multiple of the session default instead of the 1024 clamp,
-    * which stays reduce-side-only. A zero-lineitem corpus with live
-    * customers estimates 0 and never widens. Law pinned in
-    * ItemItemSpec. */
+    * which stays reduce-side-only. A zero-lineitem corpus estimates 0
+    * and never widens. Law pinned in ItemItemSpec. */
   private[graft] def emitPartitions(pairsEst: Long, userLocal: Boolean,
                                     defaultP: Int): Int =
     if (pairsEst == Long.MaxValue) {

@@ -31,4 +31,12 @@
   * operator is written for a 1000-executor cluster first and verified
   * bit-exactly against DuckDB at test scale.
   */
-package object graft
+package object graft {
+
+  /** The engine's one diagnostic channel: gate decisions and contract
+    * summaries at DEBUG, fallbacks at WARN. Its level is set in Spark's
+    * log4j2 configuration (`logger.graft.name = graft`,
+    * `logger.graft.level = debug`); left unset it follows the root
+    * level, which `GraftSession.local` lowers to WARN. */
+  private[graft] val log: org.slf4j.Logger = org.slf4j.LoggerFactory.getLogger("graft")
+}

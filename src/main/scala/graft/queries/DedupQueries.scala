@@ -26,21 +26,15 @@ object DedupQueries {
     * here is a FOUND-WIDE-CHARS count (0 = packable, 1 = wide — both
     * legitimate, both memoized), and Long.MaxValue marks a FAILED
     * probe, which fails CLOSED onto the always-correct string path
-    * and re-probes next call. `graft.dedup.packGrams` overrides:
-    * on / off / auto (default). */
+    * and re-probes next call. */
   private val wideCharDocs =
     new graft.core.GraftSession.CountMemo(onError = Long.MaxValue)
   private def packableCorpus(s: SparkSession, dir: String): Boolean =
-    s.conf.getOption("graft.dedup.packGrams").getOrElse("auto") match {
-      case "on" => true
-      case "off" => false
-      case _ =>
-        wideCharDocs(s, s"$dir/documents.parquet")(
-          Tables(s, dir).documents
-            .filter(graft.functions.TextFunctions.normText(col("text"))
-              .rlike("[^\\x01-\\xff]"))
-            .limit(1).count()) == 0L
-    }
+    wideCharDocs(s, s"$dir/documents.parquet")(
+      Tables(s, dir).documents
+        .filter(graft.functions.TextFunctions.normText(col("text"))
+          .rlike("[^\\x01-\\xff]"))
+        .limit(1).count()) == 0L
 
   val queries: Map[String, Q] = Map(
     "dd_exact" -> ((s, dir) => Dedup.exact(Tables(s, dir).documents)),

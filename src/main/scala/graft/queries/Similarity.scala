@@ -81,13 +81,20 @@ object Similarity {
   // Recommender.MaxQueryUsers and the fail-closed GraftSession.CountMemo
   // probes; both paths of every gated entry are pinned by AnnGateSpec.
 
+  /** Bytes of one broadcast vector row, sized as Catalyst sizes a row
+    * (8 bytes plus each column) but with the vector's real width, which
+    * the per-type default size (one array element) cannot estimate: a
+    * key and an id long, the float array's header (length word plus
+    * one null-bit word) and 4·DIM bytes of floats. */
+  private val VecRowBytes: Long = 8 + 2 * 8 + 16 + 4L * DIM
+
   /** Broadcast ceiling in ROWS of the (possibly probe-exploded)
-    * broadcast frame: 100k rows × ~300 B packed vector ≈ 30 MB.
-    * Session-conf-overridable so a cluster operator can size it to
-    * driver/executor memory; AnnGateSpec sets 0 to force the scale
-    * path on the fixture. */
+    * broadcast frame: as many vector rows as fit under
+    * `spark.sql.autoBroadcastJoinThreshold`, the ceiling Spark applies
+    * to every other broadcast and the graph loop. A threshold of -1
+    * disables broadcasting here as everywhere else. */
   private[graft] def maxBroadcastRows(s: SparkSession): Long =
-    s.conf.getOption("graft.ann.maxBroadcastRows").map(_.toLong).getOrElse(100000L)
+    math.max(0L, s.sessionState.conf.autoBroadcastJoinThreshold / VecRowBytes)
 
   /** Rows a Hamming≤2 multi-probe explode emits per query vector. */
   private[graft] def probeCount(p: Int): Long = 1L + p + p.toLong * (p - 1) / 2
@@ -312,15 +319,9 @@ object Similarity {
     // the truth term is the contract's priciest input (a corpus scan
     // per evaluation) and the result is tiny (K rows per query) —
     // persist it so repeated executions of the returned frame (bench
-    // best-of-N, the debug path below) run it once; the harness
-    // clears the cache between queries.
+    // best-of-N) run it once; the harness clears the cache between
+    // queries.
     val brute = brute0.persist()
-    if (sys.env.get("GRAFT_DEBUG_RECALL").contains("1")) {
-      val h = ann.select("qid", "vec_id")
-        .join(brute.select("qid", "vec_id"), Seq("qid", "vec_id"), "left_semi").count()
-      System.err.println(f"[recall-debug] hits=$h recall=${h.toDouble / (K * nQueries)}%.3f " +
-        f"scanFrac=${candRows.toDouble / (corpusN * nQueries)}%.3f")
-    }
     // vacuous cases: zero queries (empty corpus / fully-filtered
     // slice — ANSI mode makes even the DOUBLE division by zero an
     // error, so guard, don't divide), or a corpus of ≤ K vectors,
@@ -903,12 +904,6 @@ object Similarity {
       // while at corpus scale the gate no-ops (the source's own splits
       // parallelize). Evidence: plans/r18/ss_knn_graph_rejected_*.txt.
       val banded = knnBandedSig(e, nBands, p).persist()
-      val dbg = sys.env.get("GRAFT_DEBUG_RECALL").contains("1")
-      var t0 = System.nanoTime()
-      def lap(tag: String): Unit = if (dbg) {
-        System.err.println(f"[knn-graph-t] $tag ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        t0 = System.nanoTime()
-      }
       // the candidate-volume contract stat rides the rerank job as an
       // observed metric instead of a separate persist + count action —
       // at bench scale the audit's cost was dominated by job-launch
@@ -930,7 +925,6 @@ object Similarity {
       // dominates the query (measured ~23 s → ~8 s at sf0.1).
       var graph = rerank(cands).localCheckpoint(true)
       var candRows = obsSeed.get("c").asInstanceOf[Long]
-      lap("seed-rerank")
       // NN-Descent refinement: a neighbor's neighbor is a likely
       // neighbor — undirected 2-hop candidate expansion + exact
       // rerank. Each round adds ≤ (2K)² candidates per node (O(n·K²),
@@ -951,7 +945,6 @@ object Similarity {
         graph = rerank(expanded).localCheckpoint(true)
         candRows += obsExp.get("c").asInstanceOf[Long]
       }
-      lap("descent")
       // ALL the audit scalars ride ONE action: the graph stats agg,
       // the recall join-agg and the banding-occupancy agg are
       // independent single-row subtrees, so a crossJoin of the three
@@ -999,15 +992,13 @@ object Similarity {
       val auditRow = statAgg.crossJoin(hitAgg).crossJoin(occAgg).first()
       val (nEdges, nSrc) = (auditRow.getLong(0), auditRow.getLong(1))
       val (nq, hits) = (auditRow.getLong(2), auditRow.getLong(3))
-      lap("audit-stats")
       val occPairs = {
         val d = auditRow.getDecimal(4)
         if (d.compareTo(java.math.BigDecimal.valueOf(Long.MaxValue)) >= 0)
           Long.MaxValue else d.longValue()
       }
       val candBudget = occPairs + descentRounds.toLong * (4 * K * K + 3 * K) * n
-      if (sys.env.get("GRAFT_DEBUG_RECALL").contains("1"))
-        System.err.println(f"[knn-graph] n=$n edges=$nEdges srcCov=${nSrc.toDouble / n}%.3f " +
+      graft.log.debug(f"[knn-graph] n=$n edges=$nEdges srcCov=${nSrc.toDouble / n}%.3f " +
           f"recall=${if (nq > 0) hits.toDouble / (K * nq) else 1.0}%.3f " +
           f"scanFrac=${candRows.toDouble / (n.toDouble * n)}%.4f " +
           f"cands=$candRows budget=$candBudget occ=${occPairs / math.max(n, 1)}·n")
@@ -1124,8 +1115,7 @@ object Similarity {
         .join(truth.select("qid", "vec_id"), Seq("qid", "vec_id"), "left_semi")
         .count()
       val nq = e.filter(col("vec_id") % 100 === 0).count()
-      if (sys.env.get("GRAFT_DEBUG_RECALL").contains("1"))
-        System.err.println(f"[knn-graph-inc] n=$n batch=$batchN edges=$nEdges " +
+      graft.log.debug(f"[knn-graph-inc] n=$n batch=$batchN edges=$nEdges " +
           f"srcCov=${nSrc.toDouble / n}%.3f " +
           f"recall=${if (nq > 0) hits.toDouble / (K * nq) else 1.0}%.3f " +
           f"batchCands=$batchCands perBatchVec=${batchCands / math.max(batchN, 1)}")

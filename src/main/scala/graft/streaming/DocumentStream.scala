@@ -71,10 +71,11 @@ object DocumentStream {
     // bounded; undersized instances at huge state are the real risk,
     // but refusing to stream over a probe hiccup would be worse.
     val docs = docCountFor(spark, dir)
-    val parts = math.min(32L, math.max(8L, docs / 16000L)).toInt
+    val parts =
+      math.min(32L, math.max(EventStream.StateParts.toLong, docs / 16000L)).toInt
     EventStream.runToTable(spark, s"st_corpus_${dir.hashCode.abs}",
       mode = "append", largeState = true,
-      stateParts = Some(parts)) { ss =>
+      stateParts = parts) { ss =>
       import ss.implicits._
       import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
       val normCol = graft.functions.TextFunctions.normText(col("text"))

@@ -61,15 +61,14 @@ object EventStream {
     }
   }
 
-  /** State-store partition count for the streaming queries. A stateful
-    * query's state is sharded into `spark.sql.shuffle.partitions`
-    * store instances, FIXED at the first checkpoint — each instance
-    * pays per-batch snapshot/commit I/O, so idle shards are pure
-    * overhead. Sized to the stateful key cardinality / executor count
-    * on a real cluster; a small fixed count suits the one-shot
-    * AvailableNow runs here. */
-  private def streamShufflePartitions: String =
-    sys.env.getOrElse("GRAFT_STREAM_PARTS", "8")
+  /** State-store partition count for the streaming queries, and the
+    * floor of the count `DocumentStream.corpusIngest` derives from its
+    * document count. A stateful query's state is sharded into
+    * `spark.sql.shuffle.partitions` store instances, FIXED at the first
+    * checkpoint — each instance pays per-batch snapshot/commit I/O, so
+    * idle shards are pure overhead, and a small count suits the
+    * one-shot AvailableNow runs here. */
+  private[streaming] val StateParts = 8
 
   /** State store provider selection, A/B-measured (sf0.1, like
     * loads): RocksDB + changelog checkpointing wins when the state is
@@ -99,11 +98,10 @@ object EventStream {
   private[streaming] def runToTable(spark: SparkSession, name: String,
                          mode: String = "complete",
                          largeState: Boolean = false,
-                         stateParts: Option[Int] = None)
+                         stateParts: Int = StateParts)
                         (build: SparkSession => DataFrame): DataFrame = {
     val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions",
-      stateParts.map(_.toString).getOrElse(streamShufflePartitions))
+    ss.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
     stateStoreConf(ss, largeState)
     val q = build(ss).writeStream
       .format("memory")
@@ -433,7 +431,7 @@ object EventStream {
                  baseDir: Option[String] = None,
                  failAfterBatches: Option[Int] = None): DataFrame = {
     val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions)
+    ss.conf.set("spark.sql.shuffle.partitions", StateParts.toString)
     val base = baseDir.getOrElse(
       s"${System.getProperty("java.io.tmpdir")}/graft_upsert_" +
         java.util.UUID.randomUUID().toString.take(8))

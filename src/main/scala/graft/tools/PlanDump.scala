@@ -11,18 +11,26 @@ package graft.tools
   * Planning itself consults file-level statistics only, BUT a few
   * query CONSTRUCTORS run real jobs or side effects before returning
   * their DataFrame (etl_backfill/etl_pipeline stage and read back a
-  * whole scratch pipeline; reco_item_item probes the part table's
-  * metadata count for its broadcast gate — memoized, so once per
-  * JVM+dir). For those names a plan dump is NOT side-effect-free at
-  * scale; they are listed in `constructionSideEffects` and the dump
-  * prints a warning first. Everything else plans in seconds even
-  * where execution is minutes.
+  * whole scratch pipeline; reco_item_item checkpoints its capped
+  * purchases and collects the per-item counts its kernel codes items
+  * by). For those names a plan dump is NOT side-effect-free at scale;
+  * they are listed in `constructionSideEffects` and the dump prints a
+  * warning first. Everything else plans in seconds even where
+  * execution is minutes.
+  *
+  * The executed plan of every ACTION fired while a constructor runs is
+  * printed too: iterative queries truncate lineage per round
+  * (localCheckpoint), so the returned frame's plan shows only the
+  * final projection and the per-round join strategy is visible only
+  * action by action. Session confs (e.g. the broadcast threshold that
+  * picks the graph loop's and the ANN gates' paths) come from
+  * `GRAFT_SESSION_CONF`.
   */
 object PlanDump {
   /** Names whose (SparkSession, dir) => DataFrame constructor executes
     * jobs or writes scratch BEFORE the plan exists — dumping their
     * plan at sf10 runs that work for real. Kept in sync with
-    * Bench.coldExplicit plus the gate-probing reco entries. */
+    * Bench.coldExplicit plus reco_item_item. */
   val constructionSideEffects: Set[String] = Set(
     "etl_backfill", "etl_pipeline", "etl_wap", "etl_scd2",
     "etl_scd2_merge", "llm_corpus_build", "llm_corpus_audit",
@@ -34,32 +42,18 @@ object PlanDump {
     val names = args.lift(1).map(_.split(",").toSeq)
       .getOrElse(Seq("q1_agg"))
     val spark = graft.core.GraftSession.local("graft-plandump")
-    // GRAFT_PLANDUMP_CONF="k=v[,k=v...]": session conf overrides, so
-    // conf-gated scale paths (pagerank/LP broadcast ceilings) can be
-    // dumped without code edits.
-    sys.env.get("GRAFT_PLANDUMP_CONF").toSeq
-      .flatMap(_.split(",")).map(_.split("=", 2))
-      .collect { case Array(k, v) => (k, v) }
-      .foreach { case (k, v) => spark.conf.set(k, v) }
-    // GRAFT_PLANDUMP_ACTIONS=1: also print the executed plan of every
-    // ACTION fired while the query runs — iterative queries truncate
-    // lineage per round (localCheckpoint), so the returned frame's
-    // plan shows only the final projection and the per-round join
-    // strategy is visible ONLY action-by-action.
-    val dumpActions = sys.env.get("GRAFT_PLANDUMP_ACTIONS").contains("1")
-    if (dumpActions)
-      spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            durationNs: Long): Unit = {
-          println(s"\n----- action: $funcName -----")
-          println(qe.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-        }
-        override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            exception: Exception): Unit = ()
-      })
+    spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = {
+        println(s"\n----- action: $funcName -----")
+        println(qe.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+      }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    })
     names.foreach { n =>
       println(s"\n===== $n @ $dir =====")
       if (constructionSideEffects.contains(n))
@@ -70,7 +64,7 @@ object PlanDump {
     }
     // the execution listener bus is asynchronous — let action-plan
     // events drain before tearing the session down
-    if (dumpActions) Thread.sleep(2000)
+    Thread.sleep(2000)
     graft.core.GraftSession.dropScratch(spark)
     spark.stop()
   }

@@ -10,20 +10,17 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * entry before optimizing it.
   *
   * Usage: runMain graft.tools.StageProf <dir> <name[,name...]>
+  *
+  * Each query runs once untimed first (cache and JIT warm, like the
+  * bench's warm runs), and the stage listener is attached only around
+  * the timed run, so the printed stages attribute the warm run the
+  * bench reports. Session confs come from `GRAFT_SESSION_CONF`.
   */
 object StageProf {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft_sf10")
     val names = args.lift(1).map(_.split(",").toSeq).getOrElse(Seq("reco_item_item"))
     val spark = graft.core.GraftSession.local("graft-stageprof")
-    // GRAFT_PROF_CONF="k=v[,k=v...]": session conf overrides (same as
-    // PlanDump's GRAFT_PLANDUMP_CONF) — rehearsals set Spark confs
-    // (e.g. spark.sql.shuffle.partitions, or the broadcast threshold
-    // that picks the graph loop's layout) without code edits.
-    sys.env.get("GRAFT_PROF_CONF").toSeq
-      .flatMap(_.split(",")).map(_.split("=", 2))
-      .collect { case Array(k, v) => (k, v) }
-      .foreach { case (k, v) => spark.conf.set(k, v) }
     val listener = new SparkListener {
       // job boundaries: serialized driver barriers are invisible in the
       // per-stage table (a query "one action" can be many jobs — e.g.
@@ -59,24 +56,19 @@ object StageProf {
           si.name.takeWhile(_ != '\n').take(60))
       }
     }
-    spark.sparkContext.addSparkListener(listener)
-    // GRAFT_PROF_WARM=1: execute each query once untimed first (cache
-    // and JIT warm, like Bench's steady-state minima), so the printed
-    // stages attribute the WARM run — the number the bench reports —
-    // instead of first-build cost.
-    val warm = sys.env.get("GRAFT_PROF_WARM").contains("1")
     names.foreach { n =>
       println(s"=== $n @ $dir ===")
-      if (warm) {
-        graft.SparkEntry.queries(n)(spark, dir).count()
-        Thread.sleep(500)
-        println(s"--- warm runs below ---")
-      }
+      graft.SparkEntry.queries(n)(spark, dir).count()
+      // the listener bus is asynchronous: let the warm-up's events
+      // drain before the listener that prints them is attached
+      Thread.sleep(500)
+      spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
       val c = graft.SparkEntry.queries(n)(spark, dir).count()
       val dt = (System.nanoTime() - t0) / 1e9
       // let straggler stage-completed events drain before the footer
       Thread.sleep(1000)
+      spark.sparkContext.removeSparkListener(listener)
       println(f"[prof] $n rows=$c wall=$dt%.1fs")
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))

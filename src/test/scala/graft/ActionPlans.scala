@@ -44,7 +44,8 @@ object ActionPlans {
   }
 
   /** Run `body` with `spark.sql.autoBroadcastJoinThreshold=-1`, which
-    * moves the graph rounds onto their shuffled layout. */
+    * moves the graph rounds onto their shuffled layout and the ANN
+    * query-side gates onto their shuffle joins. */
   def withoutBroadcast[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val before = spark.conf.get(key)

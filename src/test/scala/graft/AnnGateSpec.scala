@@ -5,15 +5,18 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
 
 /** Pins BOTH paths of the ANN query-side broadcast gates
-  * (Similarity.qJoin / qCross, conf `graft.ann.maxBroadcastRows`):
-  * the harness query stratum is 1% of the corpus — it grows linearly
-  * with scale, so past the ceiling every serving entry must switch
-  * from broadcast to a shuffle-hash equi-join (bucket/cell keys) or a
+  * (Similarity.qJoin / qCross, whose row ceiling `maxBroadcastRows` is
+  * derived from `spark.sql.autoBroadcastJoinThreshold`): the harness
+  * query stratum is 1% of the corpus — it grows linearly with scale,
+  * so past the ceiling every serving entry must switch from broadcast
+  * to a shuffle-hash equi-join (bucket/cell keys) or a
   * shuffle-replicated nested loop (brute scans), with BIT-IDENTICAL
-  * results. Also pins the ss_knn_ivf quantizer routing (ivfStep):
-  * the oracle-exact 1/125 stride at gate scale, √n cells past
-  * IvfOracleN — both strides deterministic integer arithmetic the
-  * DuckDB oracle replays. The PageRankSpec dual-path precedent. */
+  * results. A threshold of -1 puts the ceiling at 0 rows, which drives
+  * the scale path on the small fixture. Also pins the ss_knn_ivf
+  * quantizer routing (ivfStep): the oracle-exact 1/125 stride at gate
+  * scale, √n cells past IvfOracleN — both strides deterministic integer
+  * arithmetic the DuckDB oracle replays. The PageRankSpec dual-path
+  * precedent. */
 class AnnGateSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
@@ -33,6 +36,10 @@ class AnnGateSpec extends SparkSpec {
   }
 
   private def run(name: String): (Seq[String], Seq[SparkPlan]) = {
+    // a frame an earlier query persisted (the brute truth term) would
+    // stand in for its subtree as an opaque cached scan, hiding which
+    // path built it
+    spark.catalog.clearCache()
     val q = graft.queries.Similarity.queries(name)(spark, dir)
     val rows = q.collect().map(_.toString).sorted.toSeq
     (rows, unwrap(q.queryExecution.executedPlan))
@@ -40,8 +47,8 @@ class AnnGateSpec extends SparkSpec {
 
   test("every gated entry is bit-identical across the broadcast and shuffle paths") {
     val viaBroadcast = names.map(n => n -> run(n)._1).toMap
-    spark.conf.set("graft.ann.maxBroadcastRows", "0")
-    try {
+    ActionPlans.withoutBroadcast(spark) {
+      assert(graft.queries.Similarity.maxBroadcastRows(spark) == 0L)
       names.foreach { n =>
         val (rows, ops) = run(n)
         assert(rows == viaBroadcast(n), s"$n: scale path diverged from broadcast path")
@@ -52,15 +59,20 @@ class AnnGateSpec extends SparkSpec {
         assert(bhj == 0 && bnl == 0,
           s"$n: broadcast leaked into the scale path (bhj=$bhj bnl=$bnl)")
       }
-    } finally spark.conf.unset("graft.ann.maxBroadcastRows")
+    }
   }
 
   test("default ceiling takes the broadcast path at gate scale") {
+    // the session's 64 MB threshold over 296-byte vector rows
+    assert(graft.queries.Similarity.maxBroadcastRows(spark) == 226719L)
     // the small-probe-batch plan the gate exists to PRESERVE: at gate
-    // scale the probe frame broadcasts (no shuffle of the corpus side)
-    val (_, ops) = run("ss_knn_lsh_fixed")
-    assert(ops.exists(_.isInstanceOf[BroadcastHashJoinExec]),
-      "gate-scale LSH probe join lost its broadcast")
+    // scale every probe frame broadcasts (no shuffle of the corpus side)
+    names.foreach { n =>
+      val (_, ops) = run(n)
+      assert(ops.exists(o => o.isInstanceOf[BroadcastHashJoinExec] ||
+        o.isInstanceOf[BroadcastNestedLoopJoinExec]),
+        s"$n: gate-scale probe join lost its broadcast")
+    }
   }
 
   test("ivfStep: oracle stride at gate scale, √n cells past IvfOracleN") {

@@ -67,10 +67,14 @@ class ItemItemSpec extends AnyFunSuite {
     assert(ItemItem.pairsEstimate(60_000_000L, 1_500_000L) == 2_400_000_000L)
     // degree floor: more customers than lineitems still estimates L·1
     assert(ItemItem.pairsEstimate(1_000L, 5_000L) == 1_000L)
-    // failed probes and empty customers are the SENTINEL (no measurement)
+    // failed probes are the SENTINEL (no measurement)
     assert(ItemItem.pairsEstimate(Long.MaxValue, 15_000L) == Long.MaxValue)
     assert(ItemItem.pairsEstimate(600_000L, Long.MaxValue) == Long.MaxValue)
-    assert(ItemItem.pairsEstimate(600_000L, 0L) == Long.MaxValue)
+    // an empty table is a measurement: no lineitems, no pairs; lineitems
+    // without customer rows bound the pairs by L·L
+    assert(ItemItem.pairsEstimate(0L, 0L) == 0L)
+    assert(ItemItem.pairsEstimate(0L, 15_000L) == 0L)
+    assert(ItemItem.pairsEstimate(600_000L, 0L) == 360_000_000_000L)
     // REAL counts that overflow saturate BELOW the sentinel: still
     // astronomically large for the division laws, never "unknown"
     assert(ItemItem.pairsEstimate(1L << 40, 4L) == Long.MaxValue - 1)
@@ -83,9 +87,12 @@ class ItemItemSpec extends AnyFunSuite {
     assert(ItemItem.pairPartitions(32, 60_000_000L, 1_500_000L) == 150)
     // sf100 shape: 600M / 15M → 24G est → upper clamp binds at 1024
     assert(ItemItem.pairPartitions(32, 600_000_000L, 15_000_000L) == 1024)
-    // failed probes and empty customers fail CLOSED onto the clamp
+    // failed probes fail CLOSED onto the clamp
     assert(ItemItem.pairPartitions(32, Long.MaxValue, 15_000L) == 1024)
     assert(ItemItem.pairPartitions(32, 600_000L, Long.MaxValue) == 1024)
+    // an empty corpus stays at the floor; lineitems without customers
+    // size from the L·L bound (3.6e11 pairs → the clamp)
+    assert(ItemItem.pairPartitions(32, 0L, 0L) == 32)
     assert(ItemItem.pairPartitions(32, 600_000L, 0L) == 1024)
     // overflow saturates (never collapses to the floor): L ~ 2^40 rows
     // of a dense corpus would overflow L·(L/C) as a plain multiply
@@ -107,9 +114,12 @@ class ItemItemSpec extends AnyFunSuite {
     assert(ep(120_000_000L, 3_000_000L) == 150)
     // clamped at 1024 like the reduce side
     assert(ep(6_000_000_000L, 15_000_000L) == 1024)
-    // an empty-lineitem corpus with live customers estimates 0 and
-    // never widens; real-count overflow is a huge REAL estimate → clamp
+    // an empty-lineitem corpus estimates 0 and never widens, also when
+    // the locality guard refused; real-count overflow is a huge REAL
+    // estimate → clamp
     assert(ep(0L, 15_000L) == 0)
+    assert(ItemItem.emitPartitions(ItemItem.pairsEstimate(0L, 0L),
+      userLocal = false, 32) == 0)
     assert(ep(1L << 40, 4L) == 1024)
     // SENTINEL (failed probe, no measurement — round-16 advice): a
     // guard-proven no-exchange plan is never converted into a wide

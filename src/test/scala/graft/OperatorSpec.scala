@@ -79,6 +79,40 @@ class OperatorSpec extends SparkSpec {
       || packed.contains((1L, 3L, 1.0)), s"fixture lost its pairs: $packed")
   }
 
+  test("dd_chargram_pairs: the charset gate packs a Latin-1 corpus and keeps " +
+      "strings for a wide one, with the string form's rows on both sides") {
+    val base = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog and runs far away"),
+      (2L, "the quick brown fox jumps over the lazy cat and runs far away"),
+      (3L, "the quick brown fox jumps over the lazy dog and runs far away"),
+      (4L, "completely unrelated text about spark shuffles and partitions"))
+    def fixture(extra: String): String = {
+      val d = java.nio.file.Files.createTempDirectory("graft_chargram_gate").toString
+      (base :+ ((5L, extra))).toDF("doc_id", "text")
+        .write.parquet(s"$d/documents.parquet")
+      d
+    }
+    // é, è, û, à and î are Latin-1; ł and ż lie past U+00FF
+    val latin = fixture("café crème brûlée à la carte, s'il vous plaît")
+    val wide = fixture("zażółć gęślą jaźń, the wide-char document")
+    try {
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      Seq(latin -> true, wide -> false).foreach { case (d, packs) =>
+        val q = graft.queries.DedupQueries.queries("dd_chargram_pairs")(spark, d)
+        val got = rows(q)
+        val merges = ActionPlans.operators(q.queryExecution.executedPlan)
+          .exists(_.expressions.exists(_.exists(
+            _.isInstanceOf[graft.functions.SortedJaccardGe])))
+        assert(merges == packs, s"$d: SortedJaccardGe planned = $merges")
+        assert(got.nonEmpty, s"$d: fixture lost its pairs")
+        assert(got == rows(Dedup.charGramPairs(
+          graft.core.Tables(spark, d).documents, packVerify = false)))
+      }
+    } finally Seq(latin, wide).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+  }
+
   test("packGram-equivalent int packing is injective over Latin-1 grams") {
     // the bijectivity claim the oracle-unchanged argument rests on:
     // distinct ≤4-char strings over [0x01,0xFF] → distinct ints

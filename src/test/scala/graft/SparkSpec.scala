@@ -8,6 +8,15 @@ import org.scalatest.BeforeAndAfterAll
   * getOrCreate dedups across suites). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** The shared session outlives each suite, so its scratch tables (the
+    * bucketed `g_*` tables under the working directory's
+    * `spark-warehouse/`) and scratch dirs are dropped here, as the mains
+    * drop theirs before `spark.stop()`. A suite that never started the
+    * session does not start it here. */
+  override def afterAll(): Unit =
+    try SparkSession.getDefaultSession.foreach(graft.core.GraftSession.dropScratch)
+    finally super.afterAll()
 }
 
 object SparkSpec {

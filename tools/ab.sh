@@ -3,13 +3,17 @@
 #
 #   tools/ab.sh <workload> <pairs> [parent-ref] [first-seed] [scratch-dir]
 #
-# Run from the repository root. The parent (default HEAD~1; pass HEAD to
-# measure uncommitted changes) is exported with `git archive` into
-# <scratch-dir>/parent (default ${TMPDIR:-/tmp}/graft-ab). Each side first
-# runs once unrecorded, which builds it and writes its class-data archive.
-# Pair i then runs `perfbench/run.py` on both sides with seed first-seed+i
-# (default first seed 1) and BENCHMARK.json's run_seconds, the parent
-# first on even pairs and the working tree first on odd ones.
+# Run from the repository root. Both sides run from clean copies under
+# <scratch-dir> (default ${TMPDIR:-/tmp}/graft-ab), so neither sees the
+# build output, warehouse or bench state of the working tree: the parent
+# (default HEAD~1; pass HEAD to measure uncommitted changes) is exported
+# with `git archive` into <scratch-dir>/parent, and the working tree's
+# tracked and untracked-but-not-ignored files are copied into
+# <scratch-dir>/change. Each side first runs once unrecorded, which builds
+# it and writes its class-data archive. Pair i then runs
+# `perfbench/run.py` on both sides with seed first-seed+i (default first
+# seed 1) and BENCHMARK.json's run_seconds, the parent first on even pairs
+# and the working tree first on odd ones.
 #
 # Prints, per end-to-end metric, each side's median and quartiles and the
 # number of pairs the working tree won (ties count for neither side). A
@@ -21,7 +25,7 @@
 # region. Raw result lines go to <scratch-dir>/results.jsonl.
 set -euo pipefail
 
-[ $# -ge 2 ] || { sed -n '2,21p' "$0"; exit 2; }
+[ $# -ge 2 ] || { sed -n '2,25p' "$0"; exit 2; }
 workload=$1 pairs=$2 ref=${3:-HEAD~1} seed0=${4:-1}
 scratch=${5:-${TMPDIR:-/tmp}/graft-ab}
 repo=$(pwd)
@@ -29,10 +33,13 @@ repo=$(pwd)
   { echo "run from the repository root" >&2; exit 2; }
 seconds=$(python3 -c 'import json; print(json.load(open("BENCHMARK.json"))["run_seconds"])')
 
-parent=$scratch/parent
-rm -rf "$parent"
-mkdir -p "$parent"
+parent=$scratch/parent change=$scratch/change
+rm -rf "$parent" "$change"
+mkdir -p "$parent" "$change"
 git archive "$ref" | tar -x -C "$parent"
+git ls-files -z -co --exclude-standard |
+  while IFS= read -r -d '' f; do if [ -e "$f" ]; then printf '%s\0' "$f"; fi; done |
+  tar --null -T - -cf - | tar -xf - -C "$change"
 results=$scratch/results.jsonl
 : > "$results"
 
@@ -49,17 +56,17 @@ run() {
 }
 
 run parent "$parent" 0 0
-run change "$repo" 0 0
+run change "$change" 0 0
 for ((i = 0; i < pairs; i++)); do
   seed=$((seed0 + i))
   if ((i % 2 == 0)); then
-    run parent "$parent" "$seed" 1; run change "$repo" "$seed" 1
+    run parent "$parent" "$seed" 1; run change "$change" "$seed" 1
   else
-    run change "$repo" "$seed" 1; run parent "$parent" "$seed" 1
+    run change "$change" "$seed" 1; run parent "$parent" "$seed" 1
   fi
 done
 
-python3 - "$results" "$repo/BENCHMARK.json" "$workload" "$ref" "$parent" "$repo" <<'EOF'
+python3 - "$results" "$repo/BENCHMARK.json" "$workload" "$ref" "$parent" "$change" <<'EOF'
 import json, os, statistics, sys
 
 results, bench, workload, ref, parent_dir, change_dir = sys.argv[1:]

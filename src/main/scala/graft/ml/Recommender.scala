@@ -1,9 +1,11 @@
 package graft.ml
 
 import org.apache.spark.ml.recommendation.{ALS, ALSModel}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructType}
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 import graft.core.Tables
 
 /** Collaborative-filtering recommender (SURVEY.md §2.8 M1–M10).
@@ -17,10 +19,11 @@ import graft.core.Tables
   * are reproduced exactly.
   *
   * Scale shape: ALS's block-partitioned factor updates are the
-  * standard 100 TB-capable implicit-MF solver; cosine top-k broadcasts
-  * the (small) query-user factor block against the item factors —
-  * item factors are rank×nItems, orders of magnitude smaller than the
-  * interaction data, so the scan parallelizes trivially. Nothing here
+  * standard 100 TB-capable implicit-MF solver. Serving (top-k, MMR, the
+  * cold probe, coverage) ranks on the driver against a per-model factor
+  * index (`indexOf`): the factors are (users + items) × rank, orders of
+  * magnitude smaller than the interaction data, and are collected once
+  * per model, so a request pays arithmetic, not Spark jobs. Nothing here
   * collects interaction-scale data to the driver.
   */
 object Recommender {
@@ -59,8 +62,7 @@ object Recommender {
   /** Empty frame with the given DDL schema — the shape of a
     * model-backed result when there is no data to train on. */
   def emptyOf(spark: SparkSession, ddl: String): DataFrame =
-    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), StructType.fromDDL(ddl))
 
   /** M2: ALS implicit-MF, seeded (mf_knn_recommender.py:23 defaults →
     * rank/reg; ALS maxIter replaces SGD epochs). */
@@ -114,120 +116,120 @@ object Recommender {
   }
 
   /** Query-user block ceiling for cosineTopK: above this, the
-    * broadcast block stops being "small" and the MLlib blocked path
-    * (`recommendForAllUsers`) is the right tool. Guarded explicitly so
-    * the serve-path collect can never silently become a driver OOM. */
+    * per-request ranking stops being "small" and the MLlib blocked path
+    * (`recommendForAllUsers`) is the right tool. Guarded explicitly so a
+    * serving request can never silently become a driver OOM. */
   val MaxQueryUsers = 100000
 
   // ranking order of the final selection: score desc under Spark SQL's
   // double comparison (-0.0 = 0.0, NaN largest), then item asc
-  private def better(a: (Int, Double), b: (Int, Double)): Boolean = {
-    val c = if (a._2 == b._2) 0 else java.lang.Double.compare(a._2, b._2)
-    c > 0 || (c == 0 && a._1 < b._1)
+  private def better(i: Int, s: Double, j: Int, t: Double): Boolean = {
+    val c = if (s == t) 0 else java.lang.Double.compare(s, t)
+    c > 0 || (c == 0 && i < j)
   }
+  private def better(a: (Int, Double), b: (Int, Double)): Boolean = better(a._1, a._2, b._1, b._2)
 
-  /** The (id, factor) rows of `factors` (`userFactors` or `itemFactors`)
-    * whose id is in `ids`, in one job. The ids reach the tasks as data —
-    * a sorted array in the filter's closure, searched by binary search.
-    * An `isin` filter would write them into the generated code as
-    * `In`/`InSet` literals, so each request would compile new classes
-    * that no cache can reuse; here the generated code depends only on
-    * the plan shape and compiles once per JVM. */
-  private def factorsOf(factors: DataFrame, ids: Array[Int]): Array[(Int, Array[Float])] = {
+  /** One side of a model's factors on the driver: the ids ascending, and
+    * a flat row-major matrix whose row p is the `unit`-normalized factor
+    * of the id at position p. */
+  private final class UnitFactors(val ids: Array[Int], val vecs: Array[Double], val rank: Int) {
+    def row(id: Int): Array[Double] = {
+      val p = java.util.Arrays.binarySearch(ids, id)
+      java.util.Arrays.copyOfRange(vecs, p * rank, (p + 1) * rank)
+    }
+  }
+  private final case class FactorIndex(users: UnitFactors, items: UnitFactors)
+
+  private def unitFactors(factors: DataFrame, rank: Int): UnitFactors = {
     val spark = factors.sparkSession
     import spark.implicits._
-    val sorted = ids.sorted
-    factors.as[(Int, Array[Float])].rdd
-      .filter { case (id, _) => java.util.Arrays.binarySearch(sorted, id) >= 0 }
-      .collect()
+    val rows = factors.as[(Int, Array[Float])].collect().sortBy(_._1)
+    val m = new Array[Double](rows.length * rank)
+    for (i <- rows.indices) System.arraycopy(unit(rows(i)._2), 0, m, i * rank, rank)
+    new UnitFactors(rows.map(_._1), m, rank)
   }
 
-  /** The k best items of every distinct known query user, best first,
-    * users in ascending id order. Two jobs: one `factorsOf` lookup of
-    * the query users' factors (the query ids themselves are collected
-    * first, which is free for a local frame), then one scan
-    * of the item factors in which each partition keeps a bounded
-    * per-user heap (the ranking analog of a map-side combine) and the
-    * partition heaps merge by `treeReduce`. Only users×k×partitions
-    * candidates ever leave the executors; the full users×items score
-    * matrix is never shuffled or sorted. */
-  private def topKPools(model: ALSModel, users: DataFrame, k: Int)
-      : Array[(Int, Array[(Int, Double)])] = {
-    val spark = model.userFactors.sparkSession
-    import spark.implicits._
-    // distinct ids: a repeated query user is one ranking, not two
-    val ids = users.select(col("user").cast("int")).collect()
-      .collect { case r if !r.isNullAt(0) => r.getInt(0) }.distinct
-    require(ids.length <= MaxQueryUsers,
-      s"cosineTopK serves bounded query sets (got ${ids.length} users, " +
-        s"max $MaxQueryUsers); use ALSModel.recommendForAllUsers for full-catalog batch")
-    if (ids.isEmpty || k <= 0) return Array.empty
-    val uvecs: Array[(Int, Array[Double])] = factorsOf(model.userFactors, ids)
-      .map { case (u, f) => (u, unit(f)) }.sortBy(_._1)
-    if (uvecs.isEmpty) return Array.empty
-    val bc = spark.sparkContext.broadcast(uvecs)
-    val top = model.itemFactors.as[(Int, Array[Float])].rdd
-      .mapPartitions { it =>
-        val us = bc.value
-        val nU = us.length
-        val rank = us(0)._2.length
-        // the user block as ONE flat primitive matrix: the inner loop
-        // below runs O(queryUsers × items) times per partition — at
-        // the 100× rehearsal that was 3×10¹⁰ iterations, and indexing
-        // a Map[user → heap] PER ITERATION (the original shape) spent
-        // more time hashing than multiplying (measured 22 min of pure
-        // serving at sf10). Heaps index by position; the flat matrix
-        // keeps the dot-product walk sequential in memory. Summation
-        // order per dot product is unchanged, so scores — and the
-        // oracle hash — are bit-identical.
-        val uflat = new Array[Double](nU * rank)
-        var i = 0
-        while (i < nU) {
-          System.arraycopy(us(i)._2, 0, uflat, i * rank, rank); i += 1
-        }
-        // per-user bounded heap whose head is the worst kept candidate
-        val worstFirst = Ordering.fromLessThan[(Int, Double)](better)
-        val heaps = Array.fill(nU)(
-          new scala.collection.mutable.PriorityQueue[(Int, Double)]()(worstFirst))
-        it.foreach { case (item, f) =>
-          val nf = unit(f)
-          var ui = 0
-          var off = 0
-          while (ui < nU) {
-            var s = 0.0; var d = 0
-            while (d < rank) { s += uflat(off + d) * nf(d); d += 1 }
-            val h = heaps(ui)
-            if (h.size < k) h.enqueue((item, s))
-            else {
-              val (wItem, wScore) = h.head
-              if (s > wScore || (s == wScore && item < wItem)) {
-                h.dequeue(); h.enqueue((item, s))
-              }
-            }
-            ui += 1
-            off += rank
-          }
-        }
-        Iterator(heaps.map(_.toArray.sortWith(better)))
-      }
-      .treeReduce((a, b) => a.zip(b).map { case (x, y) => (x ++ y).sortWith(better).take(k) })
-    bc.destroy()
-    uvecs.map(_._1).zip(top)
+  // keyed weakly by model instance, not by dir: `evaluate` and callers
+  // fit models of their own, and a dropped model frees its index
+  private val indexes = new java.util.WeakHashMap[ALSModel, FactorIndex]()
+
+  /** The model's index: two collects the first time, a lookup after.
+    * Driver memory is (users + items) × rank × 8 B; each collect is
+    * bounded by the deployment's `spark.driver.maxResultSize`. */
+  private def indexOf(model: ALSModel): FactorIndex = indexes.synchronized {
+    Option(indexes.get(model)).getOrElse {
+      val ix = FactorIndex(unitFactors(model.userFactors, model.rank),
+        unitFactors(model.itemFactors, model.rank))
+      indexes.put(model, ix)
+      ix
+    }
   }
+
+  /** The k best items of every distinct known user in `ids`, best first,
+    * users ascending: per user one pass over the index's item matrix with
+    * a bounded heap whose head is the worst kept candidate. Dot products
+    * sum in index order, as `vec_dot` does, so scores are bit-identical
+    * to any SQL formulation over the same factors. */
+  private def topKPools(model: ALSModel, ids: Array[Int], k: Int)
+      : Seq[(Int, Seq[(Int, Double)])] = {
+    // distinct ids: a repeated query user is one ranking, not two
+    val query = ids.distinct.sorted
+    require(query.length <= MaxQueryUsers,
+      s"cosineTopK serves bounded query sets (got ${query.length} users, " +
+        s"max $MaxQueryUsers); use ALSModel.recommendForAllUsers for full-catalog batch")
+    if (query.isEmpty || k <= 0) return Nil
+    val FactorIndex(us, is) = indexOf(model)
+    val rank = us.rank
+    val worstFirst = Ordering.fromLessThan[(Int, Double)](better)
+    query.toSeq.flatMap { u =>
+      val p = java.util.Arrays.binarySearch(us.ids, u)
+      if (p < 0) None
+      else {
+        val heap = scala.collection.mutable.PriorityQueue[(Int, Double)]()(worstFirst)
+        val uo = p * rank
+        var j = 0
+        while (j < is.ids.length) {
+          var s = 0.0; var d = 0
+          val io = j * rank
+          while (d < rank) { s += us.vecs(uo + d) * is.vecs(io + d); d += 1 }
+          val item = is.ids(j)
+          if (heap.size < k) heap.enqueue((item, s))
+          else if (better(item, s, heap.head._1, heap.head._2)) {
+            heap.dequeue(); heap.enqueue((item, s))
+          }
+          j += 1
+        }
+        Some(u -> heap.toArray.sortWith(better).toSeq)
+      }
+    }
+  }
+
+  /** The non-null query ids of a (user) frame, collected without a job
+    * for a local frame. A frame that is one int `user` column is collected
+    * as is: the cast's projection would cost a planning pass per request. */
+  private def queryIds(users: DataFrame): Array[Int] = {
+    val ids = users.schema.fields.toSeq.map(f => (f.name, f.dataType)) match {
+      case Seq(("user", IntegerType)) => users
+      case _ => users.select(col("user").cast("int"))
+    }
+    ids.collect().collect { case r if !r.isNullAt(0) => r.getInt(0) }
+  }
+
+  /** A local (user, item, score, rank) frame of rankings, each best
+    * first. Rows against a fixed schema: deriving a tuple encoder by
+    * reflection would cost more than the ranking. */
+  private def rankingFrame(spark: SparkSession, ranked: Seq[(Int, Seq[(Int, Double)])]): DataFrame =
+    spark.createDataFrame(ranked.flatMap { case (u, top) =>
+      top.zipWithIndex.map { case ((item, s), i) => Row(u, item, s, i + 1) }
+    }.asJava, StructType.fromDDL("user int, item int, score double, rank int"))
 
   /** M3/M4: cosine top-k for a set of users, as a local
-    * (user, item, score, rank) frame — the ranking is already complete
-    * on the driver when this returns (see `topKPools` for the two jobs
-    * it runs). Unknown and null query users get no rows; a repeated
-    * user is ranked once. Driver memory: the query block's factors
-    * plus users × k result rows, under the `MaxQueryUsers` guard. */
-  def cosineTopK(model: ALSModel, users: DataFrame, k: Int): DataFrame = {
-    val spark = model.userFactors.sparkSession
-    import spark.implicits._
-    topKPools(model, users, k).toSeq.flatMap { case (u, top) =>
-      top.toSeq.zipWithIndex.map { case ((item, s), i) => (u, item, s, i + 1) }
-    }.toDF("user", "item", "score", "rank")
-  }
+    * (user, item, score, rank) frame ranked on the driver (`topKPools`).
+    * Unknown and null query users get no rows; a repeated user is ranked
+    * once. For a local user frame no Spark job runs once the model's
+    * index exists. */
+  def cosineTopK(model: ALSModel, users: DataFrame, k: Int): DataFrame =
+    rankingFrame(users.sparkSession, topKPools(model, queryIds(users), k))
 
   /** M6: Maximal-Marginal-Relevance diversification, exactly the
     * reference's greedy loop (mf_knn_recommender.py:477-547): pool =
@@ -262,29 +264,17 @@ object Recommender {
     selected.map(i => (cands(i)._1, rel(i))).toSeq
   }
 
-  /** MMR over a user set: the merged top-3k cosine pool per user (one
-    * `topKPools` pass), the normalized vectors of the pools' distinct
-    * items in one `factorsOf` lookup (ids as data, so no per-request
-    * code), then `mmrSelect` per user on the driver — three jobs for a
-    * local user frame. Driver memory: users
-    * × 3k pool entries plus one vector per distinct pool item, under
-    * the `MaxQueryUsers` guard. */
+  /** MMR over a user set: the top-3k cosine pool per user (`topKPools`),
+    * the pool items' vectors from the model's index, then `mmrSelect` per
+    * user, all on the driver: for a local user frame no Spark job runs
+    * once the index exists. */
   def diversify(model: ALSModel, users: DataFrame, k: Int = 5,
-                lambda: Double = 0.5): DataFrame = {
-    val spark = users.sparkSession
-    import spark.implicits._
-    val pools = topKPools(model, users, k * 3)
-    val poolItems = pools.flatMap(_._2.map(_._1)).distinct
-    val vecs: Map[Int, Array[Double]] =
-      if (poolItems.isEmpty) Map.empty
-      else factorsOf(model.itemFactors, poolItems).map { case (i, f) => i -> unit(f) }.toMap
-    pools.toSeq.flatMap { case (user, pool) =>
-      val cands = pool.toSeq.map { case (item, s) => (item, s, vecs(item)) }
-      mmrSelect(cands, k, lambda).zipWithIndex.map {
-        case ((item, rel), i) => (user, item, rel, i + 1)
-      }
-    }.toDF("user", "item", "score", "rank")
-  }
+                lambda: Double = 0.5): DataFrame =
+    rankingFrame(users.sparkSession,
+      topKPools(model, queryIds(users), k * 3).map { case (user, pool) =>
+        val items = indexOf(model).items
+        (user, mmrSelect(pool.map { case (item, s) => (item, s, items.row(item)) }, k, lambda))
+      })
 
   /** M7: ranking evaluation with the reference's exact (nonstandard)
     * semantics (mf_knn_recommender.py:365-448): precision divides by
@@ -349,18 +339,18 @@ object Recommender {
 
   /** M8: catalog coverage — |distinct recommended over a sample| /
     * |all trained items| (mf_knn_recommender.py:450-475; deterministic
-    * first-100-users sample replaces the seeded shuffle). */
+    * first-100-users sample replaces the seeded shuffle). The sample and
+    * the item total come from the model's index. */
   def coverage(spark: SparkSession, dir: String, k: Int = 5,
                sampleSize: Int = 100): DataFrame = {
     if (!hasInteractions(spark, dir))
       return emptyOf(spark,
         "items_recommended bigint, items_total bigint, coverage double")
     val model = train(spark, dir)
-    val users = model.userFactors.select(col("id").as("user"))
-      .orderBy("user").limit(sampleSize)
-    val recommended = cosineTopK(model, users, k)
-      .select("item").distinct().count()
-    val total = model.itemFactors.count()
+    val ix = indexOf(model)
+    val recommended = topKPools(model, ix.users.ids.take(sampleSize), k)
+      .flatMap(_._2.map(_._1)).distinct.length.toLong
+    val total = ix.items.ids.length.toLong
     import spark.implicits._
     Seq((recommended, total, recommended.toDouble / total))
       .toDF("items_recommended", "items_total", "coverage")

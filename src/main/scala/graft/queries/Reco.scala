@@ -66,9 +66,10 @@ object Reco {
   val queries: Map[String, Q] = Map(
     "reco_interactions" -> ((s, dir) =>
       Recommender.interactions(Tables(s, dir))),
-    // M3: two-phase partial cosine top-k. Contract: every sampled user
-    // gets exactly K dense-ranked, distinct, score-monotone rows with
-    // cosine in [-1, 1]. (Bit-exactness vs brute force: RecommenderSpec.)
+    // M3: cosine top-k off the model's factor index. Contract: every
+    // sampled user gets exactly K dense-ranked, distinct, score-monotone
+    // rows with cosine in [-1, 1]. (Bit-exactness vs brute force:
+    // RecommenderSpec.)
     "reco_topk_cosine" -> ((s, dir) => {
       // no interactions → no model: an empty ranking satisfies the
       // contract vacuously (the contract math runs on the empty frame)

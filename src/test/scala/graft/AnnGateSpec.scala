@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
 
 /** Pins BOTH paths of the ANN query-side broadcast gates
@@ -73,6 +74,21 @@ class AnnGateSpec extends SparkSpec {
         o.isInstanceOf[BroadcastNestedLoopJoinExec]),
         s"$n: gate-scale probe join lost its broadcast")
     }
+  }
+
+  test("a recall entry leaves no cached truth frame behind for ss_knn_brute") {
+    // no cache clear between the two: ss_knn_lsh's truth term is
+    // ss_knn_brute's whole plan, so a frame it left cached would be
+    // served as an opaque in-memory scan in place of the broadcast join
+    spark.catalog.clearCache()
+    graft.queries.Similarity.queries("ss_knn_lsh")(spark, dir).collect()
+    val q = graft.queries.Similarity.queries("ss_knn_brute")(spark, dir)
+    q.collect()
+    val ops = unwrap(q.queryExecution.executedPlan)
+    assert(ops.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
+      "ss_knn_brute lost its broadcast join")
+    assert(!ops.exists(_.isInstanceOf[InMemoryTableScanExec]),
+      "ss_knn_brute read a frame an earlier query left cached")
   }
 
   test("ivfStep: oracle stride at gate scale, √n cells past IvfOracleN") {

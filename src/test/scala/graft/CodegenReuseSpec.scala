@@ -34,6 +34,12 @@ class CodegenReuseSpec extends SparkSpec {
       Recommender.diversify(model, Seq(12, 33, 41).toDF("user"), 5, 0.5).collect()) == 0)
   }
 
+  test("indexing a second model compiles nothing") {
+    Recommender.cosineTopK(model, Seq(0).toDF("user"), 5).collect()
+    val other = RecommenderSpec.model(spark, seed = 11)
+    assert(compilesOf(Recommender.cosineTopK(other, Seq(0).toDF("user"), 5).collect()) == 0)
+  }
+
   test("more shapes than the default cache holds compile once") {
     // each query's literal is written into its generated code: 150 shapes
     val queries = (1 to 150).map(i => () => spark.range(4).select((col("id") + i).as("x")).collect())

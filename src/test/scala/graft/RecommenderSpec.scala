@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ml.Recommender
 
-/** Exactness spec for the two-phase partial top-k: against a trained
-  * model it must equal the brute-force full-scan ranking, bit for bit
-  * (same dot-product accumulation order). */
+/** Exactness spec for the driver-side top-k over a model's factor index:
+  * against a trained model it must equal the brute-force full-scan
+  * ranking, bit for bit (same dot-product accumulation order). */
 class RecommenderSpec extends SparkSpec {
   import spark.implicits._
 
@@ -32,13 +32,16 @@ class RecommenderSpec extends SparkSpec {
     val n = math.sqrt(v.map(x => x * x).sum)
     if (n > 0) v.map(_ / n) else v
   }
-  private lazy val uf = model.userFactors.as[(Int, Seq[Float])].collect()
-    .map { case (id, f) => id -> norm(f.map(_.toDouble).toArray) }.toMap
-  private lazy val itf = model.itemFactors.as[(Int, Seq[Float])].collect()
-    .map { case (id, f) => id -> norm(f.map(_.toDouble).toArray) }
+  private def unitFactors(f: org.apache.spark.sql.DataFrame) = f.as[(Int, Seq[Float])].collect()
+    .map { case (id, v) => id -> norm(v.map(_.toDouble).toArray) }
+  private lazy val uf = unitFactors(model.userFactors).toMap
+  private lazy val itf = unitFactors(model.itemFactors)
 
   /** The full ranking of every item for user `u`, cut at `n`. */
-  private def bruteTopK(u: Int, n: Int): Seq[(Int, Double)] =
+  private def bruteTopK(u: Int, n: Int): Seq[(Int, Double)] = bruteTopK(uf, itf, u, n)
+
+  private def bruteTopK(uf: Map[Int, Array[Double]], itf: Array[(Int, Array[Double])],
+                        u: Int, n: Int): Seq[(Int, Double)] =
     itf.toSeq.map { case (item, iv) =>
         var s = 0.0; var d = 0
         while (d < iv.length) { s += uf(u)(d) * iv(d); d += 1 }
@@ -46,6 +49,50 @@ class RecommenderSpec extends SparkSpec {
       }
       .sortBy { case (item, s) => (-s, item) }
       .take(n)
+
+  private def topK(m: org.apache.spark.ml.recommendation.ALSModel, users: Seq[Int], k: Int) =
+    Recommender.cosineTopK(m, users.toDF("user"), k)
+      .orderBy("user", "rank").as[(Int, Int, Double, Int)].collect().toSeq
+
+  private def bruteRows(uf: Map[Int, Array[Double]], itf: Array[(Int, Array[Double])],
+                        users: Seq[Int], k: Int) =
+    users.distinct.sorted.filter(uf.contains).flatMap { u =>
+      bruteTopK(uf, itf, u, k).zipWithIndex.map { case ((item, s), i) => (u, item, s, i + 1) }
+    }
+
+  test("a query of every trained user is bit-exact against brute force") {
+    val all = uf.keys.toSeq.sorted
+    assert(all == (0 until 60), "the fixture trains all 60 users")
+    assert(topK(model, all, 5) == bruteRows(uf, itf, all, 5))
+  }
+
+  test("k at or past the catalog size returns every item once per user") {
+    for (k <- Seq(itf.length, itf.length + 10)) {
+      val got = topK(model, Seq(0, 7), k)
+      assert(got == bruteRows(uf, itf, Seq(0, 7), k), s"k=$k")
+      for (u <- Seq(0, 7))
+        assert(got.filter(_._1 == u).map(_._2).sorted == itf.map(_._1).toSeq.sorted, s"k=$k user $u")
+    }
+  }
+
+  test("k = 0 and an all-cold frame return no rows") {
+    assert(topK(model, Seq(0, 7), 0).isEmpty)
+    assert(topK(model, Seq(-1, -2, 1000), 5).isEmpty)
+    assert(Recommender.diversify(model, Seq(0, 7).toDF("user"), 0, 0.5).collect().isEmpty)
+    assert(Recommender.diversify(model, Seq(-1).toDF("user"), 5, 0.5).collect().isEmpty)
+  }
+
+  test("a second model is ranked against its own factors, not the first's index") {
+    val users = Seq(0, 7, 21, 33)
+    topK(model, users, 5) // the first model is indexed
+    val other = RecommenderSpec.model(spark, seed = 7)
+    val ouf = unitFactors(other.userFactors).toMap
+    val oitf = unitFactors(other.itemFactors)
+    val got = topK(other, users, 5)
+    assert(got == bruteRows(ouf, oitf, users, 5))
+    // the memo is per model: the two models' rankings differ
+    assert(got != topK(model, users, 5))
+  }
 
   test("a repeated query user is ranked once") {
     val k = 5
@@ -86,7 +133,7 @@ class RecommenderSpec extends SparkSpec {
 
 object RecommenderSpec {
   /** ALS over deterministic synthetic interactions: 60 users × 40 items. */
-  def model(spark: org.apache.spark.sql.SparkSession)
+  def model(spark: org.apache.spark.sql.SparkSession, seed: Long = 42)
       : org.apache.spark.ml.recommendation.ALSModel = {
     import spark.implicits._
     val pairs = for {
@@ -94,7 +141,7 @@ object RecommenderSpec {
       if (u * 31 + i * 17) % 7 == 0
     } yield (u, i, 1.0f)
     new org.apache.spark.ml.recommendation.ALS()
-      .setImplicitPrefs(true).setRank(8).setMaxIter(5).setSeed(42)
+      .setImplicitPrefs(true).setRank(8).setMaxIter(5).setSeed(seed)
       .setUserCol("user").setItemCol("item").setRatingCol("rating")
       .fit(pairs.toDF("user", "item", "rating"))
   }

@@ -47,19 +47,31 @@ class ServingJobsSpec extends SparkSpec {
     }
   }
 
-  test("cosineTopK on a local user frame: factor lookup + one item scan") {
+  test("the first request on a fresh model builds its index: two collects") {
+    val fresh = RecommenderSpec.model(spark, seed = 3)
+    assert(jobsOf(Recommender.cosineTopK(fresh, Seq(0, 7).toDF("user"), 5).collect()) == 2)
+  }
+
+  test("cosineTopK on a local user frame runs no job once the model is indexed") {
     val users = Seq(0, 7, 21).toDF("user")
-    Recommender.cosineTopK(model, users, 5).collect() // fit the model
-    assert(jobsOf(Recommender.cosineTopK(model, users, 5).collect()) == 2)
+    Recommender.cosineTopK(model, users, 5).collect() // build the index
+    assert(jobsOf(Recommender.cosineTopK(model, users, 5).collect()) == 0)
   }
 
-  test("cosineTopK for cold users only: the factor lookup alone") {
-    assert(jobsOf(Recommender.cosineTopK(model, Seq(-1, -2).toDF("user"), 5).collect()) == 1)
+  test("cosineTopK for cold users only runs no job") {
+    Recommender.cosineTopK(model, Seq(0).toDF("user"), 5).collect()
+    assert(jobsOf(Recommender.cosineTopK(model, Seq(-1, -2).toDF("user"), 5).collect()) == 0)
   }
 
-  test("diversify: top-3k pass + one pool-vector lookup") {
+  test("diversify runs no job once the model is indexed") {
     val users = Seq(0, 7).toDF("user")
-    assert(jobsOf(Recommender.diversify(model, users, 5, 0.5).collect()) == 3)
+    Recommender.cosineTopK(model, users, 5).collect()
+    assert(jobsOf(Recommender.diversify(model, users, 5, 0.5).collect()) == 0)
+  }
+
+  test("coverage on an indexed dir runs no job") {
+    Recommender.coverage(spark, dir).collect() // train and index the dir's model
+    assert(jobsOf(Recommender.coverage(spark, dir).collect()) == 0)
   }
 
   test("runSql resolves with one schema job per table the SQL names") {

@@ -22,10 +22,14 @@
 # range. Below the verdicts it prints each side's median of the compile
 # counters in the per-seed sidecars (.bench_build/sidecars/<workload>-
 # trace0-seed<N>.json): generated classes compiled and JIT ms in the timed
-# region. Raw result lines go to <scratch-dir>/results.jsonl.
+# region. Last, for a workload with request kinds (`serve`), it prints each
+# side's median request wall time per kind (ml.topk, ml.diversify,
+# ml.cold_probe, analytics.warehouse_sql, analytics.staging_sql), every
+# seed's timed requests pooled. Raw result lines go to
+# <scratch-dir>/results.jsonl.
 set -euo pipefail
 
-[ $# -ge 2 ] || { sed -n '2,25p' "$0"; exit 2; }
+[ $# -ge 2 ] || { sed -n '2,29p' "$0"; exit 2; }
 workload=$1 pairs=$2 ref=${3:-HEAD~1} seed0=${4:-1}
 scratch=${5:-${TMPDIR:-/tmp}/graft-ab}
 repo=$(pwd)
@@ -117,4 +121,24 @@ for key in ("timed_codegen_classes", "timed_jit_ms"):
         xs = [c[key] for c in cars if c]
         cols.append(f"{side} {statistics.median(xs):.6g} (n={len(xs)})" if xs else f"{side} -")
     print(f"{key:<24}{cols[0]:>24}{cols[1]:>24}")
+
+def requests(car):
+    cycles = {o["id"] for o in car["ops"] if o["name"] == "cycle"}
+    return [o for o in car["ops"] if o["parent"] in cycles and o["ok"]]
+
+walls = {}
+for side, side_dir in (("parent", parent_dir), ("change", change_dir)):
+    for s in seeds:
+        car = sidecar(side_dir, s) if runs[side][s] else None
+        for o in requests(car) if car else []:
+            walls.setdefault((side, o["name"]), []).append(o["wall_ms"])
+kinds = [k for k in ("ml.topk", "ml.diversify", "ml.cold_probe", "analytics.warehouse_sql",
+                     "analytics.staging_sql") if any(n == k for _, n in walls)]
+if kinds:
+    print("request wall_ms medians (timed region, all seeds pooled)")
+    for kind in kinds:
+        cols = [f"{side} {statistics.median(xs):.6g} (n={len(xs)})"
+                if (xs := walls.get((side, kind))) else f"{side} -"
+                for side in ("parent", "change")]
+        print(f"{kind:<24}{cols[0]:>24}{cols[1]:>24}")
 EOF

@@ -54,7 +54,7 @@ object Bench {
 
   /** IO-heavy entries whose first sample is made explicitly COLD: the
     * app's scratch state (streaming checkpoints, staged tables, ledger
-    * dirs) and the Spark cache are dropped before the sample, so the
+    * dirs) is dropped before the sample (queries leave no cache), so the
     * reported pair {cold = min of dropped-state samples, warm = min of
     * the rest} separates first-build IO cost from steady-state reuse.
     * Baselines for these entries are written from the COLD number —
@@ -168,10 +168,7 @@ object Bench {
       val fn = SparkEntry.queries(name)
       val coldQ = coldExplicit.contains(name)
       def once(cold: Boolean): (Boolean, Double, Boolean) = {
-        if (cold) {
-          graft.core.GraftSession.dropScratch(spark)
-          spark.catalog.clearCache()
-        }
+        if (cold) graft.core.GraftSession.dropScratch(spark)
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true } catch {
           case e: Throwable =>
@@ -188,7 +185,7 @@ object Bench {
       // reported statistic, and what baselines are built from) is a
       // steady-state number either way; the warmup only stops warmup
       // tail samples from masquerading as steal spread. Cold entries
-      // still drop scratch+cache before their timed cold sample, so
+      // still drop scratch before their timed cold sample, so
       // the warmup leaves them JIT-warm but IO-cold — cold measures
       // first-build IO, not janino compilation.
       try fn(spark, sfDir).count() catch { case _: Throwable => () }
@@ -201,7 +198,7 @@ object Bench {
       // (With the untimed warmup above, run 1 is steady-state and
       // participates in the spread test like every other sample.)
       def good = timings.filter(_._1).map(_._2)
-      // cold/warm split: a cold sample (scratch + cache dropped first)
+      // cold/warm split: a cold sample (scratch dropped first)
       // is legitimately slower and must not feed the steal heuristics
       def goodCold = timings.filter(t => t._1 && t._3).map(_._2)
       def goodWarm = timings.filter(t => t._1 && !t._3).map(_._2)
@@ -240,24 +237,8 @@ object Bench {
           .mkString("  [", " ", "]") +
         (if (retried) "  (retried)" else "") +
         (if (suspect) f"  (SUSPECT: baseline ${base.get}%.2f)" else ""))
-      // release per-query persisted intermediates so one query's cache
-      // doesn't squeeze the next query's execution memory. Three
-      // layers, because clearCache alone left the suite accumulating
-      // pressure (r9: reco_item_item — entry ~36 of 53 — rose
-      // monotonically 7.2→9.5→11.7 s within its own runs, while flat
-      // in isolation): (1) catalog cache; (2) RDD-level blocks —
-      // localCheckpoint output (g_reachability, ss_knn_graph,
-      // llm_corpus_build) registers in the block manager but NOT the
-      // catalog cache, so clearCache never dropped it; (3) a driver GC
-      // nudge so the ContextCleaner reclaims shuffle files and
-      // broadcast blocks of the just-finished query — with a 100+ GiB
-      // heap the JVM may otherwise not GC for the whole suite, and
-      // dozens of queries' shuffle spill stays on disk squeezing the
-      // page cache the next query's scans need.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      System.gc()
+      // the finished query's blocks must not squeeze the next one's memory
+      graft.core.GraftSession.reclaimFinished()
       (name, sec, timings, retried, suspect, cold, warm)
     }
     val loadAfter = loadavg()

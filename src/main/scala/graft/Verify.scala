@@ -63,18 +63,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         e.printStackTrace()
       }
-      // release per-query persisted intermediates between queries —
-      // the same three layers as Bench (see its comment): catalog
-      // cache, RDD-level blocks (localCheckpoint output registers in
-      // the block manager but NOT the catalog cache), and a driver GC
-      // nudge so the ContextCleaner reclaims the finished query's
-      // shuffle/broadcast blocks. clearCache alone let a 217-query
-      // sweep accumulate block-manager pressure (measured: the late
-      // dedup entries ran 10×+ their isolated time at sf1).
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      System.gc()
+      // the finished query's blocks must not squeeze the next one's memory
+      graft.core.GraftSession.reclaimFinished()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -126,6 +126,12 @@ object GraftSession {
   }
   private val rowCounts = new CountMemo(onError = -1L)
 
+  /** Between two queries of a harness run: a GC, so the ContextCleaner
+    * drops the finished query's checkpoint, shuffle and broadcast blocks
+    * (a large heap may not collect for the whole run). It clears no
+    * cache: queries release their own (`Persisted`), and a leak shows. */
+  def reclaimFinished(): Unit = System.gc()
+
   /** Local session used by mains and tests. */
   def local(appName: String = "graft"): SparkSession = {
     val cpus = defaultCpus

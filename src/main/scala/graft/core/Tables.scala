@@ -52,8 +52,7 @@ final case class Tables(spark: SparkSession, dir: String) {
   lazy val documents: DataFrame  = table("documents")
   lazy val embeddings: DataFrame = table("embeddings")
 
-  val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "events", "documents", "embeddings")
+  def names: Seq[String] = Tables.names
 
   /** Register tables (by default every one) as temp views so
     * `spark.sql` works against the same names the DuckDB oracle uses
@@ -61,4 +60,10 @@ final case class Tables(spark: SparkSession, dir: String) {
   def registerViews(only: Seq[String] = names): Unit = only.foreach { n =>
     table(n).createOrReplaceTempView(n)
   }
+}
+
+object Tables {
+  /** The harness tables, one `<name>.parquet` each under a data dir. */
+  val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
+    "part", "orders", "lineitem", "events", "documents", "embeddings")
 }

@@ -438,8 +438,9 @@ object ItemItem {
     val capped = cappedPurchases(t)
     // one materialization of the capped purchases: without it the
     // fact-join→distinct→cap subtree executes once for the n_i collect
-    // and again for the pair emit. Bench's inter-query hygiene
-    // (getPersistentRDDs.unpersist) reclaims it.
+    // and again for the pair emit. The ContextCleaner drops its
+    // blocks once the returned frame, whose lineage holds it, is
+    // garbage.
     val cappedCp = capped.localCheckpoint()
     val (ids, counts) = codeTable(
       cappedCp.groupBy(col("item")).agg(count(lit(1)).as("n_i"))

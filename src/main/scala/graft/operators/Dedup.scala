@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.PlanStats
+import graft.core.{Persisted, PlanStats}
 import graft.functions.TextFunctions.normText
 
 /** Document deduplication operators for training-data pipelines:
@@ -80,14 +80,13 @@ object Dedup {
     * with exact Jaccard over the shingle sets. */
   def minhashLshPairs(docs: DataFrame, n: Int = 3, k: Int = 16, bands: Int = 4,
                       minJaccard: Double = 0.5, textCol: String = "text",
-                      normalize: Boolean = true): DataFrame = {
+                      normalize: Boolean = true): DataFrame = Persisted.scoped { p =>
     val r = k / bands
-    // persisted: feeds banding AND both sides of the verify join (at
+    // kept: feeds banding AND both sides of the verify join (at
     // warehouse scale this signature table is written to storage once).
-    val sigs = minhashSignatures(
+    val sigs = p.keep(minhashSignatures(
       withShingles(docs, textCol = textCol, n = n, normalize = normalize), k = k)
-      .select(col("doc_id"), col("shingles"), col("sig"))
-      .persist()
+      .select(col("doc_id"), col("shingles"), col("sig")))
     val banded = sigs.select(
       col("doc_id"),
       posexplode(transform(
@@ -156,10 +155,11 @@ object Dedup {
     * (docs agreeing on any 16-bit quarter of the signature), then
     * compute the exact 64-bit Hamming distance per candidate pair and
     * keep pairs under the threshold. */
-  def simhashPairs(simsIn: DataFrame, maxHamming: Int = 16): DataFrame = {
+  def simhashPairs(simsIn: DataFrame, maxHamming: Int = 16): DataFrame =
+      Persisted.scoped { p =>
     // the 64-agg signature build feeds both sides of the self-join —
     // compute it once.
-    val sims = simsIn.persist()
+    val sims = p.keep(simsIn)
     val banded = sims.select(
       col("doc_id"), col("simhash"),
       posexplode(expr("transform(sequence(0, 3), b -> substr(simhash, b * 4 + 1, 4))")))
@@ -196,8 +196,8 @@ object Dedup {
     * convergence is O(log diameter) — a pathological million-node
     * chain costs ~20 rounds, not a million. The driver loop only
     * checks the converged count — all data stays distributed. */
-  def clusters(pairs: DataFrame, driverMaxEdges: Long = 1L << 20): DataFrame = {
-    val spark = pairs.sparkSession
+  def clusters(pairs: DataFrame, driverMaxEdges: Long = 1L << 20): DataFrame =
+      Persisted.scoped { p =>
     // Small-graph fast path: near-dup edge sets are SPARSE (dedup
     // pairs, not social graphs), and below ~1M edges (≤ ~16 MB — a
     // bounded, documented collect) a driver union-find finishes in
@@ -206,9 +206,9 @@ object Dedup {
     // member id per component). Above the bound, the distributed
     // doubling loop below takes over; ClustersSpec pins both paths to
     // identical results.
-    val slim = pairs.select(col("id_a"), col("id_b")).persist()
+    val slim = p.keep(pairs.select(col("id_a"), col("id_b")))
     // ONE parallel materializing job decides the path (a count over
-    // the persisted frame — map-side partials, every partition at
+    // the kept frame — map-side partials, every partition at
     // once). The r17 probe, limit(cap+1).collect(), looked like one
     // bounded action but planned CollectLimitExec, whose executeTake
     // scans 1, 4, 16, … partitions in SERIALIZED jobs until the limit
@@ -220,31 +220,37 @@ object Dedup {
     // path fetches nothing at all — the old probe collected up to
     // cap+1 rows just to discard them (driver pressure, wasted fetch).
     val cap = math.min(driverMaxEdges, (Int.MaxValue - 2).toLong)
-    val nEdges = slim.count()
-    if (nEdges <= cap) {
-      val arr = slim.collect().map(r => (r.getLong(0), r.getLong(1)))
-      slim.unpersist()
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-        r
-      }
-      arr.foreach { case (a, b) =>
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val out = parent.keys.toSeq.map(id => (id, find(id))).sorted
-      import spark.implicits._
-      return out.toDF("doc_id", "cluster_id").repartition(
-        spark.sparkContext.defaultParallelism, col("cluster_id"))
+    if (slim.count() <= cap) unionFind(slim) else fixpoint(p, slim)
+  }
+
+  private def unionFind(slim: DataFrame): DataFrame = {
+    val spark = slim.sparkSession
+    val arr = slim.collect().map(r => (r.getLong(0), r.getLong(1)))
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
+      r
     }
-    val edges = slim.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(slim.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .persist()
+    arr.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val out = parent.keys.toSeq.map(id => (id, find(id))).sorted
+    import spark.implicits._
+    out.toDF("doc_id", "cluster_id").repartition(
+      spark.sparkContext.defaultParallelism, col("cluster_id"))
+  }
+
+  /** clusters' distributed fixpoint; its result reads the last label
+    * generation, which the scope checkpoints before releasing it. */
+  private def fixpoint(p: Persisted, slim: DataFrame): DataFrame = {
+    val spark = slim.sparkSession
+    val edges = p.keep(slim.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .unionByName(slim.select(col("id_b").as("src"), col("id_a").as("dst"))))
     // Generation discipline — the two failure modes of iterative plans,
     // both fatal long before 100 TB, handled explicitly:
     //  - PLAN growth: labels_k naively references labels_{k-1} twice
@@ -254,25 +260,26 @@ object Dedup {
     //    driver for minutes). Each generation is therefore re-rooted
     //    as a LogicalRDD over its materialized cache — iteration plans
     //    stay O(1).
-    //  - CACHE growth: the previous generation is dropped once the new
-    //    one is materialized, so a long fixpoint holds exactly one
-    //    labels copy in executor memory, not one per iteration.
+    //  - CACHE growth: the previous generation is dropped from the
+    //    scope once the new one is materialized, so a long fixpoint
+    //    holds exactly one labels copy in executor memory, not one per
+    //    iteration.
     var cachedGen: Option[DataFrame] = None
     // materialize a generation with ONE action — the changed-count IS
     // the materializing job (a separate count() per generation would
     // double the fixed per-round job cost that dominates sparse edge
     // sets) — then re-root it as a LogicalRDD over the cache.
     def advance(df: DataFrame): (DataFrame, Long) = {
-      val next = df.persist()
+      val next = p.keep(df)
       val changed = next.filter(col("new_label") < col("label")).count()
-      cachedGen.foreach(_.unpersist())
+      cachedGen.foreach(p.drop)
       cachedGen = Some(next)
       (spark.createDataFrame(next.rdd, next.schema)
         .select(col("id"), col("new_label").as("label")), changed)
     }
     var labels = {
-      val init = edges.select(col("src").as("id")).distinct()
-        .withColumn("label", col("id")).persist()
+      val init = p.keep(edges.select(col("src").as("id")).distinct()
+        .withColumn("label", col("id")))
       init.count()
       cachedGen = Some(init)
       spark.createDataFrame(init.rdd, init.schema)
@@ -305,10 +312,6 @@ object Dedup {
       labels = next
       changed = ch
     }
-    // edges fed only the (now materialized) final generation, which the
-    // returned frame reads from.
-    edges.unpersist()
-    slim.unpersist()
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }
 
@@ -327,7 +330,7 @@ object Dedup {
     *  - a size-ratio pre-filter before the expensive intersection:
     *    J(A,B) <= min(|A|,|B|)/max(|A|,|B|) is a LOSSLESS bound for
     *    the thresholded output.
-    * The signature relation is persisted: it feeds candidate
+    * The signature relation is kept: it feeds candidate
     * generation AND both sides of the verify join (at warehouse scale
     * this intermediate would be written to storage once instead).
     * Verify joins are hash-hinted so the wide gram arrays are never
@@ -352,7 +355,7 @@ object Dedup {
 
   def charGramPairs(docs: DataFrame, n: Int = 4, k: Int = 16, bands: Int = 4,
                     minJaccard: Double = 0.8, packVerify: Boolean = false)
-      : DataFrame = {
+      : DataFrame = Persisted.scoped { p =>
     val r = k / bands
     // t and the gram array are bound ONCE per row as single-element-
     // transform lambda VALUES (the DocumentStream lesson). As a
@@ -367,12 +370,12 @@ object Dedup {
     // lambda values makes single evaluation a property of the
     // EXPRESSION, not of which optimizer rules fire around it; A/B'd
     // perf-neutral here (1.2 s sf0.1 / ~24 s sf1 both forms). The
-    // persisted frame carries the packed struct so the cache build
+    // kept frame carries the packed struct so the cache build
     // evaluates it once.
     // same one-pass native signature as minhashSignatures (bit-equal
     // to the old per-salt HOF chain — MinhashSigSpec)
     val sigOf = (arr: Column) => minhashSig(arr, k)
-    // the persisted verify arrays: packed ints (8→4 B/gram of array
+    // the kept verify arrays: packed ints (8→4 B/gram of array
     // payload vs 16 B/gram for 4-char strings — the gram arrays are
     // what every candidate pair ships through the verify exchange, so
     // this is the dominant byte count of the whole entry at scale)
@@ -399,9 +402,8 @@ object Dedup {
           // two, the division is lossless in double
           floor(length(t) / lit(64)).cast("long").as("lb"),
           sigOf(gs).as("sig"))), lit(1))), lit(1))
-    val grams = PlanStats.spread(docs, "doc_id")
-      .select(col("doc_id"), packed.as("s"))
-      .persist()
+    val grams = p.keep(PlanStats.spread(docs, "doc_id")
+      .select(col("doc_id"), packed.as("s")))
       .select(col("doc_id"), col("s.grams").as("grams"),
         col("s.lb").as("lb"), col("s.sig").as("sig"))
     // candidate generation joins only (id, set-size, band key) — the

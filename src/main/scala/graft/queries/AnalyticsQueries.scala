@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.analytics.Analytics
-import graft.core.Tables
+import graft.core.{Persisted, Tables}
 
 /** Ad-hoc SQL / catalog / export surface (S12–S15) plus the remaining
   * §2 inventory gaps: W3 label encoding and T2 pagination. */
@@ -134,7 +134,7 @@ object AnalyticsQueries {
     // for reprocessing, the pipeline keeps moving); DROPMALFORMED
     // silently discards. The emitted row carries all three observed
     // counts, every one oracle-stated.
-    "an_badrecords" -> ((s, dir) => {
+    "an_badrecords" -> ((s, dir) => Persisted.scoped { p =>
       val out = graft.core.GraftSession.scratchDir(s, "badrec", dir)
       val t = Tables(s, dir)
       t.nation.toJSON.write.mode("overwrite").text(out)
@@ -152,18 +152,16 @@ object AnalyticsQueries {
       // Spark disallows filtering on ONLY the corrupt column straight
       // off the raw scan (it would be pruned away) — materialize the
       // parse once, then split good/quarantined from the cached frame
-      val permissive = s.read.schema(schema)
+      val permissive = p.keep(s.read.schema(schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_bad")
-        .json(out)
-        .cache()
+        .json(out))
       val dropped = s.read.schema(org.apache.spark.sql.types.StructType(schema.dropRight(1)))
         .option("mode", "DROPMALFORMED").json(out)
-      try Seq((permissive.filter(col("_bad").isNull).count(),
-               permissive.filter(col("_bad").isNotNull).count(),
-               dropped.count()))
+      Seq((permissive.filter(col("_bad").isNull).count(),
+           permissive.filter(col("_bad").isNotNull).count(),
+           dropped.count()))
         .toDF("n_good", "n_quarantined", "n_after_drop")
-      finally permissive.unpersist()
     }),
     // schema evolution — the lake's tables grow columns over years;
     // mergeSchema unions the per-file schemas at read time so old

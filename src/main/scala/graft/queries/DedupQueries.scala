@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Persisted, Tables}
 import graft.operators.Dedup
 
 /** Deduplication surface over `documents` (SURVEY.md north-star
@@ -120,12 +120,11 @@ object DedupQueries {
     // oracle recomputes the pairs from the full-corpus definition
     // under the same blocking — hash-equality proves probe-side
     // incrementality loses nothing.
-    "dd_lsh_incremental" -> ((s, dir) => {
-      val sigs = Dedup.minhashSignatures(
+    "dd_lsh_incremental" -> ((s, dir) => Persisted.scoped { p =>
+      val sigs = p.keep(Dedup.minhashSignatures(
           Dedup.withShingles(Tables(s, dir).documents))
         .select(col("doc_id"), col("shingles"), col("sig"),
-          (col("doc_id") % 5 === 4).as("is_new"))
-        .persist()
+          (col("doc_id") % 5 === 4).as("is_new")))
       val banded = sigs.select(col("doc_id"), col("is_new"),
         posexplode(transform(sequence(lit(0), lit(3)),
           b => md5(concat_ws("|", slice(col("sig"), b * 4 + 1, lit(4)))))))
@@ -162,9 +161,9 @@ object DedupQueries {
     // sets of each surviving pair, so scores are exact; only pairs
     // sharing nothing but boilerplate are (deliberately) out of
     // scope, and the oracle applies the identical candidate rule.
-    "dd_containment" -> ((s, dir) => {
-      val sh = Dedup.withShingles(Tables(s, dir).documents)
-        .select(col("doc_id"), col("shingles")).persist()
+    "dd_containment" -> ((s, dir) => Persisted.scoped { p =>
+      val sh = p.keep(Dedup.withShingles(Tables(s, dir).documents)
+        .select(col("doc_id"), col("shingles")))
       val ex = sh.select(col("doc_id"), explode(col("shingles")).as("shingle"))
       val rare = ex.groupBy(col("shingle"))
         .agg(count(lit(1)).as("df")).filter(col("df") <= 50)

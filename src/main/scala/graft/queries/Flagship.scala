@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.Tables
+import graft.core.{Persisted, Tables}
 import graft.functions.TextFunctions._
 import graft.operators.Dedup
 
@@ -50,19 +50,18 @@ object Flagship {
   type Q = (SparkSession, String) => DataFrame
 
   /** The pipeline's stage sets, each a (doc_id[, …]) frame. Built once
-    * per query; the heavy multi-consumer intermediates are persisted. */
+    * per query; the heavy multi-consumer intermediates are kept. */
   private final case class Stages(
-    docs: DataFrame,      // full input corpus
+    docs: DataFrame,      // full input corpus (kept)
     gate: DataFrame,      // doc_ids passing the quality gate
-    kept: DataFrame,      // docs ∩ gate (persisted)
+    kept: DataFrame,      // docs ∩ gate (kept)
     exactKeep: DataFrame, // exact-content representatives within kept
     nearDrop: DataFrame,  // near-dup cluster members that aren't reps
-    deduped: DataFrame,   // kept minus dup drops (persisted)
+    deduped: DataFrame,   // kept minus dup drops (kept)
     clean: DataFrame,     // even-half deduped docs clearing decontamination
-    mixed: DataFrame,     // clean docs surviving the per-cell mix cap
-    release: () => Unit)  // drops every stage persist (docs/kept/deduped/shingles)
+    mixed: DataFrame)     // clean docs surviving the per-cell mix cap
 
-  private def stages(s: SparkSession, dir: String): Stages = {
+  private def stages(p: Persisted, s: SparkSession, dir: String): Stages = {
     // normalize ONCE: the normText regex chain is the dominant per-row
     // cost of every text pass, and this pipeline would otherwise run
     // it five times (gate, exact dedup, LSH shingling, both
@@ -71,7 +70,7 @@ object Flagship {
     // take it with normalize = false (identical semantics — normText
     // is idempotent). At warehouse scale this column is exactly what
     // you'd store alongside the raw text.
-    // spread the corpus BEFORE the normalize+persist (PlanStats.spread):
+    // spread the corpus BEFORE the normalize+keep (PlanStats.spread):
     // a compact parquet source caches at its few input splits, and
     // every one-time heavy pass the cache build pays (the normText
     // regex chain, the gate's bigram agg) inherits that width — measured at sf10: the cache-build stages
@@ -79,8 +78,8 @@ object Flagship {
     // Small corpora pay one narrow exchange for full-width builds; at
     // warehouse scale the estimate exceeds the threshold and the
     // source's own splits already parallelize (no exchange — §6).
-    val docs = graft.core.PlanStats.spread(Tables(s, dir).documents, "doc_id")
-      .withColumn("nrm", normText(col("text"))).persist()
+    val docs = p.keep(graft.core.PlanStats.spread(Tables(s, dir).documents, "doc_id")
+      .withColumn("nrm", normText(col("text"))))
 
     // stage 1 — quality gate, same thresholds as tx_filter_pipeline
     val words = docs.select(col("doc_id"), col("lang"),
@@ -92,7 +91,7 @@ object Flagship {
     val gate = Text.topBigram(words).join(base, Seq("doc_id"), "right")
       .filter(Text.gatePredicate)
       .select("doc_id")
-    val kept = docs.join(gate, Seq("doc_id"), "left_semi").persist()
+    val kept = p.keep(docs.join(gate, Seq("doc_id"), "left_semi"))
 
     // stage 2 — exact + near dedup among the survivors
     val exactKeep = Dedup.exact(kept, textCol = "nrm", normalize = false)
@@ -100,9 +99,8 @@ object Flagship {
     val nearDrop = Dedup.clusters(
         Dedup.minhashLshPairs(kept, textCol = "nrm", normalize = false))
       .filter(col("doc_id") =!= col("cluster_id")).select("doc_id")
-    val deduped = kept.join(exactKeep, Seq("doc_id"), "left_semi")
-      .join(nearDrop, Seq("doc_id"), "left_anti")
-      .persist()
+    val deduped = p.keep(kept.join(exactKeep, Seq("doc_id"), "left_semi")
+      .join(nearDrop, Seq("doc_id"), "left_anti"))
 
     // stage 3 — decontaminate the train half (even doc_id) against
     // the eval half's shingle set: drop a train doc when ≥50% of its
@@ -114,21 +112,19 @@ object Flagship {
     // near-verbatim leakage (which includes all cross-half exact
     // dupes at overlap 1.0). The eval set is the external benchmark
     // corpus, so it is NOT quality-filtered.
-    // BOTH shingle frames are multi-consumer and therefore persisted
-    // (measured at sf10, round 18: without the persists each subtree
+    // BOTH shingle frames are multi-consumer and therefore kept
+    // (measured at sf10: without the caches each subtree
     // executed TWICE — evalSh once inside the bloom's scalar subquery
     // and once as the join side [identical stage twins, ~63 s of a
     // 206 s wall], trSh once for the explode probe and once for the
     // clean-side size() — the CacheManager substitutes the cache into
     // subquery plans too, so one materialization now serves both).
-    val evalSh = Dedup.withShingles(docs.filter(col("doc_id") % 2 === 1),
+    val evalSh = p.keep(Dedup.withShingles(docs.filter(col("doc_id") % 2 === 1),
         textCol = "nrm", normalize = false)
-      .select(explode(col("shingles")).as("shingle")).distinct()
-      .persist()
-    val trSh = Dedup.withShingles(deduped.filter(col("doc_id") % 2 === 0),
+      .select(explode(col("shingles")).as("shingle")).distinct())
+    val trSh = p.keep(Dedup.withShingles(deduped.filter(col("doc_id") % 2 === 0),
         textCol = "nrm", normalize = false)
-      .select(col("doc_id"), col("shingles"))
-      .persist()
+      .select(col("doc_id"), col("shingles")))
     val exploded = trSh.select(col("doc_id"), explode(col("shingles")).as("shingle"))
     val probe = graft.functions.BloomFilterSupport
       .mightContainProbe(evalSh, "shingle", col("shingle"), 1L * 1000 * 1000)
@@ -147,52 +143,40 @@ object Flagship {
     val mixed = cleanDocs.withColumn("pick_rank", row_number().over(w))
       .filter(col("pick_rank") <= Text.MixCap)
 
-    Stages(docs, gate, kept, exactKeep, nearDrop, deduped, clean, mixed,
-      () => {
-        docs.unpersist(); kept.unpersist(); deduped.unpersist()
-        evalSh.unpersist(); trSh.unpersist()
-      })
+    Stages(docs, gate, kept, exactKeep, nearDrop, deduped, clean, mixed)
   }
 
   val queries: Map[String, Q] = Map(
     "llm_corpus_build" -> ((s, dir) => {
-      val st = stages(s, dir)
       // stage 5 — pack into PackTokens-sized training windows. The
-      // mixed survivor set is SMALL (≤ MixCap per cell), so an eager
-      // localCheckpoint materializes it and severs the lineage back to
-      // the corpus-sized persisted intermediates — which can then be
-      // RELEASED instead of sitting in the block manager for the rest
-      // of a 200-query sweep (the final write re-executes only the
-      // checkpointed frame, not the pipeline).
-      val sized = st.mixed.select(col("doc_id"), col("lang"), col("source"),
-        wsTokenCount(col("text")).cast("long").as("n_tokens"))
-        .localCheckpoint(true)
-      st.release()
+      // mixed survivor set is SMALL (≤ MixCap per cell); the scope
+      // checkpoints it and releases the corpus-sized stage caches, so
+      // packing (and the final write) re-executes only the checkpointed
+      // frame, not the pipeline.
+      val sized = Persisted.scoped { p =>
+        stages(p, s, dir).mixed.select(col("doc_id"), col("lang"), col("source"),
+          wsTokenCount(col("text")).cast("long").as("n_tokens"))
+      }
       Text.packPrefix(s, sized)
     }),
     // provenance: one row per INPUT doc, naming the FIRST stage that
     // dropped it (pipeline order), 'kept' for corpus members. Pure
     // doc_id-keyed left joins of the stage sets + one CASE — the
     // audit costs one extra pass over slim id sets, not a second
-    // pipeline run per stage.
-    "llm_corpus_audit" -> ((s, dir) => {
-      val (out, release) = auditPlan(s, dir)
-      // one row per input doc — materialize and release the
-      // corpus-sized persists (same argument as the build)
-      val cp = out.localCheckpoint(true)
-      release()
-      cp
-    }))
+    // pipeline run per stage. One row per input doc: the scope
+    // checkpoints it and releases the stage caches.
+    "llm_corpus_audit" -> ((s, dir) =>
+      Persisted.scoped(p => auditPlan(p, s, dir))))
 
-  /** The composed audit frame BEFORE the checkpoint, plus a handle
-    * releasing the stage persists — the plan-inspection surface for
-    * PlanSpec (the public query checkpoints its result, which hides
-    * the composed plan from executedPlan). */
-  private[graft] def auditPlan(s: SparkSession, dir: String): (DataFrame, () => Unit) = {
-    val st = stages(s, dir)
+  /** The composed audit frame over the stage sets kept in `p`, before
+    * the scope checkpoints it — the plan-inspection surface for
+    * PlanSpec (the checkpointed result hides the composed plan from
+    * executedPlan). */
+  private[graft] def auditPlan(p: Persisted, s: SparkSession, dir: String): DataFrame = {
+    val st = stages(p, s, dir)
     def mark(df: DataFrame, name: String): DataFrame =
       df.select(col("doc_id"), lit(true).as(name))
-    val out = st.docs.select(col("doc_id"))
+    st.docs.select(col("doc_id"))
       .join(mark(st.gate, "in_gate"), Seq("doc_id"), "left")
       .join(mark(st.exactKeep, "is_exact_rep"), Seq("doc_id"), "left")
       .join(mark(st.nearDrop, "is_near_drop"), Seq("doc_id"), "left")
@@ -206,7 +190,6 @@ object Flagship {
           .when(col("is_clean").isNull, "contaminated")
           .when(col("in_mix").isNull, "mix_overflow")
           .otherwise("kept").as("stage"))
-    (out, st.release)
   }
 
   /** DuckDB shingle-list rendering (Dedup.withShingles, n = 3) over

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{GraftSession, Tables}
+import graft.core.{GraftSession, Persisted, Tables}
 
 /** Graph signals over the order interaction graph — the warehouse
   * analog of the link-analysis quality scores (PageRank-family) that
@@ -114,11 +114,11 @@ object Graph {
     * disables broadcasting here as everywhere else.
     *
     * Each round's frame is lineage-truncated (eager localCheckpoint),
-    * so driver planning stays O(1) per round. `edges` is released once
-    * laid out — a caller that persisted it to derive other frames hands
-    * that cache over — and the laid-out copy is released before the
-    * result, which no longer reads it, is returned. */
-  private def iterate(edges: DataFrame, init: DataFrame => DataFrame,
+    * so driver planning stays O(1) per round. The laid-out copy is kept
+    * in the caller's scope `p`, and `edges`, if `p` keeps it, is dropped
+    * from the scope once laid out. The result, a checkpoint, reads
+    * neither, so the scope returns it as is. */
+  private def iterate(p: Persisted, edges: DataFrame, init: DataFrame => DataFrame,
                       nodeBound: Long, rounds: Int)(
       round: (Round, DataFrame) => DataFrame): DataFrame = {
     // init's schema is the same over either layout: analyze it on the
@@ -126,29 +126,26 @@ object Graph {
     val rowBytes = 8 + init(edges).schema.map(_.dataType.defaultSize).sum
     val broadcastable = BigInt(nodeBound) * rowBytes <=
       edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val laid = edges.repartition(col(if (broadcastable) "dst" else "src"))
-      .persist()
+    val laid = p.keep(edges.repartition(col(if (broadcastable) "dst" else "src")))
     val meet: DataFrame => DataFrame =
       if (broadcastable) broadcast(_) else _.hint("shuffle_merge")
     laid.count() // built while a caller's cached `edges` still serves it
-    edges.unpersist()
+    p.drop(edges)
     var state = init(laid)
     for (i <- 1 to rounds)
       state = round(Round(laid, meet, i), state).localCheckpoint(true)
-    laid.unpersist()
     state
   }
 
   val queries: Map[String, Q] = Map(
-    "g_pagerank" -> ((s, dir) => {
+    "g_pagerank" -> ((s, dir) => Persisted.scoped { p =>
       // the node table (with each node's out-degree) comes from the
-      // edges, which are persisted so the layout built inside `iterate`
+      // edges, which are kept so the layout built inside `iterate`
       // reads them from cache. Counting the nodes yields the exact n
       // for the rank base and the layout gate.
-      val edges = tradeEdges(Tables(s, dir)).persist()
-      val nodes = edges.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("outdeg"))
-        .persist()
+      val edges = p.keep(tradeEdges(Tables(s, dir)))
+      val nodes = p.keep(edges.groupBy(col("src").as("node"))
+        .agg(count(lit(1)).as("outdeg")))
       val n = nodes.count()
       // empty graph (no orders↔lineitem pairs — an empty partition or
       // a fully-filtered slice in production): rank mass is 1/n per
@@ -161,7 +158,7 @@ object Graph {
         nodes.select(col("node"), col("outdeg"), lit(base).as("rank"))
       // contributions aggregate by dst, and the new-rank join against
       // nodes runs on the aggregate's dst partitioning
-      val ranks = iterate(edges, init, n, Iters) { (r, ranks) =>
+      val ranks = iterate(p, edges, init, n, Iters) { (r, ranks) =>
         r.edges.join(r.meet(ranks), col("src") === col("node"))
           .select(col("dst"), expr("rank div outdeg").as("c"))
           .groupBy(col("dst"))
@@ -170,10 +167,9 @@ object Graph {
           .select(col("node"), col("outdeg"),
             (lit(teleport) + expr("(85 * csum) div 100")).as("rank"))
       }
-      nodes.unpersist()
       decode(ranks, col("rank").as("rank_scaled"))
     }),
-    "g_reachability" -> ((s, dir) => {
+    "g_reachability" -> ((s, dir) => Persisted.scoped { p =>
       // multi-source BFS: exact min hop distance (≤ MaxHops) from the
       // nation-0 supplier seed set over the customer↔supplier trading
       // graph — the reachability/blast-radius primitive (fraud rings,
@@ -184,7 +180,7 @@ object Graph {
       val t = Tables(s, dir)
       val seeds = t.supplier.filter(col("s_nationkey") === 0)
         .select((col("s_suppkey") * 2 + 1).as("node"), lit(0).as("hops"))
-      val dist = iterate(tradeEdges(t), _ => seeds, nodeBound(t), MaxHops) {
+      val dist = iterate(p, tradeEdges(t), _ => seeds, nodeBound(t), MaxHops) {
         (r, dist) =>
           dist.unionByName(r.edges.join(r.meet(dist), col("src") === col("node"))
               .select(col("dst").as("node"), lit(r.number).as("hops")))
@@ -193,7 +189,7 @@ object Graph {
       }
       decode(dist, col("hops"))
     }),
-    "g_label_propagation" -> ((s, dir) => {
+    "g_label_propagation" -> ((s, dir) => Persisted.scoped { p =>
       // community detection by SYNCHRONOUS label propagation, fixed 5
       // rounds: every node adopts the most frequent label among its
       // neighbors, ties broken to the SMALLEST label, every round.
@@ -246,7 +242,7 @@ object Graph {
         else expr("max_by(label, named_struct('c', c, 'nl', -label))")
       val init = (e: DataFrame) => e.select(col("src")).distinct()
         .select(col("src").as("node"), col("src").as("label"))
-      val labels = iterate(tradeEdges(t), init, nBound, Iters) { (r, labels) =>
+      val labels = iterate(p, tradeEdges(t), init, nBound, Iters) { (r, labels) =>
         r.edges
           .join(r.meet(labels.withColumnRenamed("node", "src")), Seq("src"))
           .groupBy(col("dst").as("node"), col("label"))
@@ -256,7 +252,7 @@ object Graph {
       }
       decode(labels, col("label"))
     }),
-    "g_common_neighbors" -> ((s, dir) => {
+    "g_common_neighbors" -> ((s, dir) => Persisted.scoped { p =>
       // link prediction on the part co-order graph: for non-adjacent
       // pairs, common-neighbor count + Jaccard — the classic
       // friend-of-friend candidate generator. Wedge fan-out at a hub
@@ -275,20 +271,18 @@ object Graph {
       val items = Tables(s, dir).lineitem
         .select(col("l_orderkey").as("okey"), col("l_partkey").as("pk"))
         .distinct()
-      val edges = items.select(col("okey"), col("pk").as("u"))
+      val edges = p.keep(items.select(col("okey"), col("pk").as("u"))
         .join(items.select(col("okey"), col("pk").as("v")), Seq("okey"))
         .filter(col("u") < col("v"))
         .groupBy(col("u"), col("v")).agg(count(lit(1)).as("w"))
         .filter(col("w") >= 2)
-        .select(col("u"), col("v"))
-        .persist()
+        .select(col("u"), col("v")))
       val adjAll = edges.select(col("u").as("node"), col("v").as("nbr"))
         .unionByName(edges.select(col("v").as("node"), col("u").as("nbr")))
-      val adj = adjAll
+      val adj = p.keep(adjAll
         .withColumn("rk", row_number().over(
           Window.partitionBy(col("node")).orderBy(col("nbr"))))
-        .filter(col("rk") <= MaxNbrs).drop("rk")
-        .persist()
+        .filter(col("rk") <= MaxNbrs).drop("rk"))
       val deg = adj.groupBy(col("node")).agg(count(lit(1)).as("d"))
       val cands = adj.select(col("node"), col("nbr").as("a"))
         .join(adj.select(col("node"), col("nbr").as("b")), Seq("node"))
@@ -305,7 +299,7 @@ object Graph {
         .orderBy(col("common").desc, col("u"), col("v"))
         .limit(TopPairs)
     }),
-    "g_triangle_count" -> ((s, dir) => {
+    "g_triangle_count" -> ((s, dir) => Persisted.scoped { p =>
       // triangle counting on the part co-order graph (edge = two parts
       // co-ordered in >= 2 distinct orders — the same support floor as
       // w11 keeps the projection sparse; a bipartite projection with
@@ -321,28 +315,26 @@ object Graph {
       val items = Tables(s, dir).lineitem
         .select(col("l_orderkey").as("okey"), col("l_partkey").as("pk"))
         .distinct()
-      val edges = items.select(col("okey"), col("pk").as("u"))
+      val edges = p.keep(items.select(col("okey"), col("pk").as("u"))
         .join(items.select(col("okey"), col("pk").as("v")), Seq("okey"))
         .filter(col("u") < col("v"))
         .groupBy(col("u"), col("v"))
         .agg(count(lit(1)).as("w"))
         .filter(col("w") >= 2)
-        .select(col("u"), col("v"))
-        .persist()
+        .select(col("u"), col("v")))
       val deg = edges.select(col("u").as("x"))
         .unionByName(edges.select(col("v").as("x")))
         .groupBy(col("x")).agg(count(lit(1)).as("d"))
       val withDeg = edges
         .join(deg.select(col("x").as("u"), col("d").as("du")), Seq("u"))
         .join(deg.select(col("x").as("v"), col("d").as("dv")), Seq("v"))
-      val oriented = withDeg.select(
+      val oriented = p.keep(withDeg.select(
           when(col("du") < col("dv") ||
             (col("du") === col("dv") && col("u") < col("v")), col("u"))
             .otherwise(col("v")).as("src"),
           when(col("du") < col("dv") ||
             (col("du") === col("dv") && col("u") < col("v")), col("v"))
-            .otherwise(col("u")).as("dst"))
-        .persist()
+            .otherwise(col("u")).as("dst")))
       val wedges = oriented.select(col("src"), col("dst").as("a"))
         .join(oriented.select(col("src"), col("dst").as("b")), Seq("src"))
         .filter(col("a") < col("b"))

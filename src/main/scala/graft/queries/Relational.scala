@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
-import graft.core.Tables
+import graft.core.{Persisted, Tables}
 
 /** Relational operator inventory (SURVEY.md §2.1–§2.8) demonstrated on
   * the harness tables, each with a DuckDB-checkable oracle.
@@ -565,7 +565,7 @@ object Relational {
           when(col("_fresh"), col("t_type")).as("touch_type"),
           col("_fresh").as("attributed"))
     }),
-    "w11_market_basket" -> ((s, dir) => {
+    "w11_market_basket" -> ((s, dir) => Persisted.scoped { p =>
       // market-basket pair mining — support/lift for parts co-ordered
       // in the same order, the association-rule core of an e-commerce
       // "bought together" feature. The scale discipline is apriori
@@ -584,7 +584,7 @@ object Relational {
       val freq = items.groupBy(col("pk"))
         .agg(count(lit(1)).as("n_item"))
         .filter(col("n_item") >= minSup)
-      val fi = items.join(freq, Seq("pk")).persist()
+      val fi = p.keep(items.join(freq, Seq("pk")))
       val nOrders = items.select(countDistinct(col("okey")).as("n_orders"))
       val pairs = fi.select(col("okey"), col("pk").as("part_a"), col("n_item").as("n_a"))
         .join(fi.select(col("okey"), col("pk").as("part_b"), col("n_item").as("n_b")),
@@ -631,7 +631,7 @@ object Relational {
         .groupBy(col("s_suppkey"))
         .agg(max(col("active")).as("peak_backlog"))
     }),
-    "w13_rfm" -> ((s, dir) => {
+    "w13_rfm" -> ((s, dir) => Persisted.scoped { p =>
       // RFM segmentation (recency / frequency / monetary quintiles) —
       // the classic e-commerce customer scoring. The trap at scale is
       // the textbook `ntile(5) OVER (ORDER BY metric)`: a global
@@ -646,12 +646,11 @@ object Relational {
       // deterministic end to end.
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val base = Tables(s, dir).orders
+      val base = p.keep(Tables(s, dir).orders
         .groupBy(col("o_custkey").as("c_custkey"))
         .agg(max(col("o_orderdate")).as("last_order"),
              count(lit(1)).as("n_orders"),
-             dsum(col("o_totalprice")).as("monetary"))
-        .persist()
+             dsum(col("o_totalprice")).as("monetary")))
       def ranked(metric: String, rankName: String): DataFrame = {
         val ordered = base.select(col("c_custkey"), col(metric))
           .repartitionByRange(s.sparkContext.defaultParallelism,

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.{PlanStats, Tables}
+import graft.core.{Persisted, PlanStats, Tables}
 import graft.functions.VectorFunctions._
 import graft.functions.{PqAdc, PqEncode, PqExpressions}
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -405,7 +405,7 @@ object Similarity {
     // same adaptive-plane multi-probe machinery as ss_knn_lsh in
     // dim+1, exact-dot rerank of candidates, recall contract vs the
     // in-query brute MIPS truth.
-    "ss_knn_mips_lsh" -> ((s, dir) => {
+    "ss_knn_mips_lsh" -> ((s, dir) => Persisted.scoped { p =>
       val e = Tables(s, dir).embeddings
       val n = e.count()
       val nQ = e.filter(col("vec_id") % 100 === 0).count()
@@ -427,10 +427,9 @@ object Similarity {
         .withColumn("qbucket", expr(signBucketSql("aqe", DIM + 1, nP)))
         .withColumn("probe", explode(expr(probeArraySql("qbucket", nP))))
         .select("qid", "qe", "probe")
-      val cands = qJoin(aug, q, satMul(nQ, probeCount(nP)),
+      val cands = p.keep(qJoin(aug, q, satMul(nQ, probeCount(nP)),
           col("bucket") === col("probe"))
-        .filter(col("vec_id") =!= col("qid"))
-        .persist()
+        .filter(col("vec_id") =!= col("qid")))
       val candRows = cands.count()
       val w = Window.partitionBy(col("qid")).orderBy(col("dot").desc, col("vec_id"))
       val ann = cands
@@ -438,9 +437,8 @@ object Similarity {
           expr(dotSql("qe", "embedding", DIM)).as("dot"))
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= K)
-      try recallContract(ann, bruteMipsTopK(e, nQ), nQ, n, candRows,
+      recallContract(ann, bruteMipsTopK(e, nQ), nQ, n, candRows,
         minRecall = 0.3, maxScanFrac = 0.5)
-      finally cands.unpersist()
     }),
     // Scale-path ANN: plane count adapts to corpus size (buckets ∝ n)
     // and queries probe every bucket within Hamming distance 2 of
@@ -448,7 +446,7 @@ object Similarity {
     // (22/64 at 6 planes → 301/16.7M at 24), so sharper buckets never
     // starve the candidate set. Verified by a recall contract against
     // the in-query brute-force truth.
-    "ss_knn_lsh" -> ((s, dir) => {
+    "ss_knn_lsh" -> ((s, dir) => Persisted.scoped { p =>
       val e = Tables(s, dir).embeddings
       val n = e.count()
       val nQ = e.filter(col("vec_id") % 100 === 0).count()
@@ -459,10 +457,9 @@ object Similarity {
         .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("bucket"))
         .withColumn("probe", explode(expr(probeArraySql("bucket", nP))))
         .select("qid", "qe", "probe")
-      val cands = qJoin(eb, q, satMul(nQ, probeCount(nP)),
+      val cands = p.keep(qJoin(eb, q, satMul(nQ, probeCount(nP)),
           col("bucket") === col("probe"))
-        .filter(col("vec_id") =!= col("qid"))
-        .persist()
+        .filter(col("vec_id") =!= col("qid")))
       val candRows = cands.count()
       val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
       val ann = cands
@@ -471,11 +468,10 @@ object Similarity {
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= K)
       // measured 0.48 (sf0.01) / 0.59 (sf0.1) at ~1/3 scan on this
-      // isotropic corpus; asserted with margin. The contract is
-      // computed eagerly, so cands is released as soon as it returns.
-      try recallContract(ann, bruteTopK(e, nQ), nQ, n, candRows,
+      // isotropic corpus; asserted with margin. The contract is a
+      // local row, so the scope releases cands without a checkpoint.
+      recallContract(ann, bruteTopK(e, nQ), nQ, n, candRows,
         minRecall = 0.3, maxScanFrac = 0.5)
-      finally cands.unpersist()
     }),
     // Oracle-exact LSH form: constant 6-plane index with the SAME
     // Hamming≤2 multi-probe as the adaptive path (22/64 buckets per
@@ -624,7 +620,7 @@ object Similarity {
     // the data path doesn't change. Centroids are solver output, so
     // verification is the recall contract. nprobe=4 to hold recall on
     // this unclustered corpus.
-    "ss_knn_ivf_kmeans" -> ((s, dir) => {
+    "ss_knn_ivf_kmeans" -> ((s, dir) => Persisted.scoped { p =>
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
       val e = Tables(s, dir).embeddings
@@ -674,9 +670,8 @@ object Similarity {
           expr(cosineSql("qe", "ce", DIM)).as("qsim"))
         .withColumn("qrn", row_number().over(wq)).filter(col("qrn") <= nProbeK)
         .select("qid", "qe", "cid")
-      val cands = qJoinOn(assigned, probes, satMul(nQ, nProbeK), Seq("cid"))
-        .filter(col("vec_id") =!= col("qid"))
-        .persist()
+      val cands = p.keep(qJoinOn(assigned, probes, satMul(nQ, nProbeK), Seq("cid"))
+        .filter(col("vec_id") =!= col("qid")))
       val candRows = cands.count()
       val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
       val ann = cands
@@ -684,9 +679,8 @@ object Similarity {
           expr(cosineSql("qe", "embedding", DIM)).as("cosine"))
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= K)
-      try recallContract(ann, bruteTopK(e, nQ), nQ, n, candRows,
+      recallContract(ann, bruteTopK(e, nQ), nQ, n, candRows,
         minRecall = 0.2, maxScanFrac = 0.5)
-      finally cands.unpersist()
     }),
     // scalar-quantized (int8) ANN: compress every float to an 8-bit
     // code against the global [min, max] range — 4x less memory and
@@ -696,19 +690,18 @@ object Similarity {
     // the accumulation order), so unlike float-sum ANN this variant is
     // bit-identical across engines BY CONSTRUCTION, and the oracle
     // checks it exactly.
-    "ss_knn_sq" -> ((s, dir) => {
+    "ss_knn_sq" -> ((s, dir) => Persisted.scoped { p =>
       val e = Tables(s, dir).embeddings
       val stats = e.agg(
         min(expr("array_min(embedding)")).cast("double").as("mn"),
         max(expr("array_max(embedding)")).cast("double").as("mx"))
       val quant = "transform(embedding, x -> CAST(least(255, " +
         "floor((CAST(x AS DOUBLE) - mn) / (mx - mn) * 256.0)) AS DOUBLE))"
-      // persisted: the quantized relation feeds both sides of the
+      // kept: the quantized relation feeds both sides of the
       // query×corpus scoring join — without it the quantization
       // lineage runs twice.
-      val eq = PlanStats.spread(e, "vec_id").crossJoin(broadcast(stats))
-        .select(col("vec_id"), expr(quant).as("qv"))
-        .persist()
+      val eq = p.keep(PlanStats.spread(e, "vec_id").crossJoin(broadcast(stats))
+        .select(col("vec_id"), expr(quant).as("qv")))
       val q = eq.filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("qid"), col("qv").as("qq"))
       val w = Window.partitionBy(col("qid")).orderBy(col("qcos").desc, col("vec_id"))
@@ -799,7 +792,7 @@ object Similarity {
     // literal — the embedding column never shuffles); search is one
     // equi-join on the cell id against broadcast probes. Codebook is
     // trained (pqCodebook), so verification is the recall contract.
-    "ss_knn_ivfpq" -> ((s, dir) => {
+    "ss_knn_ivfpq" -> ((s, dir) => Persisted.scoped { p =>
       val e = Tables(s, dir).embeddings
       val n = e.count()
       val nQ = e.filter(col("vec_id") % 100 === 0).count()
@@ -828,9 +821,8 @@ object Similarity {
           expr(cosineSql("qe", "ce", DIM)).as("qsim"))
         .withColumn("qrn", row_number().over(wq)).filter(col("qrn") <= nProbeC)
         .select("qid", "qe", "cid")
-      val cands = qJoinOn(assigned, probes, satMul(nQ, nProbeC), Seq("cid"))
-        .filter(col("vec_id") =!= col("qid"))
-        .persist()
+      val cands = p.keep(qJoinOn(assigned, probes, satMul(nQ, nProbeC), Seq("cid"))
+        .filter(col("vec_id") =!= col("qid")))
       val candRows = cands.count()
       // ADC ranking on codes within the probed cells, then exact
       // rerank of the top-R shortlist on true vectors
@@ -850,9 +842,8 @@ object Similarity {
       // measured recall@5 vs brute: 0.44 (sf0.001) / 0.36 (sf0.01) /
       // 0.31 (sf0.1) at candidate scan fractions 0.16 / 0.16 / 0.09 —
       // 2× margin over the 0.15 pin on this isotropic worst case.
-      try recallContract(ann, bruteTopK(e, nQ), nQ, n, candRows,
+      recallContract(ann, bruteTopK(e, nQ), nQ, n, candRows,
         minRecall = 0.15, maxScanFrac = 0.5)
-      finally cands.unpersist()
     }),
     // Scale-path near-dup pairs: 8 independent LSH bands, planes per
     // band adaptive (buckets ∝ n ⇒ candidate pairs O(n·bucket), never
@@ -862,7 +853,7 @@ object Similarity {
     // against stratified brute-force truth (every-50th smaller id;
     // n_true_pairs is exact arithmetic, so the oracle recomputes it
     // bit-for-bit).
-    "ss_knn_graph" -> ((s, dir) => {
+    "ss_knn_graph" -> ((s, dir) => Persisted.scoped { p =>
       // full k-NN GRAPH construction — every vector's top-K
       // neighbors, the structure semantic-dedup clustering, graph-
       // based ANN serving (HNSW-ish), and diversity sampling all
@@ -888,7 +879,7 @@ object Similarity {
           .toDF("n_nodes", "degree_bounded", "coverage_ok", "recall_ok",
             "cands_within_band_budget")
       } else {
-      val p = neardupPlanes(n)
+      val planes = neardupPlanes(n)
       val nBands = 12 // more seed chances than the near-dup join: top-K
                       // targets sit at lower cosine than τ-near-dups
       // deliberately NOT PlanStats.spread: r18 measured the estimate-gated
@@ -899,7 +890,7 @@ object Similarity {
       // (alternating A/B: 3.63 → 4.17 s; incremental 8.96 → 9.67 s),
       // while at corpus scale the gate no-ops (the source's own splits
       // parallelize). Evidence: plans/r18/ss_knn_graph_rejected_*.txt.
-      val banded = knnBandedSig(e, nBands, p).persist()
+      val banded = p.keep(knnBandedSig(e, nBands, planes))
       // the candidate-volume contract stat rides the rerank job as an
       // observed metric instead of a separate persist + count action —
       // at bench scale the audit's cost was dominated by job-launch
@@ -998,7 +989,6 @@ object Similarity {
           f"recall=${if (nq > 0) hits.toDouble / (K * nq) else 1.0}%.3f " +
           f"scanFrac=${candRows.toDouble / (n.toDouble * n)}%.4f " +
           f"cands=$candRows budget=$candBudget occ=${occPairs / math.max(n, 1)}·n")
-      banded.unpersist()
       val s2 = e.sparkSession
       import s2.implicits._
       Seq((n,
@@ -1036,15 +1026,14 @@ object Similarity {
     // the BATCH size, with the same recall floor as the full build
     // (the batch's seed candidates are band-identical to the full
     // build's, so incrementality loses no recall by construction).
-    "ss_knn_graph_incremental" -> ((s, dir) => {
+    "ss_knn_graph_incremental" -> ((s, dir) => Persisted.scoped { p =>
       val e = Tables(s, dir).embeddings
       val n = e.count()
-      val p = neardupPlanes(n)
+      val planes = neardupPlanes(n)
       val nBands = 12
       val isNew = col("vec_id") % 5 === 4
-      val banded = knnBandedSig(e, nBands, p)
-        .withColumn("is_new", isNew)
-        .persist()
+      val banded = p.keep(knnBandedSig(e, nBands, planes)
+        .withColumn("is_new", isNew))
       def rerank(pairs: DataFrame): DataFrame = knnRerank(e, pairs)
       // ---- prior state (kept warm in production; built once here) ----
       val oldBand = banded.filter(!col("is_new"))
@@ -1056,18 +1045,18 @@ object Similarity {
       val seedOld = rerank(oldCands).localCheckpoint(true)
       val oldGraph = rerank(descentExpand(seedOld, dirty = None)).localCheckpoint(true)
       // ---- per-batch work (everything counted from here) ----
-      val probe = banded.filter(col("is_new"))
+      val probe = p.keep(banded.filter(col("is_new"))
         .select(col("vec_id").as("src"), col("band"), col("bk"))
         .join(banded.select(col("vec_id").as("dst"), col("band"), col("bk")),
           Seq("band", "bk"))
         .filter(col("src") =!= col("dst"))
-        .select("src", "dst").distinct().persist()
+        .select("src", "dst").distinct())
       var batchCands = probe.count()
       val newEdges = rerank(probe)
       // existing nodes that collided re-rank their K-list ∪ arrivals
       val rev = probe.filter(col("dst") % 5 =!= 4)
         .select(col("dst").as("src"), col("src").as("dst"))
-      val affected = rev.select("src").distinct().persist()
+      val affected = p.keep(rev.select("src").distinct())
       val updatedOld = rerank(oldGraph.join(affected, Seq("src"), "left_semi")
         .select("src", "dst").unionByName(rev).distinct())
       val merged = oldGraph.join(affected, Seq("src"), "left_anti")
@@ -1075,7 +1064,7 @@ object Similarity {
       // one descent round from the dirty nodes only
       val dirty = affected
         .unionByName(e.filter(isNew).select(col("vec_id").as("src"))).distinct()
-      val expanded = descentExpand(merged, Some(dirty)).persist()
+      val expanded = p.keep(descentExpand(merged, Some(dirty)))
       batchCands += expanded.count()
       val graph = merged.join(dirty, Seq("src"), "left_anti")
         .unionByName(rerank(expanded)).localCheckpoint(true)
@@ -1100,8 +1089,6 @@ object Similarity {
       }
       val nDirty = dirty.count()
       val batchBudget = occNewPairs + (4 * K * K + 3 * K).toLong * nDirty
-      expanded.unpersist(); probe.unpersist(); banded.unpersist()
-      affected.unpersist()
       val batchN = e.filter(isNew).count()
       val statRow = graph.agg(count(lit(1)), countDistinct(col("src"))).first()
       val (nEdges, nSrc) = (statRow.getLong(0), statRow.getLong(1))
@@ -1128,20 +1115,20 @@ object Similarity {
         .toDF("n_nodes", "degree_bounded", "coverage_ok", "recall_ok",
           "batch_cost_linear_in_batch")
     }),
-    "ss_embed_neardup" -> ((s, dir) => {
+    "ss_embed_neardup" -> ((s, dir) => Persisted.scoped { p =>
       val e = Tables(s, dir).embeddings
       val n = e.count()
-      val p = neardupPlanes(n)
+      val planes = neardupPlanes(n)
       val bandCols = (0 until NEARDUP_BANDS).map { b =>
-        expr(signBucketSql("embedding", DIM, p, offset = b * p))
+        expr(signBucketSql("embedding", DIM, planes, offset = b * planes))
       }
       val banded = e.select(col("vec_id"),
           posexplode(array(bandCols: _*)))
         .withColumnRenamed("pos", "band").withColumnRenamed("col", "bk")
       val a = banded.select(col("vec_id").as("id_a"), col("band"), col("bk"))
       val b = banded.select(col("vec_id").as("id_b"), col("band"), col("bk"))
-      val cands = a.join(b, Seq("band", "bk")).filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").distinct().persist()
+      val cands = p.keep(a.join(b, Seq("band", "bk")).filter(col("id_a") < col("id_b"))
+        .select("id_a", "id_b").distinct())
       val candRows = cands.count()
       val ea = e.select(col("vec_id").as("id_a"), col("embedding").as("e_a"))
       val eb = e.select(col("vec_id").as("id_b"), col("embedding").as("e_b"))
@@ -1160,7 +1147,6 @@ object Similarity {
       // the stratum is an unbiased 1/50 sample of the pair
       // population, so the recall floor carries over unchanged.
       val nFoundStratum = found.filter(col("id_a") % 50 === 0).count()
-      cands.unpersist()
       val x = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("id_a"), col("embedding").as("e_a"))
       val y = e.select(col("vec_id").as("id_b"), col("embedding").as("e_b"))

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.graftbridge.CacheBridge
 import graft.SparkEntry
 
 /** Degenerate-input robustness sweep over the full query surface.
@@ -17,7 +18,8 @@ import graft.SparkEntry
   * real data uses — and runs EVERY `SparkEntry.queries` entry against
   * them, forcing full evaluation with a parquet write (a `count()`
   * would let Catalyst prune the projected expressions this probe
-  * exists to exercise).
+  * exists to exercise). An entry whose write leaves a CacheManager
+  * entry behind fails too (queries release their caches: `Persisted`).
   *
   * Referential integrity is deliberately NOT preserved in `one` mode
   * (one orders row won't match the one customer row): joins returning
@@ -32,12 +34,10 @@ import graft.SparkEntry
   * Usage: runMain graft.tools.EdgeProbe <srcSfDir> <workDir> [mode...]
   *   modes default to "empty one"; probe outputs land under
   *   <workDir>/out_<mode> and table variants under <workDir>/<mode>.
-  * Exits 1 if any query throws. Driver-side tooling, not library API.
+  * Exits 1 if any query throws or leaks a cache entry. Driver-side
+  * tooling, not library API.
   */
 object EdgeProbe {
-  private val tableNames = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Join/identity keys that stay intact in `nulls` mode: NULLing a
     * key models a different (broken-upstream) failure than the
     * partial-record shape this mode probes. */
@@ -67,14 +67,15 @@ object EdgeProbe {
   /** The sweep core, callable from BOTH the hand-run main and the CI
     * spec (EdgeSweepSpec) — one definition so the pinned-in-CI sweep
     * can never drift from the tool's. Returns the failure list
-    * ((mode, name, message) per query that threw), empty when clean. */
+    * ((mode, name, message) per query that threw or left a cache
+    * entry), empty when clean. */
   private[graft] def sweep(spark: org.apache.spark.sql.SparkSession,
                            src: String, work: String,
                            modes: Seq[String]): List[(String, String, String)] = {
     var failures = List.empty[(String, String, String)]
     for (mode <- modes) {
       val dataDir = s"$work/$mode"
-      tableNames.foreach { t =>
+      graft.core.Tables.names.foreach { t =>
         val full = spark.read.parquet(s"$src/$t.parquet")
         val variant = mode match {
           case "empty" => full.limit(0)
@@ -93,21 +94,22 @@ object EdgeProbe {
       }
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
         val t0 = System.nanoTime()
-        try {
+        val cached = CacheBridge.entries(spark)
+        val failure = try {
           fn(spark, dataDir).write.mode(SaveMode.Overwrite)
             .parquet(s"$work/out_$mode/$name")
-          println(f"[probe] $mode%-5s OK    $name%-28s ${(System.nanoTime() - t0) / 1e9}%.1fs")
+          val left = CacheBridge.entries(spark) - cached
+          if (left == 0) None else Some(s"left $left CacheManager entries behind")
         } catch { case e: Throwable =>
-          val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-          println(s"[probe] $mode FAIL  $name: ${msg.linesIterator.take(3).mkString(" | ")}")
-          failures ::= (mode, name, msg)
+          Some(Option(e.getMessage).getOrElse(e.getClass.getName))
         }
-        // same inter-query hygiene as Verify/Bench: drop catalog cache,
-        // RDD blocks (localCheckpoints), and nudge the ContextCleaner.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        System.gc()
+        failure match {
+          case None =>
+            println(f"[probe] $mode%-5s OK    $name%-28s ${(System.nanoTime() - t0) / 1e9}%.1fs")
+          case Some(msg) =>
+            println(s"[probe] $mode FAIL  $name: ${msg.linesIterator.take(3).mkString(" | ")}")
+            failures ::= (mode, name, msg)
+        }
       }
     }
     failures.reverse

@@ -49,7 +49,7 @@ object GenSample {
   def run(spark: org.apache.spark.sql.SparkSession, src: String,
           out: String, rate: Int,
           sampledKeys: Map[String, String] = defaultKeys): Unit = {
-    for (t <- GenScale.tables) {
+    for (t <- graft.core.Tables.names) {
       val base = spark.read.parquet(s"$src/$t.parquet")
       val df = sampledKeys.get(t)
         .map(k => base.filter(col(k) % rate === 0))

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Tables
 
 /** Deterministic scale-up of a harness data directory: replicate every
   * table `factor`× with per-replica key offsets — the "database
@@ -26,10 +27,6 @@ import org.apache.spark.sql.functions._
   *  - key domains are read from the data (max+1), not hard-coded.
   */
 object GenScale {
-
-  /** Tables a generated corpus contains, in generation order. */
-  val tables: Seq[String] = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "events", "documents", "embeddings")
 
   /** Deterministic fingerprint of a generated corpus: the generator is
     * seed-fixed, so (source, factor, skew knob, per-table row counts)
@@ -96,8 +93,8 @@ object GenScale {
     val declaredRows = """"([a-z]+)"\s*:\s*(\d+)""".r
       .findAllMatchIn(rowsBlock)
       .map(m => m.group(1) -> m.group(2).toLong).toSeq
-      .filter(kv => tables.contains(kv._1))
-    require(declaredRows.map(_._1).toSet == tables.toSet,
+      .filter(kv => Tables.names.contains(kv._1))
+    require(declaredRows.map(_._1).toSet == Tables.names.toSet,
       s"[genscale] $dir/MANIFEST.json: incomplete rows block")
     val recomputed = manifestHash(source, factor, declaredRows, skewOneIn)
     require(recomputed == declaredHash,
@@ -252,7 +249,7 @@ object GenScale {
     // manifest LAST — its presence certifies a complete generation run
     // (a crashed run leaves no manifest, and rehearsal runs refuse an
     // unmanifested-but-expected or mismatched corpus)
-    val rows = tables.map(t =>
+    val rows = Tables.names.map(t =>
       t -> spark.read.parquet(s"$out/$t.parquet").count())
     writeManifest(spark, out, src, factor, rows, skewOneIn)
   }

@@ -70,9 +70,7 @@ object StageProf {
       Thread.sleep(1000)
       spark.sparkContext.removeSparkListener(listener)
       println(f"[prof] $n rows=$c wall=$dt%.1fs")
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      System.gc()
+      graft.core.GraftSession.reclaimFinished()
     }
     graft.core.GraftSession.dropScratch(spark)
     spark.stop()

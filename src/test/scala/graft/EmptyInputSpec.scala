@@ -20,8 +20,6 @@ import org.apache.spark.sql.SaveMode
   */
 class EmptyInputSpec extends SparkSpec {
   private val srcDir = "/root/testdata/sf0.001"
-  private val tables = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "events", "documents", "embeddings")
 
   private lazy val emptyDir: String = degenerate("empty", 0)
   private lazy val oneDir: String = degenerate("one", 1)
@@ -29,7 +27,7 @@ class EmptyInputSpec extends SparkSpec {
   /** n-row-per-table variant of the harness dir, schemas intact. */
   private def degenerate(tag: String, n: Int): String = {
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft_spec_$tag"
-    tables.foreach { t =>
+    graft.core.Tables.names.foreach { t =>
       spark.read.parquet(s"$srcDir/$t.parquet").limit(n)
         .repartition(1).write.mode(SaveMode.Overwrite)
         .parquet(s"$dir/$t.parquet")
@@ -42,7 +40,7 @@ class EmptyInputSpec extends SparkSpec {
     * 200 rows per table for speed. */
   private lazy val nullsDir: String = {
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft_spec_nulls"
-    tables.foreach { t =>
+    graft.core.Tables.names.foreach { t =>
       graft.tools.EdgeProbe.nullsVariant(
           spark.read.parquet(s"$srcDir/$t.parquet").limit(200))
         .repartition(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/$t.parquet")

@@ -117,7 +117,7 @@ class GenScaleSpec extends SparkSpec {
     // happy path: hash in the file = recomputed hash = verify result
     val h = graft.tools.GenScale.verifyManifest(spark, out)
     assert(h.isDefined, "run() wrote no MANIFEST.json")
-    val rows = graft.tools.GenScale.tables.map(t =>
+    val rows = graft.core.Tables.names.map(t =>
       t -> spark.read.parquet(s"$out/$t.parquet").count())
     assert(h.contains(graft.tools.GenScale.manifestHash(
       "/root/testdata/sf0.001", factor, rows)))

@@ -99,9 +99,13 @@ class OperatorSpec extends SparkSpec {
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toString).sorted.toSeq
       Seq(latin -> true, wide -> false).foreach { case (d, packs) =>
-        val q = graft.queries.DedupQueries.queries("dd_chargram_pairs")(spark, d)
+        // the operator returns its result checkpointed: the verify runs
+        // in that localCheckpoint action
+        val (q, plans) = ActionPlans.of(spark, "localCheckpoint", 1) {
+          graft.queries.DedupQueries.queries("dd_chargram_pairs")(spark, d)
+        }
         val got = rows(q)
-        val merges = ActionPlans.operators(q.queryExecution.executedPlan)
+        val merges = plans.flatten
           .exists(_.expressions.exists(_.exists(
             _.isInstanceOf[graft.functions.SortedJaccardGe])))
         assert(merges == packs, s"$d: SortedJaccardGe planned = $merges")

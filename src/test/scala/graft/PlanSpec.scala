@@ -32,6 +32,18 @@ class PlanSpec extends SparkSpec {
     plans.map(_.head.toString).mkString("\n")
   }
 
+  /** The executed plan of an entry's result checkpoint: an entry (or
+    * operator) that keeps frames in a `Persisted` scope returns its
+    * result checkpointed, so its joins run only in that one
+    * localCheckpoint action. */
+  private def checkpointPlan(name: String): String = {
+    val (_, plans) = ActionPlans.of(spark, "localCheckpoint", 1) {
+      SparkEntry.queries(name)(spark, dir)
+    }
+    assert(plans.size == 1, s"$name: ${plans.size} checkpoint actions")
+    plans.head.head.toString
+  }
+
   /** The executed plan of reco_item_item's capped-purchases checkpoint
     * (fact join → distinct → degree cap), captured as its
     * localCheckpoint action: the kernel's served plan is the RDD wrap,
@@ -81,7 +93,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("dd: minhash candidate generation is an equi-join, never a cartesian") {
-    val plan = executedPlan("dd_minhash_pairs")
+    val plan = checkpointPlan("dd_minhash_pairs")
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
   }
@@ -103,12 +115,15 @@ class PlanSpec extends SparkSpec {
     // might_contain, and no stage degenerates into a cartesian join.
     // Pinned via Flagship.auditPlan — the pre-checkpoint composed
     // frame (both public queries checkpoint their results to release
-    // the stage persists, which hides the composed plan from
+    // the stage caches, which hides the composed plan from
     // executedPlan).
-    val (df, release) = graft.queries.Flagship.auditPlan(spark, dir)
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    release()
+    var plan = ""
+    graft.core.Persisted.scoped { p =>
+      val df = graft.queries.Flagship.auditPlan(p, spark, dir)
+      df.collect()
+      plan = df.queryExecution.executedPlan.toString
+      df
+    }
     assert(plan.contains("might_contain"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
   }
@@ -132,7 +147,7 @@ class PlanSpec extends SparkSpec {
     for (name <- Seq("g_triangle_count", "reco_item_item", "dd_containment")) {
       val plan =
         if (name == "reco_item_item") kernelPurchasesPlan().toString
-        else finalPlan(name)
+        else checkpointPlan(name)
       assert(!plan.contains("CartesianProduct"), s"$name:\n$plan")
       // a BroadcastNestedLoopJoin is tolerable ONLY as the explicit
       // Cross attach of a 1-row aggregate (crossJoin(broadcast(_))) —
@@ -146,7 +161,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("w11: pair self-join is hash-based; only the 1-row total attaches by broadcast") {
-    val plan = finalPlan("w11_market_basket")
+    val plan = checkpointPlan("w11_market_basket")
     assert(!plan.contains("CartesianProduct"), plan)
     // the quadratic-risk step (basket self-join on okey) must be an
     // equi-join; the single tolerated nested loop is the broadcast of
@@ -181,7 +196,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("g_common_neighbors: hub cap is a partial WindowGroupLimit, no cartesian join") {
-    val plan = executedPlan("g_common_neighbors")
+    val plan = checkpointPlan("g_common_neighbors")
     assert(plan.contains("row_number(), 64, Partial"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)

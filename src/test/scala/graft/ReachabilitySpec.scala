@@ -82,22 +82,3 @@ class ReachabilitySpec extends TradingGraphFixture {
     assert(joinsPerHop(sHops) == (one, none), s"shuffled (smj, bhj): ${joinsPerHop(sHops)}")
   }
 }
-
-/** The graph queries release every cache they add: the rounds are
-  * checkpointed, so nothing the returned frame reads lives in the
-  * session's CacheManager, and an embedding caller that never calls
-  * clearCache must not accumulate edge or node caches. */
-class GraphCacheReleaseSpec extends TradingGraphFixture {
-  Seq("g_pagerank", "g_label_propagation", "g_reachability").foreach { q =>
-    test(s"$q leaves no cache entry behind after collect()") {
-      // numCachedEntries is Spark-internal to Scala callers but a public
-      // JVM method
-      val cache = spark.sharedState.cacheManager
-      def entries = cache.getClass.getMethod("numCachedEntries").invoke(cache)
-        .asInstanceOf[Int]
-      val before = entries
-      assert(rows(q).nonEmpty)
-      assert(entries == before, s"$q left ${entries - before} cache entries")
-    }
-  }
-}

@@ -84,26 +84,29 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("dd_clusters: fixpoint keeps at most one cached label generation") {
-    import org.apache.spark.sql.functions._
-    spark.catalog.clearCache()
-    // baseline: MLlib leaves internal RDD-level persists (ALS factor
-    // blocks, KMeans norms) that the SQL cache manager doesn't own —
-    // the property under test is the DELTA clusters() adds on top
+    import org.apache.spark.sql.graftbridge.CacheBridge
+    import graft.operators.Dedup
+    // the pairs are a checkpoint of their own (simhashPairs keeps its
+    // signatures in a scope); the property under test is what the
+    // distributed fixpoint (driverMaxEdges = 0) adds on top of them
+    val pairs = Dedup.simhashPairs(Dedup.simhash(graft.core.Tables(spark, dir).documents))
+    val entries = CacheBridge.entries(spark)
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val docs = graft.core.Tables(spark, dir).documents
-    val pairs = graft.operators.Dedup.simhashPairs(
-      graft.operators.Dedup.simhash(docs))
-    val out = graft.operators.Dedup.clusters(pairs)
+    val out = Dedup.clusters(pairs, driverMaxEdges = 0)
     assert(out.count() > 0)
-    // added by the run: the final label generation + the persisted
-    // simhash signature relation — NOT one frame per iteration
+    assert(CacheBridge.entries(spark) == entries,
+      s"cache entries added by clusters: ${CacheBridge.entries(spark) - entries}")
+    // no label generation outlives the fixpoint: the one RDD it leaves
+    // persisted is the checkpoint the result reads
+    val roots = out.queryExecution.analyzed.collectLeaves().collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.toSet
     val added = spark.sparkContext.getPersistentRDDs.filterNot {
       case (id, _) => before.contains(id)
     }
-    assert(added.size <= 2,
-      s"cached RDDs added by clusters: ${added.size}\n" +
+    assert(added.size <= 1 && added.keySet.subsetOf(roots),
+      s"persistent RDDs added by clusters: ${added.size} (result reads $roots)\n" +
         added.values.map(r => s"  rdd ${r.id}: ${r.toString.take(120)}").mkString("\n"))
-    spark.catalog.clearCache()
   }
 
   test("dd_clusters: deep-diameter chain converges (per-iteration plans stay O(1))") {

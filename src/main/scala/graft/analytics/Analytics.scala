@@ -17,13 +17,9 @@ object Analytics {
     * standard Spark multi-tenant shape — fresh temp-view namespace and
     * SQLConf, shared SparkContext/block manager — and matches the
     * reference's isolation (each postgres_reader.py session is its own
-    * Postgres connection). Views are (re-)registered on EVERY call,
-    * not once per child: a memoized registration would pin a mutated
-    * dir's old file listing. Registration is not free — each
-    * `spark.read.parquet` runs one schema-inference job — so `runSql`
-    * registers only the tables its SQL names. Same-dir concurrent
-    * registration is a same-name same-definition replace — benign,
-    * pinned by ConcurrencySpec. */
+    * Postgres connection). Same-dir concurrent registration is a
+    * same-name same-definition replace — benign, pinned by
+    * ConcurrencySpec. */
   private val sqlSessions =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), SparkSession]()
   private def sessionFor(spark: SparkSession, dir: String): SparkSession = {
@@ -38,16 +34,13 @@ object Analytics {
     sqlSessions.computeIfAbsent((spark, dir), _ => spark.newSession())
   }
 
-  /** S15: arbitrary SQL entry point over the harness tables. Only the
-    * tables whose name occurs as a word in the SQL text (any case) are
-    * registered: a conservative superset of the tables it reads — a
-    * word that is not a table reference costs one extra schema job,
-    * while a referenced table (bare, qualified, backticked, inside a
-    * CTE or subquery) always contains its name as a word. */
+  /** S15: arbitrary SQL entry point over the harness tables. All ten
+    * views are (re-)registered on every call, so a dir rewritten since
+    * the last call is read at its current listing; with the schemas
+    * memoized by `Tables`, that costs file listings and no job. */
   def runSql(spark: SparkSession, dir: String, sql: String): DataFrame = {
     val ss = sessionFor(spark, dir)
-    val t = Tables(ss, dir)
-    t.registerViews(t.names.filter(n => s"(?i)\\b$n\\b".r.findFirstIn(sql).isDefined))
+    Tables(ss, dir).registerViews()
     ss.sql(sql)
   }
 

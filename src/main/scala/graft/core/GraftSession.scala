@@ -81,26 +81,27 @@ object GraftSession {
         .digest(listed.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
   }.getOrElse("absent")
 
-  /** Memoized long-valued table probe (the row counts behind broadcast
-    * gates and partition/block sizing): one count job per JVM + path +
-    * file-listing FINGERPRINT. The fingerprint in the key is what
-    * makes the memo safe under regeneration — a dir rewritten larger
-    * in the same JVM changes its listing, so the stale small count can
-    * never keep a broadcast path selected past its gate (the
-    * driver-OOM class the gates exist to prevent). Only successful
-    * computes memoize: a failure returns `onError` for THIS call — the
-    * caller picks the fail-closed value (Long.MaxValue for "too big to
-    * broadcast", -1 for "unknown, use floor sizing") — and the next
-    * call re-probes. Stale-fingerprint entries for the same path are
-    * dropped on write, so the map stays O(live paths). */
-  final class CountMemo(onError: Long) {
-    private val cache =
-      new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-    def apply(spark: SparkSession, path: String)(compute: => Long): Long = {
-      val fp = pathFingerprint(spark, path)
-      val key = s"$path@$fp"
-      Option(cache.get(key)).map(_.longValue).getOrElse {
-        val c = scala.util.Try(compute).getOrElse(onError)
+  /** Memoized per-path probe (the row counts behind broadcast gates and
+    * partition/block sizing, the table schemas of `Tables`): one compute
+    * per JVM + path + file-listing FINGERPRINT. The fingerprint in the
+    * key is what makes the memo safe under regeneration — a dir
+    * rewritten larger in the same JVM changes its listing, so the stale
+    * small count can never keep a broadcast path selected past its gate
+    * (the driver-OOM class the gates exist to prevent). Only successful
+    * computes memoize, and never a computed `onError`. On a failure
+    * `apply` returns `onError` for THIS call — the caller picks the
+    * fail-closed value (Long.MaxValue for "too big to broadcast", -1 for
+    * "unknown, use floor sizing") — while `get` rethrows; either way the
+    * next call re-probes. Stale-fingerprint entries for the same path
+    * are dropped on write, so the map stays O(live paths). */
+  final class CountMemo[V](onError: V) {
+    private val cache = new java.util.concurrent.ConcurrentHashMap[String, V]()
+    def apply(spark: SparkSession, path: String)(compute: => V): V =
+      scala.util.Try(get(spark, path)(compute)).getOrElse(onError)
+    def get(spark: SparkSession, path: String)(compute: => V): V = {
+      val key = s"$path@${pathFingerprint(spark, path)}"
+      Option(cache.get(key)).getOrElse {
+        val c = compute
         if (c != onError) {
           val it = cache.keySet.iterator
           while (it.hasNext) {

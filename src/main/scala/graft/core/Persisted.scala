@@ -47,15 +47,16 @@ object Persisted {
     try truncated(body(p)) finally p.kept.foreach(_.unpersist())
   }
 
-  /** `df` as is when every leaf of its plan already holds materialized
-    * rows (local rows, or a checkpointed RDD), since it then reads no
-    * kept frame; otherwise `df` eagerly checkpointed. */
-  private def truncated(df: DataFrame): DataFrame = {
-    val materialized = df.queryExecution.analyzed.collectLeaves().forall {
+  /** Every leaf of `df`'s plan already holds materialized rows (local
+    * rows, or a checkpointed RDD), so it reads no kept frame. */
+  private[graft] def materialized(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves().forall {
       case _: LocalRelation => true
       case r: LogicalRDD => r.rdd.isCheckpointed
       case _ => false
     }
-    if (materialized) df else df.localCheckpoint(true)
-  }
+
+  /** `df` as is when `materialized`; otherwise `df` eagerly checkpointed. */
+  private def truncated(df: DataFrame): DataFrame =
+    if (materialized(df)) df else df.localCheckpoint(true)
 }

@@ -108,9 +108,10 @@ object Pipeline {
   }
 
   /** Register the warehouse as temp views so `spark.sql` works against
-    * it (the reference's ad-hoc analytics surface, postgres_reader.py). */
+    * it (the reference's ad-hoc analytics surface, postgres_reader.py),
+    * each read with its `Tables`-memoized schema. */
   def registerWarehouse(spark: SparkSession, outDir: String): Unit =
     stages(Tables(spark, outDir)).map(_._1).foreach { name =>
-      spark.read.parquet(s"$outDir/$name").createOrReplaceTempView(name)
+      Tables.read(spark, s"$outDir/$name").createOrReplaceTempView(name)
     }
 }

@@ -205,18 +205,21 @@ object Dedup {
     // fixed per-round scheduling. Same output by construction (min
     // member id per component). Above the bound, the distributed
     // doubling loop below takes over; ClustersSpec pins both paths to
-    // identical results.
-    val slim = p.keep(pairs.select(col("id_a"), col("id_b")))
-    // ONE parallel materializing job decides the path (a count over
-    // the kept frame — map-side partials, every partition at
-    // once). The r17 probe, limit(cap+1).collect(), looked like one
-    // bounded action but planned CollectLimitExec, whose executeTake
-    // scans 1, 4, 16, … partitions in SERIALIZED jobs until the limit
-    // fills — ~log₄(P) driver barriers per clusters() call, each a
-    // full job round-trip (measured: the dominant fixed cost of every
-    // clusters-riding entry at small SFs, where data is ~zero). The
-    // fast path then fetches the now-cached edges with a single plain
-    // collect (one job, all partitions in parallel); the distributed
+    // identical results. A materialized input (the pair operators'
+    // checkpoints) is read as is; a lazy one (a join) is kept, so the
+    // count and the reads below do not each recompute it.
+    val projected = pairs.select(col("id_a"), col("id_b"))
+    val slim = if (Persisted.materialized(pairs)) projected else p.keep(projected)
+    // ONE parallel job decides the path (a count over the slim edges
+    // — map-side partials, every partition at once). The r17 probe,
+    // limit(cap+1).collect(), looked like one bounded action but
+    // planned CollectLimitExec, whose executeTake scans 1, 4, 16, …
+    // partitions in SERIALIZED jobs until the limit fills — ~log₄(P)
+    // driver barriers per clusters() call, each a full job round-trip
+    // (measured: the dominant fixed cost of every clusters-riding
+    // entry at small SFs, where data is ~zero). The fast path then
+    // fetches the edges with a single plain collect (one job, all
+    // partitions in parallel); the distributed
     // path fetches nothing at all — the old probe collected up to
     // cap+1 rows just to discard them (driver pressure, wasted fetch).
     val cap = math.min(driverMaxEdges, (Int.MaxValue - 2).toLong)

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.{GraftSession, Tables}
 
 /** O(1) per-content-hash streaming state: the keeper doc_id — the
   * canonical copy every later duplicate points at. Elected ONCE, as
@@ -29,14 +30,6 @@ final case class KeeperState(keeper: Long)
   */
 object DocumentStream {
 
-  def readDocuments(spark: SparkSession, dir: String): DataFrame = {
-    val static = spark.read.parquet(s"$dir/documents.parquet")
-    spark.readStream
-      .schema(static.schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-  }
-
   /** (doc_id, is_novel, dup_of) for every quality-passing document.
     * Novelty is FIRST-ARRIVAL: is_novel = "this content hash has never
     * been seen by the stream", so exactly one novel row is ever
@@ -55,7 +48,7 @@ object DocumentStream {
     * GraftSession.rowCount — a regenerated dir re-probes, and a failed
     * probe (-1) sizes conservative THIS call and re-probes next time). */
   private def docCountFor(spark: SparkSession, dir: String): Long =
-    graft.core.GraftSession.rowCount(graft.core.Tables(spark, dir), "documents", -1L)
+    GraftSession.rowCount(Tables(spark, dir), "documents", -1L)
 
   def corpusIngest(spark: SparkSession, dir: String): DataFrame = {
     // state-partition count sized to the KEYED-STATE cardinality (one
@@ -117,7 +110,7 @@ object DocumentStream {
               lang = col("lang"),
               stopHits = graft.functions.TextFunctions.stopwordHits(col("text")))
               .as("keep"))), lit(1))), lit(1))
-      val gated = readDocuments(ss, dir)
+      val gated = Tables(ss, dir).stream("documents")
         // decouple gate parallelism from FILE layout (the
         // decodeFeatures lesson): the expensive projection below runs
         // on the source partitioning, and a file stream source plans
@@ -169,7 +162,7 @@ object DocumentStream {
       graft.queries.Selection.dsirCompiled(spark, dir)
     EventStream.runToTable(spark, s"st_sel_${dir.hashCode.abs}",
       mode = "append") { ss =>
-      readDocuments(ss, dir)
+      Tables(ss, dir).stream("documents")
         .select(col("doc_id"),
           split(graft.functions.TextFunctions.normText(col("text")), " ")
             .as("ws"))
@@ -201,7 +194,7 @@ object DocumentStream {
     EventStream.runToTable(spark, s"st_srccap_${dir.hashCode.abs}",
       mode = "append") { ss =>
       val thr = coalesce(element_at(tMap, col("source")), fullRate)
-      readDocuments(ss, dir)
+      Tables(ss, dir).stream("documents")
         .select(col("doc_id"), col("source"))
         .filter(col("source").isNotNull)
         .withColumn("m", Selection.capDigestCol(col("doc_id")))

@@ -3,8 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{LongType, DecimalType, DoubleType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import org.apache.hadoop.fs.Path
+import graft.core.{GraftSession, Tables}
 
 /** Structured Streaming ingest over the `events` table.
   *
@@ -39,27 +40,6 @@ final case class JourneyState(lastTsMicros: Long, seq: Long, sessionIdx: Long,
 final case class AnomalyState(n: Long, sumX: BigInt, sumXX: BigInt)
 
 object EventStream {
-
-  /** Streaming read of `<dir>/events.parquet` (schema from a static
-    * peek). `ts` is normalized to the session-zone instant type the
-    * same way Tables does it: ns-timestamps arrive as Long (converted
-    * exactly via integer division), µs-NTZ timestamps are cast (the
-    * session zone is UTC, so the cast is wall-clock-identity) — event-
-    * time watermarks reject TIMESTAMP_NTZ outright. */
-  def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    val static = spark.read.parquet(s"$dir/events.parquet")
-    val stream = spark.readStream
-      .schema(static.schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    static.schema("ts").dataType match {
-      case LongType =>
-        stream.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case TimestampNTZType =>
-        stream.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => stream
-    }
-  }
 
   /** State-store partition count for the streaming queries, and the
     * floor of the count `DocumentStream.corpusIngest` derives from its
@@ -116,7 +96,7 @@ object EventStream {
   /** Tumbling 1-hour windows per event_type: count + exact value sum. */
   def hourlyAgg(spark: SparkSession, dir: String): DataFrame =
     runToTable(spark, s"st_hourly_${dir.hashCode.abs}") { ss =>
-      readEvents(ss, dir)
+      Tables(ss, dir).stream("events")
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(
@@ -135,7 +115,7 @@ object EventStream {
     * arrive. */
   def streamJoin(spark: SparkSession, dir: String): DataFrame =
     runToTable(spark, s"st_join_${dir.hashCode.abs}", mode = "append") { ss =>
-      val ev = readEvents(ss, dir)
+      val ev = Tables(ss, dir).stream("events")
       val views = ev.filter(col("event_type") === "view")
         .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
           col("ts").as("v_ts"))
@@ -165,7 +145,7 @@ object EventStream {
     * multiple-watermark policy. */
   def streamJoinOuter(spark: SparkSession, dir: String): DataFrame =
     runToTable(spark, s"st_join_outer_${dir.hashCode.abs}", mode = "append") { ss =>
-      val ev = readEvents(ss, dir)
+      val ev = Tables(ss, dir).stream("events")
       val views = ev.filter(col("event_type") === "view")
         .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
           col("ts").as("v_ts"))
@@ -190,9 +170,9 @@ object EventStream {
     * restarting the query. Aggregated per enriched segment. */
   def enrich(spark: SparkSession, dir: String): DataFrame =
     runToTable(spark, s"st_enrich_${dir.hashCode.abs}") { ss =>
-      val cust = graft.core.Tables(ss, dir).customer
+      val cust = Tables(ss, dir).customer
         .select(col("c_custkey"), col("c_mktsegment"))
-      readEvents(ss, dir)
+      Tables(ss, dir).stream("events")
         .join(broadcast(cust), col("user_id") === col("c_custkey"), "left")
         .select(coalesce(col("c_mktsegment"), lit("UNKNOWN")).as("segment"),
           col("value"))
@@ -209,7 +189,7 @@ object EventStream {
     * constant small multiple of the tumbling case at any scale. */
   def slidingAgg(spark: SparkSession, dir: String): DataFrame =
     runToTable(spark, s"st_sliding_${dir.hashCode.abs}") { ss =>
-      readEvents(ss, dir)
+      Tables(ss, dir).stream("events")
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
         .agg(
@@ -235,7 +215,7 @@ object EventStream {
     runToTable(spark, s"st_journey_${dir.hashCode.abs}", mode = "append") { ss =>
       import ss.implicits._
       import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-      val ev = readEvents(ss, dir)
+      val ev = Tables(ss, dir).stream("events")
         .select(col("user_id"), col("event_id"), col("ts"),
           unix_micros(col("ts")).as("tus"), col("value"))
         .as[(Long, Long, java.sql.Timestamp, Long, Double)]
@@ -273,8 +253,9 @@ object EventStream {
     * no floating-point streaming detector can promise. State per user
     * is three numbers; one keyed shuffle. Per-event work is O(1), but
     * ordering relies on buffering and sorting each user's micro-batch
-    * group by (ts, event_id) — exact ONLY because readEvents' single-
-    * file AvailableNow source delivers the whole table as one batch.
+    * group by (ts, event_id) — exact ONLY because the events stream's
+    * single-file AvailableNow source delivers the whole table as one
+    * batch.
     * If the source were ever split into multiple micro-batches,
     * cross-batch arrival order would drive the running moments and
     * diverge from the oracle's global (ts, event_id) window; at that
@@ -284,7 +265,7 @@ object EventStream {
     runToTable(spark, s"st_anom_${dir.hashCode.abs}", mode = "append") { ss =>
       import ss.implicits._
       import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-      val ev = readEvents(ss, dir)
+      val ev = Tables(ss, dir).stream("events")
         .select(col("user_id"), col("event_id"), col("ts"),
           unix_micros(col("ts")).as("tus"), col("value"))
         .as[(Long, Long, java.sql.Timestamp, Long, Double)]
@@ -328,7 +309,7 @@ object EventStream {
       import org.apache.spark.sql.expressions.Window
       val byKey = Window.partitionBy(col("o_custkey"))
         .orderBy(col("valid_from"), col("o_orderkey"))
-      val hist = graft.core.Tables(ss, dir).orders
+      val hist = Tables(ss, dir).orders
         .select(col("o_custkey"), to_date(col("o_orderdate")).as("valid_from"),
           col("o_orderkey"), col("o_orderpriority"))
         .withColumn("_prev", lag(col("o_orderpriority"), 1).over(byKey))
@@ -338,7 +319,7 @@ object EventStream {
         .select(col("o_custkey"), col("version"),
           col("o_orderpriority").as("priority"),
           col("valid_from"), col("valid_to"))
-      readEvents(ss, dir)
+      Tables(ss, dir).stream("events")
         .withColumn("lookup_date",
           date_add(lit(java.sql.Date.valueOf("1995-01-01")),
             (dayofmonth(col("ts")) - 1) * 80))
@@ -360,7 +341,7 @@ object EventStream {
     * the output equals batch DISTINCT (the oracle). */
   def dedupedIngest(spark: SparkSession, dir: String): DataFrame =
     runToTable(spark, s"st_dedup_${dir.hashCode.abs}", mode = "append") { ss =>
-      readEvents(ss, dir)
+      Tables(ss, dir).stream("events")
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("event_id")
         .select("event_id", "user_id", "event_type", "value")
@@ -448,16 +429,12 @@ object EventStream {
     // the stale sweep reclaim it.
     val srcDir =
       if (baseDir.isDefined) s"$base/src"
-      else s"${graft.core.GraftSession.scratchDir(ss, "upsrc", dir)}/src"
+      else s"${GraftSession.scratchDir(ss, "upsrc", dir)}/src"
+    val events = Tables(ss, dir).eventsRaw
     if (!fs.exists(new Path(s"$srcDir/_SUCCESS")))
-      ss.read.parquet(s"$dir/events.parquet").repartition(UpsertSourceFiles)
-        .write.mode("overwrite").parquet(srcDir)
-    val static = ss.read.parquet(srcDir)
-    val raw = ss.readStream.schema(static.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val ev = (if (static.schema("ts").dataType == LongType)
-                raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-              else raw)
+      events.repartition(UpsertSourceFiles).write.mode("overwrite").parquet(srcDir)
+    val ev = Tables.eventsTs(ss.readStream.schema(events.schema)
+        .option("maxFilesPerTrigger", "1").parquet(srcDir))
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
 
     val genRoot = new Path(s"$base/gen")
@@ -490,6 +467,15 @@ object EventStream {
         .map(_.getPath)
       if (bk.nonEmpty) bk else Seq(p)
     }
+    def toDelta(batch: DataFrame): DataFrame =
+      batch.groupBy(col("user_id"))
+        .agg(max(struct(col("ts"), col("event_id"), col("event_type"))).as("_m"),
+             count(lit(1)).as("n_events"))
+        .select(col("user_id"), col("_m.ts").as("last_ts"),
+          col("_m.event_id").as("last_event_id"),
+          col("_m.event_type").as("last_type"), col("n_events"))
+    // every generation, delta or base, is written in this schema
+    val genSchema = toDelta(ev).schema
     def mergePerKey(df: DataFrame): DataFrame =
       df.groupBy(col("user_id"))
         .agg(max(struct(col("last_ts"), col("last_event_id"),
@@ -517,7 +503,7 @@ object EventStream {
       val paths = inputDirs.flatMap(readPaths).map(_.toString)
       if (paths.nonEmpty) {
         val out = s"$genRoot/c$upToId"
-        mergePerKey(ss.read.parquet(paths: _*))
+        mergePerKey(ss.read.schema(genSchema).parquet(paths: _*))
           .withColumn("bk", bucketOf(col("user_id")))
           .repartition(UpsertBuckets, col("bk"))
           .write.partitionBy("bk").mode("overwrite").parquet(out)
@@ -539,13 +525,7 @@ object EventStream {
           // transient; compaction below is what clusters into buckets
           // (the same split Delta Lake makes: cheap appends, OPTIMIZE
           // clusters later).
-          val delta = batch
-            .groupBy(col("user_id"))
-            .agg(max(struct(col("ts"), col("event_id"), col("event_type"))).as("_m"),
-                 count(lit(1)).as("n_events"))
-            .select(col("user_id"), col("_m.ts").as("last_ts"),
-              col("_m.event_id").as("last_event_id"),
-              col("_m.event_type").as("last_type"), col("n_events"))
+          val delta = toDelta(batch)
           // the _SUCCESS this write drops is the delta's commit marker.
           // ONE file per delta: the frame is O(batch) and pre-
           // aggregated, so fan-out only multiplies commit-protocol and
@@ -588,7 +568,7 @@ object EventStream {
     val livePaths = (bas.map(_._2).toSeq ++ deltas.map(_._2))
       .flatMap(readPaths).map(_.toString)
     if (livePaths.isEmpty) sys.error("upsertSink: no committed generation")
-    val scan = spark.read.parquet(livePaths: _*)
+    val scan = spark.read.schema(genSchema).parquet(livePaths: _*)
     // merge-on-read only when uncompacted deltas remain
     if (deltas.isEmpty) scan else mergePerKey(scan)
   }
@@ -627,13 +607,13 @@ object EventStream {
     * the split cuts (harness replay machinery, not the operator). */
   def lateData(spark: SparkSession, dir: String): DataFrame =
     runToTable(spark, s"st_late_${dir.hashCode.abs}", mode = "append") { ss =>
-      val srcDir = s"${graft.core.GraftSession.scratchDir(ss, "late", dir)}/src"
+      val srcDir = s"${GraftSession.scratchDir(ss, "late", dir)}/src"
       val fs = new Path(srcDir).getFileSystem(ss.sparkContext.hadoopConfiguration)
       val chunkFiles = (0 to 2).map(i => new Path(srcDir, s"b$i.parquet"))
+      val ev = Tables(ss, dir).events
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          col("value"), col("ts"))
       if (!chunkFiles.forall(fs.exists)) {
-        val ev = graft.core.Tables(ss, dir).events
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            col("value"), col("ts"))
         // empty events: no watermark epoch exists — any cut splits the
         // empty stream into three empty chunks, so epoch 0 serves
         val maxRow = ev.agg(max(col("ts"))).head()
@@ -672,8 +652,7 @@ object EventStream {
         writeChunk(ev.filter(col("ts") > cut2 || straggler),
           chunkFiles(2), now - 60000)
       }
-      val static = ss.read.parquet(srcDir)
-      ss.readStream.schema(static.schema)
+      ss.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -687,7 +666,7 @@ object EventStream {
   /** Native session windows: 30-minute inactivity gap per user. */
   def sessionize(spark: SparkSession, dir: String): DataFrame =
     runToTable(spark, s"st_sessions_${dir.hashCode.abs}") { ss =>
-      readEvents(ss, dir)
+      Tables(ss, dir).stream("events")
         .withWatermark("ts", "1 hour")
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(

@@ -27,10 +27,12 @@ package graft.tools
   * `GRAFT_SESSION_CONF`.
   */
 object PlanDump {
-  /** Names whose (SparkSession, dir) => DataFrame constructor executes
-    * jobs or writes scratch BEFORE the plan exists — dumping their
-    * plan at sf10 runs that work for real. Kept in sync with
-    * Bench.coldExplicit plus reco_item_item. */
+  /** Names whose (SparkSession, dir) => DataFrame constructor writes
+    * scratch, or runs the jobs of a whole build, before it returns a
+    * frame — dumping their plan at sf10 runs that work for real. A
+    * constructor that only checkpoints its result or collects a small
+    * fact also runs jobs; those show as action plans and are not
+    * listed. */
   val constructionSideEffects: Set[String] = Set(
     "etl_backfill", "etl_pipeline", "etl_wap", "etl_scd2",
     "etl_scd2_merge", "llm_corpus_build", "llm_corpus_audit",

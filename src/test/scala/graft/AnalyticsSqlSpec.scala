@@ -1,11 +1,16 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.functions.lit
 import graft.analytics.Analytics
 import graft.core.Tables
 
-/** `Analytics.runSql` registers only the tables its SQL names. Every way
-  * a query can reference a table must still resolve, and answer exactly
-  * as it does with all ten tables registered. */
+/** `Analytics.runSql` answers every way a query can reference a table —
+  * plain, upper-case, backticked, aliased, through a CTE or a
+  * subquery — exactly as a session with the ten views registered
+  * directly does. The schemas behind those views are memoized by
+  * `Tables` per file listing: a table rewritten in the same JVM is read
+  * at its new schema, and an absent table is an error on every read. */
 class AnalyticsSqlSpec extends SparkSpec {
   private val dir = "perfbench/data/sf0.01"
 
@@ -19,6 +24,13 @@ class AnalyticsSqlSpec extends SparkSpec {
     val got = Analytics.runSql(spark, dir, sql).collect().map(_.toString).sorted
     val want = allViews.sql(sql).collect().map(_.toString).sorted
     assert(got.nonEmpty && got.sameElements(want), sql)
+  }
+
+  /** A fresh dir holding copies of the harness tables named `names`. */
+  private def copyOf(names: Seq[String]): String = {
+    val tmp = Files.createTempDirectory("graft_tables").toString
+    names.foreach(n => Files.copy(Paths.get(s"$dir/$n.parquet"), Paths.get(s"$tmp/$n.parquet")))
+    tmp
   }
 
   test("plain, upper-case and backticked table names resolve") {
@@ -39,5 +51,24 @@ class AnalyticsSqlSpec extends SparkSpec {
   test("listTables still lists every table") {
     val names = Analytics.listTables(spark, dir).collect().map(_.getString(0)).toSeq
     assert(names == Tables(spark, dir).names.sorted)
+  }
+
+  test("a table rewritten with a new column is seen by the next read and the next runSql") {
+    val tmp = copyOf(Tables.names)
+    assert(!Tables(spark, tmp).table("region").columns.contains("r_extra"))
+    assert(!Analytics.runSql(spark, tmp, "SELECT * FROM region").columns.contains("r_extra"))
+    spark.read.parquet(s"$dir/region.parquet").withColumn("r_extra", lit(1))
+      .write.mode("overwrite").parquet(s"$tmp/region.parquet")
+    assert(Tables(spark, tmp).table("region").columns.contains("r_extra"))
+    val got = Analytics.runSql(spark, tmp, "SELECT SUM(r_extra) FROM region").collect()
+    assert(got.head.getLong(0) == 5L)
+  }
+
+  test("reading an absent table throws every time, and succeeds once the file exists") {
+    val tmp = copyOf(Nil)
+    intercept[Exception](Tables(spark, tmp).table("nation"))
+    intercept[Exception](Tables(spark, tmp).table("nation"))
+    Files.copy(Paths.get(s"$dir/nation.parquet"), Paths.get(s"$tmp/nation.parquet"))
+    assert(Tables(spark, tmp).table("nation").count() == 25L)
   }
 }

@@ -415,7 +415,7 @@ class ComposedOpsSpec extends SparkSpec {
       (104L, 1L, ts(4), 4.0), (105L, 1L, ts(5), 5.0), (106L, 1L, ts(6), 3.5),
       (107L, 1L, ts(7), 30.0)) ++
       (1 to 7).map(i => (200L + i, 2L, ts(i), 10.0))
-    // readEvents glob-filters on the single-FILE layout the harness
+    // Tables.stream glob-filters on the single-FILE layout the harness
     // uses — write to a staging dir and move the part file into place
     ev.toDF("event_id", "user_id", "ts", "value")
       .coalesce(1).write.mode("overwrite").parquet(s"$d/events_out")

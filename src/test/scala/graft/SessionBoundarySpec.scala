@@ -34,7 +34,7 @@ class SessionBoundarySpec extends SparkSpec {
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.parquet(s"$dir/events_out")
     // the harness lays events.parquet out as a single FILE (and
-    // readEvents glob-filters on that name) — rename the part file
+    // Tables.stream glob-filters on that name) — rename the part file
     val p = java.nio.file.Paths.get(dir)
     val part = java.nio.file.Files.list(p.resolve("events_out"))
       .filter(f => f.getFileName.toString.endsWith(".parquet"))

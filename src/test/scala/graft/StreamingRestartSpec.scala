@@ -60,4 +60,11 @@ class StreamingRestartSpec extends SparkSpec {
     assert(first == batchTruth())
     assert(second == first)
   }
+
+  test("upsert sink: last_ts is TIMESTAMP, as every Tables reader gives ts") {
+    // sf0.01 stores events.ts as TIMESTAMP(MICROS, isAdjustedToUTC=false),
+    // which Spark reads as TIMESTAMP_NTZ
+    val out = SparkEntry.queries("st_upsert_sink")(spark, "perfbench/data/sf0.01")
+    assert(out.schema("last_ts").dataType == org.apache.spark.sql.types.TimestampType)
+  }
 }

@@ -83,33 +83,27 @@ object GraftSession {
 
   /** Memoized per-path probe (the row counts behind broadcast gates and
     * partition/block sizing, the table schemas of `Tables`): one compute
-    * per JVM + path + file-listing FINGERPRINT. The fingerprint in the
-    * key is what makes the memo safe under regeneration — a dir
-    * rewritten larger in the same JVM changes its listing, so the stale
-    * small count can never keep a broadcast path selected past its gate
-    * (the driver-OOM class the gates exist to prevent). Only successful
-    * computes memoize, and never a computed `onError`. On a failure
-    * `apply` returns `onError` for THIS call — the caller picks the
-    * fail-closed value (Long.MaxValue for "too big to broadcast", -1 for
-    * "unknown, use floor sizing") — while `get` rethrows; either way the
-    * next call re-probes. Stale-fingerprint entries for the same path
-    * are dropped on write, so the map stays O(live paths). */
+    * per JVM + path + file-listing FINGERPRINT. Each path keeps the value
+    * of the listing it was computed on, and a hit needs the path's
+    * current fingerprint to match — so a dir rewritten larger in the same
+    * JVM changes its listing, and the stale small count can never keep a
+    * broadcast path selected past its gate (the driver-OOM class the
+    * gates exist to prevent). A recompute replaces the path's entry.
+    * Only successful computes memoize, and never a computed `onError`.
+    * On a failure `apply` returns `onError` for THIS call — the caller
+    * picks the fail-closed value (Long.MaxValue for "too big to
+    * broadcast", -1 for "unknown, use floor sizing") — while `get`
+    * rethrows; either way the next call re-probes. The map holds one
+    * entry per path ever read, deleted snapshot dirs included. */
   final class CountMemo[V](onError: V) {
-    private val cache = new java.util.concurrent.ConcurrentHashMap[String, V]()
+    private val cache = new java.util.concurrent.ConcurrentHashMap[String, (String, V)]()
     def apply(spark: SparkSession, path: String)(compute: => V): V =
       scala.util.Try(get(spark, path)(compute)).getOrElse(onError)
     def get(spark: SparkSession, path: String)(compute: => V): V = {
-      val key = s"$path@${pathFingerprint(spark, path)}"
-      Option(cache.get(key)).getOrElse {
+      val fingerprint = pathFingerprint(spark, path)
+      Option(cache.get(path)).collect { case (`fingerprint`, v) => v }.getOrElse {
         val c = compute
-        if (c != onError) {
-          val it = cache.keySet.iterator
-          while (it.hasNext) {
-            val k = it.next()
-            if (k.startsWith(s"$path@") && k != key) it.remove()
-          }
-          cache.put(key, c)
-        }
+        if (c != onError) cache.put(path, (fingerprint, c))
         c
       }
     }

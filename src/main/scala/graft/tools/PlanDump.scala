@@ -44,29 +44,19 @@ object PlanDump {
     val names = args.lift(1).map(_.split(",").toSeq)
       .getOrElse(Seq("q1_agg"))
     val spark = graft.core.GraftSession.local("graft-plandump")
-    spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = {
-        println(s"\n----- action: $funcName -----")
-        println(qe.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-      }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    })
     names.foreach { n =>
       println(s"\n===== $n @ $dir =====")
       if (constructionSideEffects.contains(n))
         println(s"[plandump] WARNING: $n's constructor runs jobs/side " +
           "effects at DataFrame-build time — this dump executes real " +
           "work at this scale, not just planning.")
-      graft.SparkEntry.queries(n)(spark, dir).explain("formatted")
+      val (q, record) = graft.core.Trace.of(spark)(graft.SparkEntry.queries(n)(spark, dir))
+      q.explain("formatted")
+      record.actions.foreach { a =>
+        println(s"\n----- action: ${a.funcName} -----")
+        org.apache.spark.sql.execution.ExplainUtils.processPlan(a.plan, (s: String) => print(s))
+      }
     }
-    // the execution listener bus is asynchronous — let action-plan
-    // events drain before tearing the session down
-    Thread.sleep(2000)
     graft.core.GraftSession.dropScratch(spark)
     spark.stop()
   }

@@ -1,12 +1,11 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.util.QueryExecutionListener
 
-/** The physical operators of every action a block runs, read through a
-  * QueryExecutionListener. Iterative operators checkpoint each round, so
+/** The physical operators of every action a block runs, read from its
+  * `graft.core.Trace` record. Iterative operators checkpoint each round, so
   * the frame they return plans only the last projection; the rounds are
   * visible only as their own actions. */
 object ActionPlans {
@@ -19,28 +18,11 @@ object ActionPlans {
     case other => other +: other.children.flatMap(operators)
   }
 
-  /** Run `body` and return its result with the operators of each
-    * `action` (e.g. "localCheckpoint") it ran, in order. The listener
-    * bus is asynchronous: the call waits, up to 30 s, until `expected`
-    * such actions have arrived. */
-  def of[T](spark: SparkSession, action: String, expected: Int)(
-      body: => T): (T, Seq[Seq[SparkPlan]]) = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[SparkPlan]]
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, d: Long): Unit =
-        if (funcName == action) seen.add(operators(qe.executedPlan))
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    Thread.sleep(1500) // let earlier actions' events drain first
-    spark.listenerManager.register(listener)
-    try {
-      val result = body
-      val deadline = System.currentTimeMillis() + 30000
-      while (seen.size < expected && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      import scala.jdk.CollectionConverters._
-      (result, seen.asScala.toSeq)
-    } finally spark.listenerManager.unregister(listener)
+  /** Run `body` and return its result with the operators of every
+    * `action` (e.g. "localCheckpoint") it ran, in order. */
+  def of[T](spark: SparkSession, action: String)(body: => T): (T, Seq[Seq[SparkPlan]]) = {
+    val (result, record) = graft.core.Trace.of(spark)(body)
+    (result, record.actions.filter(_.funcName == action).map(a => operators(a.plan)))
   }
 
   /** Run `body` with `spark.sql.autoBroadcastJoinThreshold=-1`, which

@@ -45,7 +45,7 @@ class AnnGateSpec extends SparkSpec {
     // returns its result checkpointed: its joins run in that one
     // localCheckpoint action
     if (name == "ss_knn_sq") {
-      val (q, plans) = ActionPlans.of(spark, "localCheckpoint", 1) {
+      val (q, plans) = ActionPlans.of(spark, "localCheckpoint") {
         graft.queries.Similarity.queries(name)(spark, dir)
       }
       (q.collect().map(_.toString).sorted.toSeq, plans.flatten)

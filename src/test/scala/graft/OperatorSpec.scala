@@ -101,7 +101,7 @@ class OperatorSpec extends SparkSpec {
       Seq(latin -> true, wide -> false).foreach { case (d, packs) =>
         // the operator returns its result checkpointed: the verify runs
         // in that localCheckpoint action
-        val (q, plans) = ActionPlans.of(spark, "localCheckpoint", 1) {
+        val (q, plans) = ActionPlans.of(spark, "localCheckpoint") {
           graft.queries.DedupQueries.queries("dd_chargram_pairs")(spark, d)
         }
         val got = rows(q)

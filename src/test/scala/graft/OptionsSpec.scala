@@ -17,18 +17,8 @@ class OptionsSpec extends AnyFunSuite {
   private val envRead = """sys\.env[^"]*\("([A-Z_0-9]+)"""".r
   private val confNamed = """"(graft\.[A-Za-z0-9_.]+)"""".r
 
-  private def sources(f: java.io.File): Seq[java.io.File] =
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(sources)
-    else if (f.getName.endsWith(".scala")) Seq(f)
-    else Nil
-
   test("the main sources read the six deployment settings and no graft.* conf") {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the repository root (${root.getAbsolutePath})")
-    val lines = sources(root).flatMap { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.getLines().toList finally src.close()
-    }
+    val lines = SourceScan.files("src/main/scala").flatMap(SourceScan.lines)
     val env = lines.flatMap(l => envRead.findAllMatchIn(l).map(_.group(1))).toSet
     val confs = lines.flatMap(l => confNamed.findAllMatchIn(l).map(_.group(1))).toSet -
       "graft.plans.GraftExtensions"

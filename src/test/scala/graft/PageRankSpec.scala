@@ -72,7 +72,7 @@ class PageRankSpec extends SparkSpec {
     val viaBroadcast = run()
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
     val (viaShuffle, rounds) = ActionPlans.withoutBroadcast(spark) {
-      ActionPlans.of(spark, "localCheckpoint", graft.queries.Graph.Iters)(run())
+      ActionPlans.of(spark, "localCheckpoint")(run())
     }
     assert(viaShuffle == viaBroadcast)
     assert(viaShuffle == reference)
@@ -154,7 +154,7 @@ class LabelPropagationSpec extends SparkSpec {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
     def run(): (Map[(String, Long), Long], Seq[Seq[SparkPlan]]) =
-      ActionPlans.of(spark, "localCheckpoint", graft.queries.Graph.Iters) {
+      ActionPlans.of(spark, "localCheckpoint") {
         SparkEntry.queries("g_label_propagation")(spark, dir)
           .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
       }
@@ -208,7 +208,7 @@ class LabelPropagationSpec extends SparkSpec {
 
   private def runCountingAggs(dir: String): (Map[(String, Long), Long], Int, Int) = {
     import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, SortAggregateExec}
-    val (got, rounds) = ActionPlans.of(spark, "localCheckpoint", graft.queries.Graph.Iters) {
+    val (got, rounds) = ActionPlans.of(spark, "localCheckpoint") {
       SparkEntry.queries("g_label_propagation")(spark, dir)
         .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     }

@@ -26,7 +26,7 @@ class PlanSpec extends SparkSpec {
     * entry returns its contract as a local row, so its candidate join
     * runs only in those actions. */
   private def countPlans(name: String): String = {
-    val (_, plans) = ActionPlans.of(spark, "count", 4) {
+    val (_, plans) = ActionPlans.of(spark, "count") {
       SparkEntry.queries(name)(spark, dir).collect()
     }
     plans.map(_.head.toString).mkString("\n")
@@ -37,7 +37,7 @@ class PlanSpec extends SparkSpec {
     * result checkpointed, so its joins run only in that one
     * localCheckpoint action. */
   private def checkpointPlan(name: String): String = {
-    val (_, plans) = ActionPlans.of(spark, "localCheckpoint", 1) {
+    val (_, plans) = ActionPlans.of(spark, "localCheckpoint") {
       SparkEntry.queries(name)(spark, dir)
     }
     assert(plans.size == 1, s"$name: ${plans.size} checkpoint actions")
@@ -49,7 +49,7 @@ class PlanSpec extends SparkSpec {
     * localCheckpoint action: the kernel's served plan is the RDD wrap,
     * so the join-bearing pipeline is visible only as that action. */
   private def kernelPurchasesPlan(): org.apache.spark.sql.execution.SparkPlan = {
-    val (_, plans) = ActionPlans.of(spark, "localCheckpoint", 1) {
+    val (_, plans) = ActionPlans.of(spark, "localCheckpoint") {
       SparkEntry.queries("reco_item_item")(spark, dir)
     }
     assert(plans.size == 1, s"expected one checkpoint action, saw ${plans.size}")
@@ -296,27 +296,15 @@ class PlanSpec extends SparkSpec {
     // build, the ALS-family precedent — DO run at construction; they
     // are not count jobs.)
     SparkEntry.queries("reco_item_item")(spark, dir) // warm the cache
-    // parquet-footer schema reads ("parquet at Tables.scala") run on
-    // EVERY construction and are not the probe; only count() jobs are
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(s.properties.getProperty("callSite.short"))
-              .exists(_.startsWith("count")))
-          jobs.incrementAndGet()
+    // parquet-footer schema reads ("parquet at Tables.scala") are not
+    // the probe; only count() jobs are
+    val (_, record) = graft.core.Trace.of(spark) {
+      SparkEntry.queries("reco_item_item")(spark, dir)
+      SparkEntry.queries("reco_item_item")(spark, dir)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      SparkEntry.queries("reco_item_item")(spark, dir)
-      SparkEntry.queries("reco_item_item")(spark, dir)
-      // construction is synchronous (a gate count() would have BLOCKED
-      // until its job finished); the grace period only covers listener
-      // bus delivery latency for the assertion
-      Thread.sleep(1500)
-      assert(jobs.get() == 0,
-        s"expected zero jobs constructing a cached-gate query, saw ${jobs.get()}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val counts = record.jobs.filter(_.callSite.startsWith("count"))
+    assert(counts.isEmpty,
+      s"expected zero count jobs constructing a cached-gate query, saw $counts")
   }
 
   test("reco_item_item: kernel trusts the reported hash(user) partitioning " +
@@ -414,7 +402,7 @@ class PlanSpec extends SparkSpec {
     // emitPartitions asks for more map tasks than the checkpoint has.
     // The same data without customer.parquet estimates the sentinel,
     // and the proven no-exchange path runs. Both must equal the
-    // brute-force reference; the listener shows the extra stage.
+    // brute-force reference; the trace shows the extra stage.
     val base = java.nio.file.Files.createTempDirectory("graft_ii_skew").toString
     // user 1: items 1..400 via one order, each line 50 times; users
     // 2..9: two items each
@@ -432,19 +420,11 @@ class PlanSpec extends SparkSpec {
       spark.conf.get("spark.sql.shuffle.partitions").toInt) > 1)
     def stagesOf(d: String): Int = {
       ItemItemRef.collectSorted(SparkEntry.queries("reco_item_item")(spark, d)) // warm the count memo
-      val stages = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onStageSubmitted(
-            e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-          stages.incrementAndGet()
+      val (got, record) = graft.core.Trace.of(spark) {
+        ItemItemRef.collectSorted(SparkEntry.queries("reco_item_item")(spark, d))
       }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        assert(ItemItemRef.collectSorted(
-          SparkEntry.queries("reco_item_item")(spark, d)) == want, d)
-        Thread.sleep(1500) // listener bus delivery
-        stages.get()
-      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(got == want, d)
+      record.stages.size
     }
     val (w, p) = (stagesOf(widened), stagesOf(proven))
     assert(w == p + 1, s"widened run $w stages, proven run $p")
@@ -587,12 +567,11 @@ class PlanSpec extends SparkSpec {
     // join reads the cached edge relation (InMemoryTableScan / AQE
     // TableCacheQueryStage) and never re-derives the edge build from
     // the orders/lineitem scans. Each iteration is its own checkpointed
-    // action, so its plan is read through a listener.
+    // action, so its plan is read from the trace.
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.TableCacheQueryStageExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    val (_, rounds) = ActionPlans.of(spark, "localCheckpoint",
-        graft.queries.Graph.Iters) {
+    val (_, rounds) = ActionPlans.of(spark, "localCheckpoint") {
       SparkEntry.queries("g_pagerank")(spark, dir).collect()
     }
     assert(rounds.size == graft.queries.Graph.Iters, s"rounds=${rounds.size}")

@@ -57,7 +57,7 @@ class ReachabilitySpec extends TradingGraphFixture {
   }
 
   private def run(): (Map[(String, Long), Int], Seq[Seq[SparkPlan]]) =
-    ActionPlans.of(spark, "localCheckpoint", graft.queries.Graph.MaxHops) {
+    ActionPlans.of(spark, "localCheckpoint") {
       SparkEntry.queries("g_reachability")(spark, fixtureDir).collect()
         .map(r => (r.getString(0), r.getLong(1)) -> r.getInt(2)).toMap
     }

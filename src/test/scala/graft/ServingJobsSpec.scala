@@ -1,10 +1,7 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.analytics.Analytics
-import graft.core.Tables
+import graft.core.{Tables, Trace}
 import graft.ml.Recommender
 
 /** Job counts of the serving requests. On a small model a request's
@@ -17,37 +14,8 @@ class ServingJobsSpec extends SparkSpec {
   private lazy val model = RecommenderSpec.model(spark)
   private val dir = "perfbench/data/sf0.01"
 
-  /** Jobs started by `f` on this thread. Each call runs under its own job
-    * group; a sentinel job in a second group follows it, and since the
-    * listener bus delivers events in order, seeing the sentinel start
-    * means every job of `f` has been counted. */
-  private def jobsOf(f: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val sentinel = s"$group-sentinel"
-    val jobs = new AtomicInteger()
-    val seen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`sentinel`) => seen.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "measured")
-      f
-      sc.setJobGroup(sentinel, "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      assert(seen.await(30, TimeUnit.SECONDS), "listener bus did not deliver the sentinel")
-      jobs.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
+  /** Jobs started by `f`. */
+  private def jobsOf(f: => Any): Int = Trace.of(spark)(f)._2.jobs.size
 
   test("the first request on a fresh model builds its index: two collects") {
     val fresh = RecommenderSpec.model(spark, seed = 3)

@@ -85,7 +85,10 @@ object Trace {
 
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       val t = tags(e.properties)
-      if (t(tag)) jobs.add(Job(e.jobId, e.properties.getProperty("callSite.short", "")))
+      // the job's result stage is its newest and is named by the call
+      // site ("count at X.scala:12"); `callSite.short` is set only under
+      // an explicit setCallSite. A job over no partitions has no stage.
+      if (t(tag)) jobs.add(Job(e.jobId, e.stageInfos.maxByOption(_.stageId).fold("")(_.name)))
       if (t(sentinel)) done.countDown()
     }
 

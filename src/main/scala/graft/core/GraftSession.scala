@@ -57,69 +57,21 @@ object GraftSession {
 
   def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
-  /** File-listing fingerprint of a table path — (name, mtime, length)
-    * of every top-level entry, order-independent, via the Hadoop FS of
-    * the path (works for local paths at gate scale and HDFS/S3A on a
-    * cluster). A metadata-only call (~ms) against the count job it
-    * guards (seconds to minutes). Unreadable/absent paths fingerprint
-    * as "absent" so a transient FS error can never alias a real
-    * listing. */
-  def pathFingerprint(spark: SparkSession, path: String): String = scala.util.Try {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val listed = fs.listStatus(p)
-      .map(f => s"${f.getPath.getName}:${f.getModificationTime}:${f.getLen}")
-      .sorted.mkString("|")
-    // full 128-bit digest, not String.hashCode: a 32-bit collision
-    // between two different listings of the same path (~2^-32 per
-    // rewrite) would let CountMemo serve a stale count to a broadcast
-    // gate — the exact staleness class the fingerprint exists to
-    // prevent. MD5 collisions across a path's own rewrites are not a
-    // realistic event (and this is not a security boundary).
-    java.util.Base64.getEncoder.encodeToString(
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(listed.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-  }.getOrElse("absent")
-
-  /** Memoized per-path probe (the row counts behind broadcast gates and
-    * partition/block sizing, the table schemas of `Tables`): one compute
-    * per JVM + path + file-listing FINGERPRINT. Each path keeps the value
-    * of the listing it was computed on, and a hit needs the path's
-    * current fingerprint to match — so a dir rewritten larger in the same
-    * JVM changes its listing, and the stale small count can never keep a
-    * broadcast path selected past its gate (the driver-OOM class the
-    * gates exist to prevent). A recompute replaces the path's entry.
-    * Only successful computes memoize, and never a computed `onError`.
-    * On a failure `apply` returns `onError` for THIS call — the caller
-    * picks the fail-closed value (Long.MaxValue for "too big to
-    * broadcast", -1 for "unknown, use floor sizing") — while `get`
-    * rethrows; either way the next call re-probes. The map holds one
-    * entry per path ever read, deleted snapshot dirs included. */
-  final class CountMemo[V](onError: V) {
-    private val cache = new java.util.concurrent.ConcurrentHashMap[String, (String, V)]()
-    def apply(spark: SparkSession, path: String)(compute: => V): V =
-      scala.util.Try(get(spark, path)(compute)).getOrElse(onError)
-    def get(spark: SparkSession, path: String)(compute: => V): V = {
-      val fingerprint = pathFingerprint(spark, path)
-      Option(cache.get(path)).collect { case (`fingerprint`, v) => v }.getOrElse {
-        val c = compute
-        if (c != onError) cache.put(path, (fingerprint, c))
-        c
-      }
-    }
-  }
-
-  /** Row count of the table file `<dir>/<table>.parquet`, one memo for
-    * every gate and sizing probe that reads it, so each file is counted
-    * once per JVM + file listing. A failed probe memoizes nothing and
-    * returns the caller's fail-closed `onError` for this call
-    * (Long.MaxValue for "too big to broadcast", -1 for "unknown, use
-    * floor sizing"). */
-  def rowCount(t: Tables, table: String, onError: Long): Long = {
-    val n = rowCounts(t.spark, s"${t.dir}/$table.parquet")(t.table(table).count())
+  /** A non-negative probe of the table file `<dir>/<table>.parquet` (its
+    * row count, a key bound), computed once per file listing for every
+    * gate and sizing decision that reads it. A failed probe returns the
+    * caller's fail-closed `onError` (Long.MaxValue for "too big to
+    * broadcast", -1 for "unknown, use floor sizing"). */
+  def tableProbe(t: Tables, table: String, probe: String, onError: Long)
+                (compute: => Long): Long = {
+    val path = s"${t.dir}/$table.parquet"
+    val n = probes(t.spark, (path, probe), path)(compute)
     if (n < 0) onError else n
   }
-  private val rowCounts = new CountMemo(onError = -1L)
+  private val probes = new ListingMemo[(String, String), Long](onError = Some(-1L))
+
+  def rowCount(t: Tables, table: String, onError: Long): Long =
+    tableProbe(t, table, "rows", onError)(t.table(table).count())
 
   /** Between two queries of a harness run: a GC, so the ContextCleaner
     * drops the finished query's checkpoint, shuffle and broadcast blocks

@@ -2,7 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
 import org.apache.spark.storage.StorageLevel
 
 /** The one owner of every persisted frame in the engine. A query or
@@ -54,6 +54,15 @@ object Persisted {
       case _: LocalRelation => true
       case r: LogicalRDD => r.rdd.isCheckpointed
       case _ => false
+    }
+
+  /** Unpersist the RDDs a library persisted behind the frames it
+    * returned (a fitted ALS model's factors): the frames' `ExternalRDD`
+    * leaves. A checkpoint leaf belongs to whoever checkpointed it. */
+  def releaseLeaves(frames: DataFrame*): Unit =
+    frames.flatMap(_.queryExecution.analyzed.collectLeaves()).foreach {
+      case r: ExternalRDD[_] if !r.rdd.sparkContext.isStopped => r.rdd.unpersist(blocking = false)
+      case _ =>
     }
 
   /** `df` as is when `materialized`; otherwise `df` eagerly checkpointed. */

@@ -64,8 +64,8 @@ object Tables {
     * listing, so a stale schema is never served. A failed read memoizes
     * nothing and throws, every time. */
   def schemaOf(spark: SparkSession, path: String): StructType =
-    schemas.get(spark, path)(spark.read.parquet(path).schema)
-  private val schemas = new GraftSession.CountMemo[StructType](onError = null)
+    schemas.get(spark, path, path)(spark.read.parquet(path).schema)
+  private val schemas = new ListingMemo[String, StructType]()
 
   /** `spark.read.parquet(path)` with the memoized schema. */
   def read(spark: SparkSession, path: String): DataFrame =

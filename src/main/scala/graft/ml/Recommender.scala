@@ -4,9 +4,8 @@ import org.apache.spark.ml.recommendation.{ALS, ALSModel}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructType}
-import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
-import graft.core.Tables
+import graft.core.{ListingMemo, Persisted, Tables}
 
 /** Collaborative-filtering recommender (SURVEY.md §2.8 M1–M10).
   *
@@ -41,36 +40,36 @@ object Recommender {
       .na.drop()
       .distinct()
 
-  // one trained model per sf dir per JVM — the reco_* queries share it.
-  private val cache = TrieMap[String, ALSModel]()
+  // one model per (dir, role) and listing of the interactions' inputs
+  // (lineitem is `blocksFor`'s probe too): "train" for the reco_*
+  // queries, "eval" for `evaluate`'s holdout; None when its pairs are
+  // empty. A replaced or dropped model's factor RDDs are unpersisted.
+  private[graft] val models = new ListingMemo[(String, String), Option[ALSModel]](
+    release = _.foreach(m => Persisted.releaseLeaves(m.userFactors, m.itemFactors)))
+  private def fitted(spark: SparkSession, dir: String, role: String, pairs: => DataFrame) =
+    models.get(spark, (dir, role), s"$dir/orders.parquet", s"$dir/lineitem.parquet") {
+      val p = pairs
+      if (p.isEmpty) None else Some(als(blocksFor(spark, dir)).fit(p.withColumn("rating", lit(1.0f))))
+    }
 
   // ALS rejects an empty ratings frame outright, and an empty slice is
   // a routine production input (a tenant with no orders yet, a fully
-  // filtered backfill window) — the model-backed operators answer it
-  // with an empty result instead of a solver crash. Only the TRUE
-  // (non-empty) verdict is memoized — mirroring the model cache, which
-  // only ever caches a successful fit: a dir probed while empty must
-  // not keep answering "empty" after data lands in it.
-  private val nonEmptyCache = TrieMap[String, Boolean]()
-  def hasInteractions(spark: SparkSession, dir: String): Boolean =
-    nonEmptyCache.get(dir).getOrElse {
-      val nonEmpty = !interactions(Tables(spark, dir)).isEmpty
-      if (nonEmpty) nonEmptyCache.put(dir, true)
-      nonEmpty
-    }
+  // filtered backfill window) — the model-backed operators ask
+  // `hasInteractions` and answer it with an empty result instead of a
+  // solver crash.
+  private def trained(spark: SparkSession, dir: String) =
+    fitted(spark, dir, "train", interactions(Tables(spark, dir)))
+  def hasInteractions(spark: SparkSession, dir: String): Boolean = trained(spark, dir).isDefined
+
+  /** M2: ALS implicit-MF, seeded (mf_knn_recommender.py:23 defaults →
+    * rank/reg; ALS maxIter replaces SGD epochs). */
+  def train(spark: SparkSession, dir: String): ALSModel =
+    trained(spark, dir).getOrElse(throw new IllegalArgumentException(s"no interactions in $dir"))
 
   /** Empty frame with the given DDL schema — the shape of a
     * model-backed result when there is no data to train on. */
   def emptyOf(spark: SparkSession, ddl: String): DataFrame =
     spark.createDataFrame(java.util.Collections.emptyList[Row](), StructType.fromDDL(ddl))
-
-  /** M2: ALS implicit-MF, seeded (mf_knn_recommender.py:23 defaults →
-    * rank/reg; ALS maxIter replaces SGD epochs). */
-  def train(spark: SparkSession, dir: String): ALSModel =
-    cache.getOrElseUpdate(dir, {
-      val inter = interactions(Tables(spark, dir)).withColumn("rating", lit(1.0f))
-      als(blocksFor(spark, dir)).fit(inter)
-    })
 
   /** ALS factor-block count sized to the RATING volume, proxied by the
     * memoized parquet-metadata lineitem count (ratings ≈ distinct
@@ -281,15 +280,7 @@ object Recommender {
     * fixed k; recall by |actual|; users with empty recs or actual are
     * skipped; F1 computed from the *averaged* P and R. Split is a
     * deterministic 80/20 hash holdout. */
-  // the 80%-holdout model is deterministic per dir (seeded ALS on a
-  // hash split) — cache it like the full model so repeated evaluation
-  // calls don't re-train.
-  private val evalCache = TrieMap[String, ALSModel]()
-
   def evaluate(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    if (!hasInteractions(spark, dir))
-      return emptyOf(spark,
-        "precision double, recall double, f1_score double, num_evaluated_users bigint")
     // engine-independent 80/20 holdout: fold = first md5 hex digit of
     // "user:item" mod 5 (NOT Spark's murmur hash — md5 is computable
     // bit-for-bit by any engine, so the holdout population and hence
@@ -303,14 +294,14 @@ object Recommender {
     val fold = col("_fold")
     val train = inter.filter(fold =!= 0).select("user", "item")
     val test = inter.filter(fold === 0).select("user", "item")
-    // a tiny-but-nonempty interaction set can still leave the 80%
-    // training fold empty (every row hashed into fold 0) — no model
-    // is fittable, so no users are evaluable
-    if (!evalCache.contains(dir) && train.isEmpty)
-      return emptyOf(spark,
+    // the 80%-holdout model is memoized like the full model. An empty
+    // training fold (no interactions, or every row hashed into fold 0)
+    // fits no model, so no users are evaluable
+    val model = fitted(spark, dir, "eval", train) match {
+      case Some(m) => m
+      case None => return emptyOf(spark,
         "precision double, recall double, f1_score double, num_evaluated_users bigint")
-    val model = evalCache.getOrElseUpdate(dir,
-      als(blocksFor(spark, dir)).fit(train.withColumn("rating", lit(1.0f))))
+    }
     // common users, deterministically capped at 1000 (reference samples)
     val evalUsers = test.select("user").distinct()
       .join(train.select("user").distinct(), "user", "left_semi")

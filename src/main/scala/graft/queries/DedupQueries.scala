@@ -21,20 +21,15 @@ object DedupQueries {
     * move characters across the Latin-1 boundary (a locale-sensitive
     * JVM lowers ASCII 'I' to U+0131 inside non-ASCII strings) — the
     * gate must certify exactly the domain that gets packed. One
-    * early-exit scan per JVM + dir + file-listing fingerprint; shared
-    * CountMemo sentinel convention (see Similarity/Graph): the result
-    * here is a FOUND-WIDE-CHARS count (0 = packable, 1 = wide — both
-    * legitimate, both memoized), and Long.MaxValue marks a FAILED
-    * probe, which fails CLOSED onto the always-correct string path
-    * and re-probes next call. */
-  private val wideCharDocs =
-    new graft.core.GraftSession.CountMemo(onError = Long.MaxValue)
-  private def packableCorpus(s: SparkSession, dir: String): Boolean =
-    wideCharDocs(s, s"$dir/documents.parquet")(
-      Tables(s, dir).documents
-        .filter(graft.functions.TextFunctions.normText(col("text"))
-          .rlike("[^\\x01-\\xff]"))
-        .limit(1).count()) == 0L
+    * early-exit scan per file listing, memoized as a found-wide-chars
+    * count (0 = packable, 1 = wide); a failed probe (Long.MaxValue)
+    * fails closed onto the always-correct string path. */
+  private def packableCorpus(s: SparkSession, dir: String): Boolean = {
+    val t = Tables(s, dir)
+    graft.core.GraftSession.tableProbe(t, "documents", "wide_chars", Long.MaxValue)(
+      t.documents.filter(graft.functions.TextFunctions.normText(col("text"))
+        .rlike("[^\\x01-\\xff]")).limit(1).count()) == 0L
+  }
 
   val queries: Map[String, Q] = Map(
     "dd_exact" -> ((s, dir) => Dedup.exact(Tables(s, dir).documents)),

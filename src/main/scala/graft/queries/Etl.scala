@@ -78,11 +78,12 @@ object Etl {
       // makes. Old snapshots are reclaimed by vacuum against the
       // ledger (s19's discipline), never by the writer.
       val staged = s"$root/staged-${java.util.UUID.randomUUID}"
-      Tables(s, dir).orders
+      val monthly = Tables(s, dir).orders
         .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
         .agg(count(lit(1)).as("n_orders"))
-        .write.mode("overwrite").parquet(staged)
-      val st = s.read.parquet(staged)
+      monthly.write.mode("overwrite").parquet(staged)
+      // read-backs take the schema of the frame written: no inference job
+      val st = s.read.schema(monthly.schema).parquet(staged)
       // all three audits in ONE pass over the staged files: per-key
       // counts, then a single fold over that (bounded) frame
       val audit = st.groupBy(col("month")).agg(count(lit(1)).as("c"))
@@ -113,7 +114,7 @@ object Etl {
       val facts =
         if (head > 0) {
           val published = graft.etl.ManifestLedger.read(ledger, head, conf)
-          s.read.parquet(published: _*)
+          s.read.schema(monthly.schema).parquet(published: _*)
             .agg(count(lit(1)).as("n_months"),
               coalesce(sum(col("n_orders")), lit(0L)).as("total_orders"))
         } else {

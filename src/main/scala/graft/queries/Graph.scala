@@ -42,22 +42,18 @@ object Graph {
   private val TopPairs = 100 // link-prediction candidates served
   private[graft] val MaxHops = 3 // BFS depth for reachability
 
-  /** Memoized dim-key UPPER bounds for g_label_propagation's packed
-    * argmax gate: the memo holds max(key) when every key is
-    * non-negative, Long.MaxValue when any key is negative or the probe
-    * fails — packing is then unsafe and the gate falls back to the
-    * struct argmax. One tiny dim-table agg per JVM + file listing. */
-  private val custKeyBound =
-    new GraftSession.CountMemo(onError = Long.MaxValue)
-  private val suppKeyBound =
-    new GraftSession.CountMemo(onError = Long.MaxValue)
-  private def keyBound(df: DataFrame, key: String): Long = {
-    val r = df.agg(min(col(key)).cast("long"), max(col(key)).cast("long"))
-      .first()
-    if (r.isNullAt(0)) 0L // empty table — contributes no nodes
-    else if (r.getLong(0) < 0) Long.MaxValue // negative keys: never pack
-    else r.getLong(1)
-  }
+  /** Memoized dim-key UPPER bound of `table`'s `key`, for
+    * g_label_propagation's packed argmax gate: max(key), or Long.MaxValue
+    * when a key is negative or the probe fails — the gate then falls
+    * back to the struct argmax. */
+  private def keyBound(t: Tables, table: String, key: String): Long =
+    GraftSession.tableProbe(t, table, s"max_$key", Long.MaxValue) {
+      val r = t.table(table).agg(min(col(key)).cast("long"), max(col(key)).cast("long"))
+        .first()
+      if (r.isNullAt(0)) 0L // empty table — contributes no nodes
+      else if (r.getLong(0) < 0) Long.MaxValue // negative keys: never pack
+      else r.getLong(1)
+    }
 
   /** Every node is a customer or a supplier, so |customer| + |supplier|
     * bounds the node count from two memoized row counts, with no action
@@ -222,11 +218,8 @@ object Graph {
       // the gate (keys ≥ 2³¹, unknown bounds, negative keys) the struct
       // form stays.
       val packedArgmax = {
-        val custKB = custKeyBound(s, s"$dir/customer.parquet")(
-          keyBound(t.customer, "c_custkey"))
-        val suppKB = suppKeyBound(s, s"$dir/supplier.parquet")(
-          keyBound(t.supplier, "s_suppkey"))
-        val maxKey = math.max(custKB, suppKB)
+        val maxKey = math.max(keyBound(t, "customer", "c_custkey"),
+          keyBound(t, "supplier", "s_suppkey"))
         maxKey < (1L << 31) && nBound < (1L << 30)
       }
       // The key is unique per (node, label) group, so max_by's

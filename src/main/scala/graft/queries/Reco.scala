@@ -284,10 +284,9 @@ object Reco {
       // memory-based neighbor model that serves "customers also
       // bought" without any trained factors. Implementation and scale
       // design (the packed-pair kernel): graft.ml.ItemItem. The
-      // lineitem and customer counts (GraftSession.rowCount: one count
-      // job per JVM + file listing, shared with the other probes of
-      // those files; Long.MaxValue on a read error) feed the kernel's
-      // pair-volume estimate, which sizes its exchanges.
+      // memoized lineitem and customer counts (Long.MaxValue on a read
+      // error) feed the kernel's pair-volume estimate, which sizes its
+      // exchanges.
       val t = Tables(s, dir)
       graft.ml.ItemItem.neighbors(t, K,
         GraftSession.rowCount(t, "lineitem", Long.MaxValue),

@@ -78,7 +78,7 @@ object Similarity {
   // exists, a shuffle-replicated nested loop (partitioned cartesian —
   // nothing routes through the driver) for the brute/assignment scans
   // whose all-pairs shape is the declared semantics. Mirrors
-  // Recommender.MaxQueryUsers and the fail-closed GraftSession.CountMemo
+  // Recommender.MaxQueryUsers and the fail-closed GraftSession.tableProbe
   // probes; both paths of every gated entry are pinned by AnnGateSpec.
 
   /** Bytes of one broadcast vector row, sized as Catalyst sizes a row
@@ -102,11 +102,8 @@ object Similarity {
   private def satMul(a: Long, b: Long): Long =
     if (b > 0 && a > Long.MaxValue / b) Long.MaxValue else a * b
 
-  /** Memoized corpus row count — the gate probe (GraftSession.rowCount,
-    * regeneration-safe via its file-listing key). Fails CLOSED: a
-    * transient read error returns Long.MaxValue for THIS call — the
-    * size-safe non-broadcast path, never a driver-OOM broadcast — and
-    * the next call re-probes. */
+  /** Memoized corpus row count, the gate probe. A failed probe is
+    * Long.MaxValue: the size-safe non-broadcast path. */
   private def embCountFor(s: SparkSession, dir: String): Long =
     graft.core.GraftSession.rowCount(Tables(s, dir), "embeddings", Long.MaxValue)
 

@@ -44,12 +44,6 @@ object DocumentStream {
     * with the batch pipeline's global-min-keeper semantics, which the
     * DuckDB oracle pins. Within a micro-batch, group rows are ordered
     * by doc_id so output is deterministic under any arrival order. */
-  /** Memoized document count (the state-partition sizing gate below;
-    * GraftSession.rowCount — a regenerated dir re-probes, and a failed
-    * probe (-1) sizes conservative THIS call and re-probes next time). */
-  private def docCountFor(spark: SparkSession, dir: String): Long =
-    GraftSession.rowCount(Tables(spark, dir), "documents", -1L)
-
   def corpusIngest(spark: SparkSession, dir: String): DataFrame = {
     // state-partition count sized to the KEYED-STATE cardinality (one
     // content hash per doc), measured at sf0.1/sf1/sf10: each RocksDB
@@ -63,7 +57,7 @@ object DocumentStream {
     // failed probe (-1) sizes to the floor — small-state overhead is
     // bounded; undersized instances at huge state are the real risk,
     // but refusing to stream over a probe hiccup would be worse.
-    val docs = docCountFor(spark, dir)
+    val docs = GraftSession.rowCount(Tables(spark, dir), "documents", -1L)
     val parts =
       math.min(32L, math.max(EventStream.StateParts.toLong, docs / 16000L)).toInt
     EventStream.runToTable(spark, s"st_corpus_${dir.hashCode.abs}",

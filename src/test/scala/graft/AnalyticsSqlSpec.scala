@@ -10,7 +10,9 @@ import graft.core.Tables
   * subquery — exactly as a session with the ten views registered
   * directly does. The schemas behind those views are memoized by
   * `Tables` per file listing: a table rewritten in the same JVM is read
-  * at its new schema, and an absent table is an error on every read. */
+  * at its new schema, and an absent table is an error on every read.
+  * The child session with its views is memoized per listing too: warm
+  * calls on an unchanged dir reuse it and register nothing. */
 class AnalyticsSqlSpec extends SparkSpec {
   private val dir = "perfbench/data/sf0.01"
 
@@ -51,6 +53,20 @@ class AnalyticsSqlSpec extends SparkSpec {
   test("listTables still lists every table") {
     val names = Analytics.listTables(spark, dir).collect().map(_.getString(0)).toSeq
     assert(names == Tables(spark, dir).names.sorted)
+  }
+
+  test("warm runSql calls on an unchanged dir reuse the child session and its views") {
+    val tmp = copyOf(Tables.names)
+    def call() = Analytics.runSql(spark, tmp, "SELECT COUNT(*) FROM orders").sparkSession
+    def view(ss: org.apache.spark.sql.SparkSession) =
+      ss.sessionState.catalog.getRawTempView("orders").get.plan.get
+    val first = call()
+    val registered = view(first)
+    for (_ <- 1 to 2) {
+      val warm = call()
+      assert(warm eq first)
+      assert(view(warm) eq registered)
+    }
   }
 
   test("a table rewritten with a new column is seen by the next read and the next runSql") {

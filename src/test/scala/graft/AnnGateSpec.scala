@@ -118,23 +118,4 @@ class AnnGateSpec extends SparkSpec {
     val nBig = 1000000000L
     assert(nBig / ivfStep(nBig) <= 40000L)
   }
-
-  test("CountMemo: a failed probe returns onError and is never cached; " +
-      "a table created later is seen on the next call") {
-    // the shared gate memo (ANN embeddings gate, graph node bounds,
-    // item-item pair-volume probes): only successful counts memoize
-    val memo = new graft.core.GraftSession.CountMemo(onError = Long.MaxValue)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_memo").toString
-    val path = s"$tmp/t.parquet"
-    var computed = 0
-    // missing table: the probe fails → onError, nothing memoized
-    assert(memo(spark, path) { sys.error("missing") } == Long.MaxValue)
-    // existing path, failing compute → onError for this call only
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
-    assert(memo(spark, path) { sys.error("transient") } == Long.MaxValue)
-    // same (now-existing) path, good compute → memoized value
-    assert(memo(spark, path) { computed += 1; 7L } == 7L)
-    assert(memo(spark, path) { computed += 1; 99L } == 7L)
-    assert(computed == 1, "successful count must memoize")
-  }
 }

@@ -13,11 +13,12 @@ import scala.concurrent.duration._
   *  - cross-query concurrency on one data dir is safe and
   *    deterministic: every query returns exactly its sequential result
   *    while others are in flight. The shared surfaces this exercises:
-  *    the Recommender model/non-empty caches (TrieMap), the BPE
-  *    broadcast memo (ConcurrentHashMap, functions/Bpe.scala), the
-  *    Tables temp-view registration an_adhoc_sql re-runs per call
-  *    (same-name, same-definition replace — benign), and the
-  *    Multimodal codec seam.
+  *    the one listing-keyed memo (`graft.core.ListingMemo`: the
+  *    Recommender's models and non-empty verdicts, the table schemas
+  *    and row counts, the SQL surface's child sessions with their
+  *    views — concurrent first calls may both compute, and the loser's
+  *    value is released), the BPE broadcast memo (ConcurrentHashMap,
+  *    functions/Bpe.scala), and the Multimodal codec seam.
   *  - same-query concurrency is additionally safe for PURE queries
   *    (no scratch side effects). Side-effecting ops (etl_backfill,
   *    s17_time_travel, …) write an app+op+dir-scoped scratch root
@@ -34,9 +35,10 @@ import scala.concurrent.duration._
   * DataFrame-API queries take the dir as an argument and never shared
   * names; the SQL-entry queries (temp views are session-scoped by
   * Spark's design) run each dir in its own child session
-  * (Analytics.sessionFor — spark.newSession per (root, dir): fresh
-  * view namespace, shared SparkContext/block manager), so two dirs no
-  * longer fight over table names. Pinned by the two-dir test below.
+  * (Analytics.sessionFor — one spark.newSession per (root, dir) and
+  * listing, memoized in the ListingMemo: fresh view namespace, shared
+  * SparkContext/block manager), so two dirs no longer fight over table
+  * names. Pinned by the two-dir test below.
   */
 class ConcurrencySpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
@@ -49,11 +51,11 @@ class ConcurrencySpec extends SparkSpec {
     "t4_topk_per_group",   // custom TopKAggregate expression
     "a6_distinct_count",
     "dd_exact",
-    "an_adhoc_sql",        // temp-view registration + spark.sql
+    "an_adhoc_sql",        // memoized child session with its views + spark.sql
     "tx_bpe_encode",       // memoized broadcast cache (Bpe.bcCache)
     "sel_dsir",            // compiled selection model (bounded collect)
     "mm_features",         // Multimodal codec seam
-    "reco_topk_cosine",    // ALS model cache + nonEmptyCache (TrieMap)
+    "reco_topk_cosine",    // memoized ALS model + non-empty verdict (ListingMemo)
     "reco_eval",           // shares the cached model with the above
     "g_pagerank")          // iterative loop w/ per-round broadcasts
 

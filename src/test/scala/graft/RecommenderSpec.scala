@@ -1,11 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.functions._
 import graft.ml.Recommender
 
 /** Exactness spec for the driver-side top-k over a model's factor index:
   * against a trained model it must equal the brute-force full-scan
-  * ranking, bit for bit (same dot-product accumulation order). */
+  * ranking, bit for bit (same dot-product accumulation order). Also the
+  * life of a dir's memoized model: it follows a dir rewritten in place,
+  * is released with its dir, and an empty dir trains once data lands. */
 class RecommenderSpec extends SparkSpec {
   import spark.implicits._
 
@@ -128,6 +131,74 @@ class RecommenderSpec extends SparkSpec {
     val out = Recommender.cosineTopK(model, users, 3)
     val counts = out.groupBy("user").count().select("count").distinct().as[Long].collect()
     assert(counts.sameElements(Array(3L)))
+  }
+
+  private val small = "/root/testdata/sf0.001"
+  private val large = "perfbench/data/sf0.01"
+  private val inputs = Seq("orders", "lineitem")
+
+  /** A fresh dir holding copies of `src`'s interaction inputs. */
+  private def copyOf(src: String): String = {
+    val tmp = Files.createTempDirectory("graft_reco").toString
+    inputs.foreach(n => Files.copy(Paths.get(s"$src/$n.parquet"), Paths.get(s"$tmp/$n.parquet")))
+    tmp
+  }
+  private def land(src: String, dir: String): Unit = inputs.foreach { n =>
+    deleteRecursively(new java.io.File(s"$dir/$n.parquet"))
+    Files.copy(Paths.get(s"$src/$n.parquet"), Paths.get(s"$dir/$n.parquet"),
+      StandardCopyOption.REPLACE_EXISTING)
+  }
+  private def deleteRecursively(f: java.io.File): Unit = {
+    Option(f.listFiles()).toSeq.flatten.foreach(deleteRecursively)
+    f.delete()
+  }
+  private def evaluatedUsers(dir: String): Long =
+    Recommender.evaluate(spark, dir).select("num_evaluated_users").as[Long].collect().head
+
+  test("a dir rewritten in place trains the model a fresh dir gets, and evaluate follows it") {
+    val dir = copyOf(small)
+    val fresh = copyOf(large)
+    try {
+      val before = Recommender.train(spark, dir)
+      val usersBefore = before.userFactors.count()
+      val evalBefore = evaluatedUsers(dir)
+      land(large, dir)
+      val after = Recommender.train(spark, dir)
+      val usersFresh = Recommender.train(spark, fresh).userFactors.count()
+      assert(usersFresh != usersBefore)
+      assert(after.userFactors.count() == usersFresh)
+      assert(evaluatedUsers(fresh) != evalBefore)
+      assert(evaluatedUsers(dir) == evaluatedUsers(fresh))
+    } finally Seq(dir, fresh).foreach(d => deleteRecursively(new java.io.File(d)))
+  }
+
+  test("a deleted dir's model is released: factor RDDs and memo entries stay per live dir") {
+    val sc = spark.sparkContext
+    val base = sc.getPersistentRDDs.size
+    val dirs = (0 until 4).map(_ => copyOf(small))
+    dirs.zipWithIndex.foreach { case (dir, i) =>
+      if (i > 0) deleteRecursively(new java.io.File(dirs(i - 1)))
+      Recommender.train(spark, dir)
+      assert(sc.getPersistentRDDs.size - base <= 2, s"after dir $i: ${sc.getPersistentRDDs.size - base}")
+      val keys = Recommender.models.keys
+      assert(keys.count(k => dirs.contains(k._1)) <= 1, s"after dir $i: $keys")
+      assert(keys.forall(k => new java.io.File(k._1).exists), s"after dir $i: $keys")
+    }
+    deleteRecursively(new java.io.File(dirs.last))
+  }
+
+  test("an empty dir answers reco_* with an empty result, and trains once data lands") {
+    val dir = copyOf(small)
+    try {
+      deleteRecursively(new java.io.File(s"$dir/orders.parquet"))
+      spark.read.parquet(s"$small/orders.parquet").limit(0)
+        .write.parquet(s"$dir/orders.parquet")
+      val topk = SparkEntry.queries("reco_topk_cosine")
+      assert(topk(spark, dir).collect().isEmpty)
+      assert(topk(spark, dir).collect().isEmpty)
+      land(small, dir)
+      assert(topk(spark, dir).collect().nonEmpty)
+    } finally deleteRecursively(new java.io.File(dir))
   }
 }
 
